@@ -1,6 +1,7 @@
 """spark-submit entry point for the extraction pipeline.
 
-    spark-submit --master local[32] --py-files t2p_spark.zip \
+    python tools/package.py    # builds dist/t2p_spark.zip
+    spark-submit --master local[32] --py-files dist/t2p_spark.zip \
         jobs/extract.py --input /data/docs --output /data/extracted \
         --metrics /data/metrics --run-id run1 [--resume] [--parallelism N]
 

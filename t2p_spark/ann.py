@@ -28,6 +28,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from t2p_spark.materialize import materialize
+
 DIM = 64
 # N_PLANES sizes the LSH bucket space: 2^N_PLANES buckets. 8 (=256 buckets)
 # matches the oracle-scale corpus (~2k vectors -> ~8 vecs/bucket). Scale
@@ -682,9 +684,6 @@ def ann_sql(engine: str, n_planes: Optional[int] = None,
     return q
 
 
-_IVF_CACHE: dict = {}
-
-
 def run_ivf_spark(spark: SparkSession, k: int = None, probe: int = None,
                   iters: int = None) -> DataFrame:
     """Spark execution of ann_topk_ivf, staged like a real k-means job.
@@ -692,7 +691,8 @@ def run_ivf_spark(spark: SparkSession, k: int = None, probe: int = None,
     The one-shot SQL form (ivf_sql, kept verbatim for the DuckDB twin)
     re-expands every iteration's CTEs — the physical plan re-scans the
     corpus 18x. Here each stage materializes what a cluster job would:
-    the quantized vectors are cached ONCE, each Lloyd iteration's K=16
+    the quantized vectors (``ivf_vecs``) are cached once per input epoch
+    and shared by every call in it, each Lloyd iteration's K=16
     centroids are collected to the driver (driver-small by definition)
     and inlined into the next pass's SQL text, and every assignment is a
     MAP-ONLY argmin projection over that centroid constant — the corpus
@@ -704,20 +704,11 @@ def run_ivf_spark(spark: SparkSession, k: int = None, probe: int = None,
     arithmetic to ivf_sql: integer distances, FLOOR-mean updates,
     min-cid ties.
     """
-    from t2p_spark.session import session_key
-
     ivf_k = IVF_K if k is None else k
     ivf_iters = IVF_ITERS if iters is None else iters
-    key = session_key(spark)
-    old = _IVF_CACHE.pop(key, None)
-    if old is not None:
-        old.unpersist()
-    vecs = spark.sql(
+    materialize(spark, "ivf_vecs", lambda: spark.sql(
         f"SELECT vec_id, embedding, {_ivf_qe('embedding', 's')} AS qe, "
-        f"{_norm('embedding', 's')} AS norm FROM embeddings"
-    ).cache()
-    vecs.createOrReplaceTempView("ivf_vecs")
-    _IVF_CACHE[key] = vecs
+        f"{_norm('embedding', 's')} AS norm FROM embeddings"))
 
     # deterministic init: first K corpus (non-query) vectors
     cents = [
@@ -767,40 +758,23 @@ def run_ivf_spark(spark: SparkSession, k: int = None, probe: int = None,
     """)
 
 
-_VECS_CACHE: dict = {}
-
-
 def ensure_ann_vecs(spark: SparkSession, n_planes: Optional[int] = None
                     ) -> None:
     """Materialize the bucketed/normed vector relations (vecs_mat for the
     single-table queries, vecs2_mat for multi-table LSH) once per
     registered embeddings table — the persisted index table of a vector
-    pipeline. Keyed on (session, view generation, n_planes); register_views
-    bumps the generation whenever the embeddings view changes, so a
-    swapped sf_dir rebuilds. (Tests that swap the embeddings view directly
-    keep using the inline ann_sql form and never read these views.)"""
-    from t2p_spark.relational import VIEW_GENERATION
-    from t2p_spark.session import session_key
-
+    pipeline. Keyed on the input epoch plus n_planes; register_views
+    starts a new epoch whenever the embeddings view changes, so a swapped
+    sf_dir rebuilds. (Tests that swap the embeddings view directly keep
+    using the inline ann_sql form and never read these views.)"""
     planes = PLANES if n_planes is None else make_planes(n_planes)
     planes2 = make_planes(len(planes), seed=20240717)
-    skey = session_key(spark)
-    key = (skey, VIEW_GENERATION.get(skey, 0),
-           n_planes if n_planes is not None else len(PLANES))
-    if key in _VECS_CACHE:
-        for df, view in _VECS_CACHE[key]:
-            df.createOrReplaceTempView(view)
-        return
-    for stale in [k for k in _VECS_CACHE if k[0] == skey]:
-        for df, _view in _VECS_CACHE.pop(stale):
-            df.unpersist()
-    mats = []
-    for view, sql in (("vecs_mat", _with_buckets("s", planes)),
-                      ("vecs2_mat", _with_buckets2("s", planes, planes2))):
-        df = spark.sql(sql).cache()
-        df.createOrReplaceTempView(view)
-        mats.append((df, view))
-    _VECS_CACHE[key] = mats
+    materialize(spark, "vecs_mat",
+                lambda: spark.sql(_with_buckets("s", planes)),
+                key=(n_planes,))
+    materialize(spark, "vecs2_mat",
+                lambda: spark.sql(_with_buckets2("s", planes, planes2)),
+                key=(n_planes,))
 
 
 def run_ann(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

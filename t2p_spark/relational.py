@@ -400,13 +400,6 @@ def _est_scan_partitions(spark: SparkSession, path: str) -> int:
     return max(1, (total + split - 1) // split)
 
 
-_REGISTERED: dict = {}
-# Bumped each time a session's views are (re)registered; downstream
-# materialized caches (textkit.documents_tok, ann's vector cache) key on
-# (session, generation) so swapping sf_dir can never serve a stale cache.
-VIEW_GENERATION: dict = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the star-schema tables as temp views (idempotent per session).
 
@@ -420,15 +413,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     query through here, and re-reading + repartitioning ten tables per query
     measures setup, not the query.
     """
-    from t2p_spark.session import session_key
+    from t2p_spark.materialize import new_inputs, reset
 
-    skey = session_key(spark)
     # Idempotency keys on the LAST-registered sf_dir for the session, not
     # on (session, sf_dir): temp views are named, so an A -> B -> A swap
     # leaves the views pointing at B while a (session, A) cache hit would
     # skip re-registration — silently computing over the wrong dataset
-    # (r3 ADVICE). Any sf_dir change re-registers and bumps the generation.
-    if _REGISTERED.get(skey) == sf_dir:
+    # (r3 ADVICE). Any sf_dir change re-registers and starts a new input
+    # epoch, so every materialized relation over the old tables is stale.
+    if not new_inputs(spark, sf_dir):
         return
     par = spark.sparkContext.defaultParallelism
     is_local = spark.sparkContext.master.startswith("local")
@@ -448,11 +441,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
             df = df.repartition(par)
         return t, df
 
-    with ThreadPoolExecutor(max_workers=min(8, len(TABLES))) as pool:
-        for t, df in pool.map(_load, TABLES):
-            df.createOrReplaceTempView(t)
-    _REGISTERED[skey] = sf_dir
-    VIEW_GENERATION[skey] = VIEW_GENERATION.get(skey, 0) + 1
+    try:
+        with ThreadPoolExecutor(max_workers=min(8, len(TABLES))) as pool:
+            for t, df in pool.map(_load, TABLES):
+                df.createOrReplaceTempView(t)
+    except BaseException:
+        reset(spark)  # a half-registered sf_dir must not count as current
+        raise
 
 
 def run_relational(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Session-scoped cache keying.
 
-Module-level caches (registered views, materialized token projections, IVF
-vector caches) must be keyed per SparkSession *lifetime*. ``id(spark)`` is
+Module-level caches (the registry in ``t2p_spark.materialize``, streaming
+replay staging) must be keyed per SparkSession *lifetime*. ``id(spark)`` is
 not that: CPython reuses addresses after GC, so a new session can collide
 with a dead session's key and silently inherit its cache entries (stale
 views, skipped registration). The stable key is the context's

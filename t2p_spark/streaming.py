@@ -15,7 +15,10 @@ needs, built on the same kernels so batch/stream semantics are identical:
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -193,8 +196,6 @@ def _stage_chronological_chunks(spark: SparkSession, sf_dir: str,
     data arriving >2h late. Returns (dir, schema); memoized per
     (session, sf_dir) — the staged replay of an immutable table is itself
     immutable, and both streamed driver queries share it."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from t2p_spark.session import session_key
@@ -274,6 +275,18 @@ def _next_qname(prefix: str) -> str:
     return f"{prefix}_{_STREAM_SEQ[0]}"
 
 
+@contextlib.contextmanager
+def _checkpoint():
+    """A fresh checkpoint dir for one drain, removed when the block exits:
+    the memory sink then holds the output and the drains here are never
+    resumed."""
+    ck = tempfile.mkdtemp(prefix="t2p_ck_")
+    try:
+        yield ck
+    finally:
+        shutil.rmtree(ck, ignore_errors=True)
+
+
 def _drain(q, audit_name: str) -> None:
     """awaitTermination + record the last microbatch's executed plan
     under ``audit_name`` (best-effort: plan capture must never fail a
@@ -305,13 +318,10 @@ def sessionize_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     only grow, so MAX per user is the drained state. Oracle: the batch
     events_sessionize window SQL (RELATIONAL_SQL) — hash equality means
     the stateful streaming operator reproduces the batch semantics."""
-    import tempfile
-
     path, schema = _stage_chronological_chunks(spark, sf_dir)
     qname = _next_qname("sess_streamed")
-    with _stream_shuffle_partitions(spark):
-        q = run_sessionize_stream(spark, path, schema,
-                                  tempfile.mkdtemp(prefix="t2p_ck_"), qname)
+    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
+        q = run_sessionize_stream(spark, path, schema, ck, qname)
         _drain(q, "events_sessionize_streamed")
     return spark.sql(f"""
         SELECT user_id,
@@ -327,13 +337,10 @@ def tumbling_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     table IS the final aggregate). Oracle: the batch events_tumbling_hour
     SQL. Chronological replay matters: the 2h watermark would drop
     genuinely-late rows if chunks arrived out of order."""
-    import tempfile
-
     path, schema = _stage_chronological_chunks(spark, sf_dir)
     qname = _next_qname("tumbling_streamed")
-    with _stream_shuffle_partitions(spark):
-        q = run_events_stream(spark, path, schema,
-                              tempfile.mkdtemp(prefix="t2p_ck_"), qname)
+    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
+        q = run_events_stream(spark, path, schema, ck, qname)
         _drain(q, "events_tumbling_streamed")
     return spark.sql(
         f"SELECT event_type, hour_bucket, n_events, total_value "
@@ -357,8 +364,6 @@ def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention window; production feeds bound it with
     ``dropDuplicatesWithinWatermark``."""
     import glob
-    import shutil
-    import tempfile
 
     path, schema = _stage_chronological_chunks(spark, sf_dir)
     dup_dir = tempfile.mkdtemp(prefix="t2p_events_dup_")
@@ -370,7 +375,7 @@ def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
      .coalesce(1).write.mode("append").parquet(dup_dir))
 
     qname = _next_qname("dedup_streamed")
-    with _stream_shuffle_partitions(spark):
+    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)
@@ -380,8 +385,7 @@ def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.dropDuplicates(["event_id"])
             .writeStream.outputMode("append")
             .format("memory").queryName(qname)
-            .option("checkpointLocation",
-                    tempfile.mkdtemp(prefix="t2p_ck_"))
+            .option("checkpointLocation", ck)
             .trigger(availableNow=True)
             .start()
         )
@@ -435,8 +439,6 @@ def _stage_document_chunks(spark: SparkSession, sf_dir: str,
     parquet files written in doc_id order — the landing-zone replay for
     the stream-static near-dup screen. Memoized per (session, sf_dir),
     like the events staging."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from t2p_spark.session import session_key
@@ -493,16 +495,12 @@ def neardup_screen_streamed_result(spark: SparkSession,
     Oracle: the batch DuckDB twin joining new-slice signatures against
     corpus-slice signatures on any shared band (neardup_screen_oracle_sql).
     """
-    import tempfile
-
     from t2p_spark.relational import register_views
     from t2p_spark.textkit import (
-        N_MINHASH, ensure_documents_tok, ensure_minhash_sigs,
-        minhash_sig_inline,
+        N_MINHASH, ensure_minhash_sigs, minhash_sig_inline,
     )
 
     register_views(spark, sf_dir)
-    ensure_documents_tok(spark)
     path, schema = _stage_document_chunks(spark, sf_dir)
     band_static = _band_key_array("sig_{}", N_MINHASH)
     # the corpus signature table is the shared sigs_mat materialization
@@ -517,7 +515,7 @@ def neardup_screen_streamed_result(spark: SparkSession,
     band_stream = _band_key_array("sigs[{}]", N_MINHASH)
     qname = _next_qname("neardup_streamed")
     try:
-        with _stream_shuffle_partitions(spark):
+        with _stream_shuffle_partitions(spark), _checkpoint() as ck:
             stream = (spark.readStream.schema(schema)
                       .option("maxFilesPerTrigger", 2).parquet(path))
             s_bands = (
@@ -531,8 +529,7 @@ def neardup_screen_streamed_result(spark: SparkSession,
                      .dropDuplicates(["new_doc_id", "corpus_doc_id"]))
             q = (pairs.writeStream.outputMode("append")
                  .format("memory").queryName(qname)
-                 .option("checkpointLocation",
-                         tempfile.mkdtemp(prefix="t2p_ck_"))
+                 .option("checkpointLocation", ck)
                  .trigger(availableNow=True)
                  .start())
             _drain(q, "stream_neardup_screen")
@@ -574,8 +571,6 @@ def pii_screen_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator incrementalized, so the oracle (the DuckDB pii twin over
     the same incoming slice) pins stream == batch semantics exactly.
     """
-    import tempfile
-
     from t2p_spark.relational import register_views
     from t2p_spark.textkit import spark_sql_queries
 
@@ -583,7 +578,7 @@ def pii_screen_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, schema = _stage_document_chunks(spark, sf_dir)
     qname = _next_qname("pii_streamed")
     vname = f"{qname}_in"
-    with _stream_shuffle_partitions(spark):
+    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 2).parquet(path))
         stream.createOrReplaceTempView(vname)
@@ -597,7 +592,7 @@ def pii_screen_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.sql(pii_sql)
         q = (out.writeStream.outputMode("append")
              .format("memory").queryName(qname)
-             .option("checkpointLocation", tempfile.mkdtemp(prefix="t2p_ck_"))
+             .option("checkpointLocation", ck)
              .trigger(availableNow=True)
              .start())
         _drain(q, "stream_pii_screen")
@@ -633,8 +628,6 @@ def quality_gate_streamed_result(spark: SparkSession,
     zero Python. The per-doc rules depend only on the document itself,
     so stream == batch verdicts exactly — pinned by the oracle.
     """
-    import tempfile
-
     from t2p_spark.relational import register_views
     from t2p_spark.textkit import _hash60, _tokens, _xform, spark_sql_queries
 
@@ -647,7 +640,7 @@ def quality_gate_streamed_result(spark: SparkSession,
         f"{_tokens('text', 's')} AS toks, "
         f"{_xform(_tokens('text', 's'), 't -> ' + _hash60('t', 's'), 's')}"
         f" AS thashes FROM {vname})")
-    with _stream_shuffle_partitions(spark):
+    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 2).parquet(path))
         stream.createOrReplaceTempView(vname)
@@ -656,7 +649,7 @@ def quality_gate_streamed_result(spark: SparkSession,
         out = spark.sql(gate_sql)
         q = (out.writeStream.outputMode("append")
              .format("memory").queryName(qname)
-             .option("checkpointLocation", tempfile.mkdtemp(prefix="t2p_ck_"))
+             .option("checkpointLocation", ck)
              .trigger(availableNow=True)
              .start())
         _drain(q, "stream_quality_gate")

@@ -28,6 +28,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from t2p_spark.materialize import materialize, new_inputs
+
 
 # --- twin expression builders (s=Spark SQL, d=DuckDB SQL) -------------------
 
@@ -1729,51 +1731,6 @@ def duckdb_oracle_queries(**presets) -> dict:
     return _build("d", **presets)
 
 
-_TOK_CACHE: dict = {}
-# Bumped whenever documents_tok is actually (re)built for a session. Every
-# derived materialized relation (sigs_mat, pairs_mat, simhash_mat, tok_mat,
-# cc_mat, the curation stages) keys on it, so a swapped ``documents`` view
-# (register_views generation bump, or a test's force rebuild) can never
-# serve a stale derived cache.
-_TOK_EPOCH: dict = {}
-
-
-def _tok_epoch(spark: SparkSession) -> int:
-    from t2p_spark.session import session_key
-
-    return _TOK_EPOCH.get(session_key(spark), 0)
-
-
-def _ensure_cached_view(spark: SparkSession, view: str, build,
-                        extra_key: tuple = ()) -> DataFrame:
-    """Build + cache + register a derived relation ONCE per documents_tok
-    build (r7 optimization round). The cached DataFrame is the local
-    stand-in for the materialized stage table a cluster-scale run persists
-    (the documents_tok / cur_stages pattern): the signature table, the LSH
-    candidate-pair table and the simhash/shingle projections are all
-    written once and read by every consumer in production, so re-deriving
-    them inside every query measured setup, not the operator. Keyed by
-    (view, session, tok-epoch, extra); the build cost lands inside the
-    first timed query that needs the relation."""
-    from t2p_spark.session import session_key
-
-    skey = session_key(spark)
-    key = ("view", view, skey, _TOK_EPOCH.get(skey, 0), tuple(extra_key))
-    hit = _TOK_CACHE.get(key)
-    if hit is not None:
-        # re-point the name: a test may have replaced the temp view
-        hit.createOrReplaceTempView(view)
-        return hit
-    for stale in [k for k in _TOK_CACHE
-                  if isinstance(k, tuple) and k[:2] == ("view", view)
-                  and k[2] == skey]:
-        _TOK_CACHE.pop(stale).unpersist()
-    df = build().cache()
-    df.createOrReplaceTempView(view)
-    _TOK_CACHE[key] = df
-    return df
-
-
 def ensure_documents_tok(spark: SparkSession, force: bool = False) -> None:
     """Materialize+cache the token/hash-augmented documents projection.
 
@@ -1781,30 +1738,19 @@ def ensure_documents_tok(spark: SparkSession, force: bool = False) -> None:
     every array-lambda element access downstream — the regex split then
     reruns once per shingle/bit access (measured 10-30x blowup at sf0.1).
     The cached view is small (tokens ~= text size) and every textkit query
-    reuses it. Keyed by (session lifetime, view generation): the session
-    key survives id() reuse after GC, and the generation bumps whenever
-    register_views swaps the ``documents`` view (new sf_dir), so a stale
-    documents_tok can never be served silently (r2 ADVICE). force=True
-    still rebuilds unconditionally.
+    reuses it. Built once per input epoch (t2p_spark.materialize), which
+    register_views moves whenever it swaps the ``documents`` view, so a
+    stale documents_tok can never be served silently (r2 ADVICE).
+    force=True starts a new epoch for a ``documents`` view replaced by
+    hand, so documents_tok and every relation derived from it rebuild.
     """
-    from t2p_spark.relational import VIEW_GENERATION
-    from t2p_spark.session import session_key
-
-    skey = session_key(spark)
-    key = (skey, VIEW_GENERATION.get(skey, 0))
-    if not force and key in _TOK_CACHE:
-        return
-    for stale in [k for k in _TOK_CACHE if k[0] == skey]:
-        _TOK_CACHE.pop(stale).unpersist()
-    df = spark.sql(
+    if force:
+        new_inputs(spark, object())
+    materialize(spark, "documents_tok", lambda: spark.sql(
         "SELECT doc_id, source, n_chars, text, "
         f"{_tokens('text', 's')} AS toks, "
         f"{_xform(_tokens('text', 's'), 't -> ' + _hash60('t', 's'), 's')}"
-        " AS thashes FROM documents"
-    ).cache()
-    df.createOrReplaceTempView("documents_tok")
-    _TOK_CACHE[key] = df
-    _TOK_EPOCH[skey] = _TOK_EPOCH.get(skey, 0) + 1
+        " AS thashes FROM documents"))
 
 
 def lsh_pairs_build_sql(n_minhash: int = None) -> str:
@@ -1863,10 +1809,9 @@ def ensure_csh3(spark: SparkSession) -> DataFrame:
     form (not pre-exploded): the explode over cached arrays is cheap; the
     shingle construction is the expensive part."""
     sh3 = _adistinct(_shingles("toks", 3, "s"), "s")
-    return _ensure_cached_view(
-        spark, "csh3_mat",
-        lambda: spark.sql(
-            f"SELECT doc_id, {sh3} AS sh FROM documents_tok ct"))
+    ensure_documents_tok(spark)
+    return materialize(spark, "csh3_mat", lambda: spark.sql(
+        f"SELECT doc_id, {sh3} AS sh FROM documents_tok ct"))
 
 
 def ensure_minhash_sigs(spark: SparkSession,
@@ -1876,24 +1821,23 @@ def ensure_minhash_sigs(spark: SparkSession,
     Shared by the LSH pair build and the streaming near-dup screen's
     static index."""
     n_mh = N_MINHASH if n_minhash is None else n_minhash
-    return _ensure_cached_view(
-        spark, "sigs_mat",
-        lambda: spark.sql(_minhash_select("s", n_minhash)),
-        extra_key=(n_mh,))
+    ensure_documents_tok(spark)
+    return materialize(spark, "sigs_mat",
+                       lambda: spark.sql(_minhash_select("s", n_minhash)),
+                       key=(n_mh,))
 
 
 def ensure_lsh_pairs(spark: SparkSession, n_minhash: int = None) -> None:
     """Materialize sigs_mat plus the banded LSH candidate pairs
     (pairs_mat) once per corpus — the signature table and candidate-pair
     table a production dedup pipeline writes as stage outputs. Keyed on
-    the documents_tok epoch (plus the n_minhash preset), so a swapped
-    corpus or preset rebuilds both."""
+    the input epoch plus the n_minhash preset, so a swapped corpus or
+    preset rebuilds both."""
     n_mh = N_MINHASH if n_minhash is None else n_minhash
     ensure_minhash_sigs(spark, n_minhash)
-    _ensure_cached_view(
-        spark, "pairs_mat",
-        lambda: spark.sql(lsh_pairs_build_sql(n_minhash)),
-        extra_key=(n_mh,))
+    materialize(spark, "pairs_mat",
+                lambda: spark.sql(lsh_pairs_build_sql(n_minhash)),
+                key=(n_mh,))
 
 
 def run_textkit(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1922,8 +1866,7 @@ def ensure_cc_mat(spark: SparkSession) -> DataFrame:
     build) shares one resolution instead of re-running the pair collect +
     union-find / propagation loop per query (r7: it ran 4x per bench
     pass)."""
-    return _ensure_cached_view(
-        spark, "cc_mat", lambda: dedup_components(spark))
+    return materialize(spark, "cc_mat", lambda: dedup_components(spark))
 
 
 def cc_round(labels: DataFrame, edges: DataFrame) -> DataFrame:
@@ -2117,55 +2060,41 @@ def materialize_curation_stages(spark: SparkSession) -> None:
     """Materialize+cache each curation gate's output as its own relation —
     the incremental schedule of a 100-TB curation run, where every gate is
     a separate job writing a table and the funnel report only joins those
-    tables. Memoized per (session, documents_tok epoch) so repeated funnel
-    reports reuse the materialized stages — and any corpus swap (generation
-    bump OR a test's force rebuild) invalidates them; the local cache
-    stands in for the stage tables a cluster run would persist. The CC
-    labels (cc_mat) are derived here once for the keep-list stage build —
-    NOT per funnel report."""
-    from t2p_spark.session import session_key
-
-    ensure_documents_tok(spark)
-    skey = session_key(spark)
-    key = ("cur_stages", skey, _TOK_EPOCH.get(skey, 0))
-    if key in _TOK_CACHE:
-        return
-    # evict only THIS session's old-generation stage caches — another
-    # live session's cached stages stay persisted (r5 ADVICE)
-    for stale in [k for k in _TOK_CACHE
-                  if isinstance(k, tuple) and k[0] == "cur_stages"
-                  and k[1] == skey]:
-        for df in _TOK_CACHE.pop(stale):
-            df.unpersist()
+    tables. Built once per input epoch (t2p_spark.materialize), so
+    repeated funnel reports reuse the materialized stages and any corpus
+    swap rebuilds them; the local cache stands in for the stage tables a
+    cluster run would persist. The CC labels (cc_mat) are derived here
+    once for the keep-list stage build — NOT per funnel report."""
     # The gate builds are independent jobs; only the keep-list stage
     # depends on the CC labels. Submit the four CC-independent gates from
     # a small driver thread pool WHILE the CC resolution runs on this
     # thread, then build the keep-list — each job's task tail back-fills
     # the executors freed by the others (guide §2.6); a real curation
     # schedule runs the gate jobs concurrently too. Plans are constructed
-    # on the caller's thread; only the count() actions run in the pool.
+    # on the caller's thread; only the count() actions run in the pool,
+    # and only for stages this call (re)built.
     from concurrent.futures import ThreadPoolExecutor
 
     ensure_csh3(spark)  # the contamination gate reads csh3_mat
     sqls = spark_sql_queries()
-    indep = [(view, qname) for view, qname in _CURATION_STAGES
-             if qname != "dedup_keep_list"]
-    mats_by_view = {view: spark.sql(sqls[qname]).cache()
-                    for view, qname in indep}
+    built = []
+
+    def stage(view: str, qname: str) -> DataFrame:
+        def build():
+            built.append(view)
+            return spark.sql(sqls[qname])
+        return materialize(spark, view, build)
+
+    gates = {view: stage(view, qname) for view, qname in _CURATION_STAGES
+             if view != "keepl_mat"}
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(df.count) for df in mats_by_view.values()]
+        futures = [pool.submit(gates[view].count) for view in built]
         ensure_cc_mat(spark)
         for f in futures:
             f.result()
-    keepl = spark.sql(sqls["dedup_keep_list"]).cache()
-    keepl.count()
-    mats_by_view["keepl_mat"] = keepl
-    mats = []
-    for view, _qname in _CURATION_STAGES:
-        df = mats_by_view[view]
-        df.createOrReplaceTempView(view)
-        mats.append(df)
-    _TOK_CACHE[key] = mats
+    keepl = stage("keepl_mat", "dedup_keep_list")
+    if "keepl_mat" in built:
+        keepl.count()
 
 
 def prepare_textkit_views(spark: SparkSession, name: str,
@@ -2189,11 +2118,9 @@ def prepare_textkit_views(spark: SparkSession, name: str,
         # cached + memoized per corpus epoch: the banded self-join reads
         # this relation twice, the 60-bit vote fold is the expensive part,
         # and both simhash queries share one build
-        _ensure_cached_view(
-            spark, "simhash_mat",
-            lambda: spark.sql(
-                f"SELECT doc_id, {_simhash_expr('thashes', 's')} AS simhash "
-                "FROM documents_tok th"))
+        materialize(spark, "simhash_mat", lambda: spark.sql(
+            f"SELECT doc_id, {_simhash_expr('thashes', 's')} AS simhash "
+            "FROM documents_tok th"))
     elif name == "curate_attrition_incr":
         materialize_curation_stages(spark)
     elif name == "ngram_jaccard_pairs":
@@ -2204,11 +2131,7 @@ def prepare_textkit_views(spark: SparkSession, name: str,
               SELECT doc_id, {sh4} AS sh FROM documents_tok
             ) s WHERE size(sh) > 0
         """).createOrReplaceTempView("docsh_mat")
-        _ensure_cached_view(
-            spark, "tok_mat",
-            lambda: spark.sql(
-                "SELECT doc_id, explode(sh) AS shingle FROM docsh_mat"))
-        _ensure_cached_view(
-            spark, "tokcap_mat",
-            lambda: spark.sql(tokcap_build_sql(cap)),
-            extra_key=(cap,))
+        materialize(spark, "tok_mat", lambda: spark.sql(
+            "SELECT doc_id, explode(sh) AS shingle FROM docsh_mat"))
+        materialize(spark, "tokcap_mat",
+                    lambda: spark.sql(tokcap_build_sql(cap)), key=(cap,))

@@ -103,3 +103,44 @@ def test_tokcap_preset_rebuilds_per_cap(spark):
         assert n_capped < n_default, (n_capped, n_default)
     finally:
         _restore(spark)
+
+
+def test_registry_follows_register_views_swaps(spark):
+    """Every materialization the registry owns follows a table-dir swap:
+    over sf0.001 -> sf0.01 -> sf0.001 through register_views, the vector
+    relations match each embeddings table, a swap back leaves no stale
+    entry persisted, and a repeat call in one epoch builds nothing."""
+    import os
+
+    from t2p_spark import ann, materialize
+    from tests.test_curate_job import SF as a
+
+    b = os.path.join(os.path.dirname(a), "sf0.01")
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    def digest(df):
+        # row counts alone cannot tell these dirs apart: both hold 500
+        # embeddings
+        return (df.count(), df.selectExpr(
+            "bit_xor(xxhash64(vec_id, embedding)) AS h").first()["h"])
+
+    counts = []
+    try:
+        for sf in (a, b, a):
+            for name in ("simhash_clusters", "curate_attrition_incr"):
+                textkit.run_textkit(spark, sf, name).collect()
+            for name in ("ann_topk_lsh", "ann_topk_ivf"):
+                ann.run_ann(spark, sf, name).collect()
+            want = digest(spark.read.parquet(f"{sf}/embeddings.parquet"))
+            assert digest(spark.table("vecs_mat")) == want, sf
+            assert digest(spark.table("ivf_vecs")) == want, sf
+            counts.append(len(persisted()))
+        assert counts[2] == counts[1], counts
+        before = persisted()
+        ann.run_ann(spark, a, "ann_topk_ivf").collect()
+        assert persisted() == before
+    finally:
+        materialize.reset(spark)

@@ -12,7 +12,7 @@
 import pyspark.sql.functions as F
 import pytest
 
-from t2p_spark import textkit
+from t2p_spark import materialize, textkit
 from t2p_spark.schema import DOCS_SCHEMA
 
 DOCS_COLS = "doc_id long, source string, n_chars int, text string"
@@ -25,23 +25,10 @@ def _swap_documents_view(spark, rows):
 
 
 def _restore_views(spark):
-    # drop the synthetic views so later tests re-register the real tables
-    from t2p_spark import relational
-
-    from t2p_spark.session import session_key
-
-    skey = session_key(spark)
-    relational._REGISTERED.pop(skey, None)
-    for k in [k for k in textkit._TOK_CACHE
-              if (isinstance(k, tuple) and skey in k)]:
-        df = textkit._TOK_CACHE.pop(k)
-        for d in (df if isinstance(df, list) else [df]):
-            d.unpersist()
-    for v in ("documents", "documents_tok", "docsh_mat", "simhash_mat",
-              "tok_mat", "tokcap_mat", "sigs_mat", "pairs_mat", "csh3_mat",
-              "cf_mat", "rep_mat", "cont_mat", "keepl_mat",
-              "spl_mat", "cc_mat"):
-        spark.catalog.dropTempView(v)
+    # drop the synthetic view and every materialization over it, so later
+    # tests re-register the real tables
+    materialize.reset(spark)
+    spark.catalog.dropTempView("documents")
 
 
 def test_jaccard_hot_shingle_capped(spark):
@@ -318,9 +305,7 @@ def test_multiprobe_recall_beats_single_probe(spark):
     recall is 0 for every probe strategy — hence the planted corpus.)"""
     import random
 
-    from t2p_spark import relational
     from t2p_spark.ann import DIM, TOP_K, ann_sql
-    from t2p_spark.session import session_key
 
     rng = random.Random(7)
 
@@ -366,8 +351,7 @@ def test_multiprobe_recall_beats_single_probe(spark):
         assert r_tables > r_single, (r_single, r_tables)
     finally:
         spark.catalog.dropTempView("embeddings")
-        skey = session_key(spark)
-        relational._REGISTERED.pop(skey, None)
+        materialize.reset(spark)
 
 
 def test_textkit_presets_keep_twin_parity(spark):
@@ -536,10 +520,7 @@ def test_rolling_7d_linear_over_three_years(spark):
         }
         assert got == want
     finally:
-        from t2p_spark import relational
-        from t2p_spark.session import session_key
-
-        relational._REGISTERED.pop(session_key(spark), None)
+        materialize.reset(spark)
         spark.catalog.dropTempView("events")
 
 
@@ -745,28 +726,39 @@ def test_register_views_sf_swap_not_stale(spark):
     """r3 ADVICE (medium): register_views must re-register on an A->B->A
     sf_dir swap — keying idempotency on (session, sf_dir) left the temp
     views pointing at B while the memo claimed A. The fix keys on the
-    session's LAST sf_dir; each swap must serve the right tables and bump
-    the cache generation."""
-    from t2p_spark import relational
-    from t2p_spark.relational import VIEW_GENERATION, register_views
-    from t2p_spark.session import session_key
+    session's LAST sf_dir; each swap must serve the right tables and
+    start a new input epoch, which a probe materialization observes as a
+    rebuild."""
+    from t2p_spark.relational import register_views
+
+    builds = []
+
+    def probe():
+        builds.append(1)
+        return spark.range(1)
+
+    def epoch_moved():
+        n = len(builds)
+        materialize.materialize(spark, "epoch_probe", probe)
+        return len(builds) > n
 
     a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
     try:
         register_views(spark, a)
         n_a = spark.table("orders").count()
-        gen0 = VIEW_GENERATION[session_key(spark)]
+        epoch_moved()
         register_views(spark, b)
         n_b = spark.table("orders").count()
         assert n_b != n_a  # different scale factors
+        assert epoch_moved()
         register_views(spark, a)  # the A->B->A swap
         assert spark.table("orders").count() == n_a
-        assert VIEW_GENERATION[session_key(spark)] == gen0 + 2
-        # same-dir re-registration stays memoized (no generation bump)
+        assert epoch_moved()
+        # same-dir re-registration stays memoized (same epoch, no rebuild)
         register_views(spark, a)
-        assert VIEW_GENERATION[session_key(spark)] == gen0 + 2
+        assert not epoch_moved()
     finally:
-        relational._REGISTERED.pop(session_key(spark), None)
+        materialize.reset(spark)
 
 
 def test_shard_manifest_invariant_to_parallelism(spark):

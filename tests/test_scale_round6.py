@@ -213,17 +213,10 @@ def test_curate_incr_empty_corpus_zero_not_null(spark):
     """Empty documents view: the incremental funnel must report 0 for
     stages 0-4 (matching the DuckDB full-recompute twin), not NULL from
     SUM over zero rows (r5 ADVICE twin divergence)."""
-    from t2p_spark.session import session_key
-
     try:
+        # the force rebuild starts a new input epoch, so the memoized
+        # stage tables rebuild over the (empty) synthetic view
         _swap_documents_view(spark, [])
-        # drop any memoized stage tables from earlier tests so the gates
-        # rebuild over the (empty) synthetic view
-        skey = session_key(spark)
-        for k in [k for k in textkit._TOK_CACHE
-                  if isinstance(k, tuple) and k[0] == "cur_stages"]:
-            for df in textkit._TOK_CACHE.pop(k):
-                df.unpersist()
         textkit.prepare_textkit_views(spark, "curate_attrition_incr")
         got = {r["stage"]: r["n_docs"] for r in spark.sql(
             textkit.spark_sql_queries()["curate_attrition_incr"]).collect()}
@@ -242,9 +235,8 @@ def test_ann_recall_eval_gates_index_quality(spark):
     must equal a Python replay of hits/truth — so an index regression
     (bad bucketing, broken probe order) fails CI here instead of
     shipping a correct-but-useless index."""
-    from t2p_spark import relational
+    from t2p_spark import materialize
     from t2p_spark.ann import DIM, ann_sql
-    from t2p_spark.session import session_key
 
     rng = random.Random(7)
 
@@ -292,4 +284,4 @@ def test_ann_recall_eval_gates_index_quality(spark):
             assert mean >= 500_000, (variant, mean)
     finally:
         spark.catalog.dropTempView("embeddings")
-        relational._REGISTERED.pop(session_key(spark), None)
+        materialize.reset(spark)

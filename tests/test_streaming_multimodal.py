@@ -76,6 +76,30 @@ def test_streaming_oversized_doc_does_not_kill_stream(spark, tmp_path):
     assert 0 < oversized < len(got)
 
 
+def test_stream_drain_removes_its_checkpoint(spark, monkeypatch):
+    """A drained screen leaves no t2p_ck_* checkpoint dir behind: the
+    memory sink holds the output and the drains are never resumed."""
+    import tempfile
+
+    from t2p_spark import streaming
+    from tests.test_curate_job import SF
+
+    made = []
+    real = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    out = streaming.pii_screen_streamed_result(spark, SF)
+    assert out.count() > 0
+    ck = [d for d in made if os.path.basename(d).startswith("t2p_ck_")]
+    assert len(ck) == 1
+    assert os.path.dirname(ck[0]) == tempfile.gettempdir()
+    assert not os.path.exists(ck[0])
+
+
 def test_streaming_events_window_equals_batch(spark, tmp_path):
     from t2p_spark.relational import register_views
     from t2p_spark.streaming import run_events_stream

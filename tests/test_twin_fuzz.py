@@ -201,9 +201,7 @@ def test_events_twins_agree_on_fuzzed_corpora(spark, rows):
         # drop the synthetic view AND the registration memo, else a later
         # test's register_views() would be memo-skipped against a dropped
         # view (same contract as _restore_views for the documents fuzzer)
-        from t2p_spark import relational
-        from t2p_spark.session import session_key
+        from t2p_spark import materialize
 
-        skey = session_key(spark)
-        relational._REGISTERED.pop(skey, None)
+        materialize.reset(spark)
         spark.catalog.dropTempView("events")

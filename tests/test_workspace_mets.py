@@ -134,24 +134,3 @@ def test_workspace_rows_skip_unresolvable_pages():
     assert sorted(got) == sorted(materialized)
     assert len(got) >= 3
 
-
-def test_dist_zip_matches_tree():
-    """dist/t2p_spark.zip is the --py-files artifact README tells cluster
-    users to submit; a stale zip means executors run DIFFERENT code than
-    the driver plans against (silent skew). Every package module must be
-    present and byte-identical. Rebuild: python tools/package.py."""
-    import hashlib
-    import zipfile
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zf = zipfile.ZipFile(os.path.join(repo, "dist", "t2p_spark.zip"))
-    names = set(zf.namelist())
-    for fn in os.listdir(os.path.join(repo, "t2p_spark")):
-        if not fn.endswith(".py"):
-            continue
-        rel = f"t2p_spark/{fn}"
-        assert rel in names, f"{rel} missing from dist zip — rebuild it"
-        with open(os.path.join(repo, rel), "rb") as f:
-            assert (hashlib.md5(f.read()).hexdigest()
-                    == hashlib.md5(zf.read(rel)).hexdigest()), \
-                f"{rel} is stale in dist zip — run python tools/package.py"
