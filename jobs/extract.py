@@ -28,17 +28,6 @@ def main() -> int:
     ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--compute-only", action="store_true",
-                    help="run the extraction computation and count results "
-                         "without writing output (isolates compute scaling "
-                         "from the sandbox's single local disk)")
-    ap.add_argument("--scan-only", action="store_true",
-                    help="scan + payload assembly only, no kernel, no "
-                         "write (phase attribution: read share)")
-    ap.add_argument("--no-metrics", action="store_true",
-                    help="extract + write output but skip the metrics "
-                         "read-back/commit pass (phase attribution: "
-                         "write share vs metrics share)")
     ap.add_argument("--prewarm", action="store_true",
                     help="spin up + warm the Python worker pool before the "
                          "timed window (steady-state measurement; a real "
@@ -94,67 +83,6 @@ def main() -> int:
          .selectExpr("cast(id as string) doc_id")
          .mapInArrow(_warm, "n long").count())
 
-    if args.scan_only:
-        from t2p_spark.pipeline import assemble_payload
-
-        t0 = time.monotonic()
-        docs = spark.read.parquet(args.input).drop("bucket")
-        # aggregate over the payload column so the scan + assembly cannot
-        # be pruned away (a bare count() would skip the text columns)
-        row = assemble_payload(docs).agg(
-            F.count("*").alias("n"),
-            F.sum(F.length("json_text")).alias("payload_chars"),
-        ).collect()[0]
-        dt = time.monotonic() - t0
-        n = row["n"] or 0
-        print(
-            f"extract[scan_only] run_id={args.run_id} docs={n} ok=0 "
-            f"quarantined=0 spans=0 wall={dt:.2f}s "
-            f"scan_docs_per_s={n / dt if dt else 0:.1f}"
-        )
-        spark.stop()
-        return 0
-
-    if args.compute_only:
-        from t2p_spark.pipeline import extract
-
-        t0 = time.monotonic()
-        docs = spark.read.parquet(args.input).drop("bucket")
-        out = extract(docs, parallelism=args.parallelism)
-        agg = out.groupBy("status").count().collect()
-        dt = time.monotonic() - t0
-        counts = {r["status"]: r["count"] for r in agg}
-        docs_n = sum(counts.values())
-        print(
-            f"extract[compute_only] run_id={args.run_id} docs={docs_n} "
-            f"ok={counts.get('ok', 0)} "
-            f"quarantined={counts.get('quarantined', 0)} spans=0 "
-            f"wall={dt:.2f}s throughput={docs_n / dt if dt else 0:.1f} docs/s"
-        )
-        spark.stop()
-        return 0
-
-    if args.no_metrics:
-        from t2p_spark.io_tables import write_extracted
-        from t2p_spark.pipeline import extract
-
-        t0 = time.monotonic()
-        docs = spark.read.parquet(args.input)
-        n = docs.count()  # parquet footer count — no data read
-        clustered = "bucket" in docs.columns
-        out = extract(docs.drop("bucket"), parallelism=args.parallelism,
-                      n_buckets=args.n_buckets)
-        write_extracted(spark, out, args.output,
-                        n_buckets=args.n_buckets, clustered=clustered)
-        dt = time.monotonic() - t0
-        print(
-            f"extract[no_metrics] run_id={args.run_id} docs={n} ok=0 "
-            f"quarantined=0 spans=0 wall={dt:.2f}s "
-            f"scan_docs_per_s={n / dt if dt else 0:.1f}"
-        )
-        spark.stop()
-        return 0
-
     t0 = time.monotonic()
     metrics = run_extract_job(
         spark,
@@ -166,8 +94,9 @@ def main() -> int:
         n_buckets=args.n_buckets,
         resume=args.resume,
     )
-    # the returned metrics DataFrame is local-backed (collected once inside
-    # run_extract_job) — summarizing it launches no further output scans
+    # the returned metrics frame is a LocalRelation (collected once inside
+    # run_extract_job): summarizing it scans no output and starts no
+    # Python worker per slice
     agg = metrics.agg(
         F.coalesce(F.sum("n_docs"), F.lit(0)).alias("docs"),
         F.coalesce(F.sum("n_ok"), F.lit(0)).alias("ok"),

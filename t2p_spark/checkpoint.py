@@ -121,11 +121,12 @@ def run_extract_job(
                     F.lit(lineage["snapshot_id"]).cast("long"))
     )
     # ONE pass over the durable output (pruned to scalar columns): collect
-    # the tiny per-bucket result, then append it driver-side and return a
-    # local-backed DataFrame — callers summarizing it trigger no further
-    # scans of the output (this re-scan was part of the measured serial
-    # share keeping full-job scaling below the 0.8 bar).
-    rows = metrics.collect()
-    mdf = spark.createDataFrame(rows, metrics.schema)
+    # the tiny per-bucket result as Arrow and rebuild it as a LocalRelation.
+    # Callers summarizing it trigger no further scans of the output (this
+    # re-scan was part of the measured serial share keeping full-job
+    # scaling below the 0.8 bar), and neither the append nor any later
+    # action starts a Python worker, as every slice of a frame built from
+    # a Python list would.
+    mdf = spark.createDataFrame(metrics.toArrow(), metrics.schema)
     mdf.coalesce(1).write.mode("append").parquet(metrics_path)
     return mdf

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -197,9 +198,15 @@ def run_curation_job(spark: SparkSession, sf_dir: str, out_dir: str,
     if w_rows != e_rows:
         raise RuntimeError(
             f"shard manifest mismatch: written {w_rows} != expected {e_rows}")
-    manifest_df = spark.createDataFrame(
-        w_rows, "shard_id INT, n_chunks BIGINT, total_tokens BIGINT, "
-                "content_fp60 BIGINT")
+    # an Arrow table plans as a LocalRelation, so the one-file write below
+    # starts no Python worker per slice (a Python list would)
+    manifest_schema = pa.schema([("shard_id", pa.int32()),
+                                 ("n_chunks", pa.int64()),
+                                 ("total_tokens", pa.int64()),
+                                 ("content_fp60", pa.int64())])
+    manifest_df = spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(manifest_schema.names, r)) for r in w_rows],
+        schema=manifest_schema))
     manifest_df.coalesce(1).write.mode("overwrite") \
         .parquet(os.path.join(out_dir, "manifest"))
 

@@ -1929,6 +1929,7 @@ def dedup_components(spark: SparkSession, max_iters: int = 20,
     DuckDB oracle twin: WITH RECURSIVE label walk (DEDUP_COMPONENTS_ORACLE)
     — exact same fixpoint, declaratively.
     """
+    import pyarrow as pa
     import pyspark.sql.functions as F
 
     owns_cache = pairs is not None
@@ -1968,11 +1969,16 @@ def dedup_components(spark: SparkSession, max_iters: int = 20,
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        out = [(doc, find(doc)) for doc in parent]
+        docs = sorted(parent)
         if owns_cache:
             pairs.unpersist()
+        # an Arrow table plans as a LocalRelation: no Python worker per
+        # slice whenever the cached labels are rebuilt or scanned
         return spark.createDataFrame(
-            sorted(out), "doc_id long, cluster_rep long"
+            pa.table({"doc_id": pa.array(docs, pa.int64()),
+                      "cluster_rep": pa.array([find(d) for d in docs],
+                                              pa.int64())}),
+            "doc_id long, cluster_rep long",
         )
     edges = (
         pairs.selectExpr("doc_a AS src", "doc_b AS dst")

@@ -1,13 +1,15 @@
 """Exact resume: interrupted run + resume == uninterrupted run (north_rule)."""
 
 import glob
+import json
 import os
 import shutil
 
 import pyspark.sql.functions as F
 
+from t2p_spark import synth
 from t2p_spark.checkpoint import run_extract_job
-from t2p_spark.fixtures import fixture_doc_rows
+from t2p_spark.fixtures import doc_row, fixture_doc_rows
 from t2p_spark.schema import DOCS_SCHEMA
 
 
@@ -18,10 +20,12 @@ def _bucket_metrics(spark, path):
     }
 
 
-def test_exact_resume_after_partial_failure(spark, tmp_path):
-    docs = spark.createDataFrame(
-        list(fixture_doc_rows(chunk_size=1 << 20)), schema=DOCS_SCHEMA
-    )
+def _plan_root(df):
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+def _assert_exact_resume(spark, tmp_path, rows):
+    docs = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
     inp = str(tmp_path / "docs")
     docs.repartition(4).write.parquet(inp)
 
@@ -48,8 +52,13 @@ def test_exact_resume_after_partial_failure(spark, tmp_path):
     # resume: must reprocess exactly the victims
     metrics = run_extract_job(spark, inp, out2, m2, run_id="r2",
                               parallelism=2, n_buckets=8, resume=True)
-    redone = {r["bucket"] for r in metrics.collect()}
-    assert redone == set(victims)
+    # the returned frame is the collected result, not a re-scan: a
+    # LocalRelation, equal to the rows appended under this run_id
+    assert _plan_root(metrics) == "LocalRelation"
+    returned = metrics.collect()
+    appended = spark.read.parquet(m2).filter(F.col("run_id") == "r2")
+    assert sorted(returned) == sorted(appended.collect())
+    assert {r["bucket"] for r in returned} == set(victims)
 
     got = _bucket_metrics(spark, m2)
     assert got == want  # identical per-bucket counts + span checksums
@@ -57,4 +66,28 @@ def test_exact_resume_after_partial_failure(spark, tmp_path):
     # resume again: nothing left to do
     metrics2 = run_extract_job(spark, inp, out2, m2, run_id="r3",
                                parallelism=2, n_buckets=8, resume=True)
+    assert _plan_root(metrics2) == "LocalRelation"
     assert metrics2.count() == 0
+    return want
+
+
+def test_exact_resume_after_partial_failure(spark, tmp_path):
+    _assert_exact_resume(
+        spark, tmp_path, list(fixture_doc_rows(chunk_size=1 << 20)))
+
+
+def test_exact_resume_generated_docs(spark, tmp_path):
+    """The same resume contract on generated documents only, so it runs
+    without the reference Textract inputs: 36 generated docs and 4 that
+    the kernel must quarantine, spread over 8 buckets."""
+    specs = ([(f"gen-{i:02d}", synth.generate_doc, i) for i in range(36)]
+             + [(f"bad-{i}", synth.generate_quarantine_doc, i)
+                for i in range(4)])
+    rows = []
+    for doc_id, make, seed in specs:
+        aws, w, h, media = make(doc_id, seed)
+        rows.append(doc_row(doc_id, json.dumps(aws), w, h, media))
+    want = _assert_exact_resume(spark, tmp_path, rows)
+    assert sum(n_docs for n_docs, _, _, _ in want.values()) == 40
+    n_ok = sum(n_ok for _, n_ok, _, _ in want.values())
+    assert 0 < n_ok <= 36, "both ok and quarantined buckets are resumed"

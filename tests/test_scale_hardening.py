@@ -105,12 +105,13 @@ def test_dedup_components_chain_propagation(spark):
     # driver union-find path (small sets) AND the distributed
     # label-propagation path (forced via threshold=0) must agree
     for thresh in (100_000, 0):
-        got = {
-            r["doc_id"]: r["cluster_rep"]
-            for r in textkit.dedup_components(
-                spark, pairs=pairs, driver_threshold=thresh).collect()
-        }
+        cc = textkit.dedup_components(
+            spark, pairs=pairs, driver_threshold=thresh)
+        got = {r["doc_id"]: r["cluster_rep"] for r in cc.collect()}
         assert got == want, f"threshold={thresh}"
+        if thresh:  # driver path: a LocalRelation starts no Python worker
+            plan = cc._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def test_kernel_quarantines_non_object_json(spark):

@@ -3,8 +3,9 @@
 The r6 64k scaling pairs collapsed (job 0.18-0.42 vs r5's 0.40-0.80 median
 0.66) on a byte-identical extraction path (zero commits touched it since r5
 — verified by `git diff r5..HEAD -- <extraction files>`). Phase attribution
-(tools/phase_bench.py) localized the collapse to the scan/decode phase
-(efficiency 0.106, 73% of local[16] wall), with the job mostly BLOCKED
+(the differential runs in BENCH/phases_r6_64k*.jsonl) localized the
+collapse to the scan/decode phase (efficiency 0.106, 73% of local[16]
+wall), with the job mostly BLOCKED
 (1-5 busy cores, sys>=user, hypervisor supervisor hot, steal spikes).
 
 This probe separates the three remaining hypotheses without Spark:
