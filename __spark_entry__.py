@@ -66,52 +66,27 @@ def _fixture_docs(spark: SparkSession) -> DataFrame:
 
 def _synth_docs(spark: SparkSession) -> DataFrame:
     """The 120-doc deterministic synth corpus, generated ON THE EXECUTORS
-    (guide §5: the driver should do almost no data work). row_for_index is
-    a pure function of (i, seed) — the same distributed staging bench.py
-    and tools/make_corpus.py use; the previous driver-side corpus_rows
-    loop + createDataFrame pickled ~22 MB of span payloads through py4j
-    (~2.5 s of the extract_synth_corpus cold time, measured r7)."""
+    (guide §5: the driver should do almost no data work) by
+    synth.synth_docs; the previous driver-side corpus_rows loop +
+    createDataFrame pickled ~22 MB of span payloads through py4j (~2.5 s
+    of the extract_synth_corpus cold time, measured r7)."""
+    from t2p_spark.synth import synth_docs
 
-    def build() -> DataFrame:
-        import pyarrow as pa
-
-        def gen(batches):
-            from t2p_spark.synth import row_for_index
-
-            span_type = pa.list_(pa.struct([
-                ("kind", pa.string()), ("text", pa.string()),
-                ("media_ref", pa.string()), ("offset", pa.int32()),
-            ]))
-            for batch in batches:
-                ids, spans = [], []
-                for i in batch.column("id").to_pylist():
-                    doc_id, row_spans = row_for_index(
-                        int(i), seed=7, chunk_size=1 << 20)
-                    ids.append(doc_id)
-                    spans.append([
-                        {"kind": k, "text": t, "media_ref": m, "offset": o}
-                        for k, t, m, o in row_spans
-                    ])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids, pa.string()), pa.array(spans, span_type)],
-                    names=["doc_id", "spans"],
-                )
-
-        return spark.range(120).mapInArrow(
-            gen,
-            "doc_id string, spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>")
-
-    return _memo_docs(spark, "synth120", build)
+    return _memo_docs(spark, "synth120",
+                      lambda: synth_docs(spark.range(120), seed=7))
 
 
 def _fixture_media(spark: SparkSession) -> DataFrame:
     """The fixture media table (fake-codec blobs), staged once: three
-    multimodal queries each re-ran the encode kernel over the same docs."""
+    multimodal queries each re-ran the encode kernel over the same docs.
+    Its inputs are the committed goldens' (doc_id, W, H, media_ref), so it
+    needs no reference input."""
+    from t2p_spark.fixtures import media_doc_rows
     from t2p_spark.multimodal import media_table_from_docs
+    from t2p_spark.schema import DOCS_SCHEMA
 
-    return _memo_docs(spark, "fixture_media",
-                      lambda: media_table_from_docs(_fixture_docs(spark)))
+    return _memo_docs(spark, "fixture_media", lambda: media_table_from_docs(
+        spark.createDataFrame(media_doc_rows(), schema=DOCS_SCHEMA)))
 
 
 def _synth_extracted(spark: SparkSession) -> DataFrame:
@@ -150,28 +125,27 @@ def extract_fixture_spans(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     )
 
 
-REFERENCE_METS = "/root/reference/tests/workspace/mets.xml"
-
-
 def extract_workspace_spans(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """METS-workspace source through the full pipeline: the reference's own
-    corpus entry point (tests/workspace/mets.xml, resolved the way
-    /root/reference/tests/test_workspace.py:17-22 does) fed to the same
+    corpus entry point (tests/workspace/mets.xml, resolved the way the
+    reference's tests/test_workspace.py:17-22 does) fed to the same
     extraction as extract_fixture_spans. Dims for unmaterialized images come
     from the committed goldens, as the reference's Resolver would have
     downloaded them. Oracle: the SAME goldens oracle — a workspace source
     must be indistinguishable from the fixtures source."""
     import pyspark.sql.functions as F
 
-    from t2p_spark.fixtures import fixture_ids, golden_meta
+    from t2p_spark.fixtures import (
+        REF_METS, fixture_ids, golden_meta, reference_path,
+    )
     from t2p_spark.pipeline import extract
     from t2p_spark.workspace import docs_from_workspace
 
     def _build():
         dims = {d: (golden_meta(d)["width"], golden_meta(d)["height"])
                 for d in fixture_ids()}
-        return docs_from_workspace(spark, REFERENCE_METS, dims=dims,
-                                   chunk_size=1 << 20)
+        return docs_from_workspace(spark, reference_path(REF_METS),
+                                   dims=dims, chunk_size=1 << 20)
 
     docs = _memo_docs(spark, "workspace", _build)
     out = extract(docs, parallelism=4)
@@ -219,8 +193,9 @@ def quarantine_reasons(spark: SparkSession, sf_dir: str = "") -> DataFrame:
 # Cap for the quarantine_oversize attestation: sits inside the synth
 # corpus's payload-size distribution so the PayloadTooLarge guard provably
 # fires on the big docs AND provably spares the small ones (both sides of
-# the cap are populated). Production default is pipeline.MAX_PAYLOAD_BYTES.
-OVERSIZE_CAP_BYTES = 200_000
+# the cap are populated: 12 of the 120 docs are over, 108 under).
+# Production default is pipeline.MAX_PAYLOAD_BYTES.
+OVERSIZE_CAP_BYTES = 50_000
 
 
 def quarantine_oversize(spark: SparkSession, sf_dir: str = "") -> DataFrame:

@@ -34,39 +34,11 @@ def ensure_corpus(spark, n_docs: int, path: str) -> None:
     """Distributed generation, bucket-partitioned layout (FIXTURES.md §1)."""
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
-    import pyarrow as pa
     import pyspark.sql.functions as F
 
-    seed = SEED
+    from t2p_spark.synth import synth_docs
 
-    def gen_kernel(batches):
-        from t2p_spark.synth import row_for_index
-
-        span_type = pa.list_(pa.struct([
-            ("kind", pa.string()), ("text", pa.string()),
-            ("media_ref", pa.string()), ("offset", pa.int32()),
-        ]))
-        for batch in batches:
-            ids, spans = [], []
-            for i in batch.column("id").to_pylist():
-                doc_id, row_spans = row_for_index(int(i), seed,
-                                                  chunk_size=1 << 20)
-                ids.append(doc_id)
-                spans.append([
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for k, t, m, o in row_spans
-                ])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(spans, span_type)],
-                names=["doc_id", "spans"],
-            )
-
-    (spark.range(n_docs)
-     .repartition(CPUS * 2)
-     .mapInArrow(
-         gen_kernel,
-         "doc_id string, spans array<struct<kind:string,text:string,"
-         "media_ref:string,offset:int>>")
+    (synth_docs(spark.range(n_docs).repartition(CPUS * 2), SEED)
      .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int"))
      .repartition(64, "bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
@@ -76,6 +48,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from t2p_spark.fixtures import ReferenceMissing
     from t2p_spark.pipeline import extract
 
     spark = (
@@ -113,11 +86,16 @@ def main() -> int:
 
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
+    skipped: dict[str, str] = {}
     total = 0.0
     for name, fn in entrymod.queries().items():
         t0 = time.monotonic()
-        df = fn(spark, SF_DIR)
-        n = df.count()
+        try:
+            n = fn(spark, SF_DIR).count()
+        except ReferenceMissing as exc:
+            skipped[name] = str(exc)
+            print(f"# {name}: skipped ({exc})", file=sys.stderr)
+            continue
         dt = time.monotonic() - t0
         timings[name] = round(dt, 3)
         total += dt
@@ -167,6 +145,7 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "queries_warm_rerun": warm,
+        "queries_skipped": skipped,
         "sf": sf,
         "extract_docs": n_docs,
         "extract_docs_per_sec": round(n_docs / dt_extract, 2),

@@ -1,15 +1,13 @@
 """Deterministic synthetic Textract corpus generator (FIXTURES.md §4).
 
-Three families, all seeded (no wall clock, no external data):
+Two families, all seeded (no wall clock, no external data, no file reads):
 
-  A. mutants   — the 8 reference fixtures with rewritten block ids and
-                 perturbed (still-valid) geometry; goldens via the oracle.
-  B. generated — random valid block DAGs covering the fixture gaps:
+  A. generated — random valid block DAGs covering the fixture gaps:
                  KEY_VALUE_SET, LAYOUT_TABLE (geometry-matched + unmatched),
                  LAYOUT_PAGE_NUMBER, LAYOUT_LIST one-level nesting,
                  SELECTED selection elements, merged cells, bbox-only
                  geometry, multi-CHILD-relationship blocks.
-  C. skew      — pathological many-block documents (north_rule) and
+  B. skew      — pathological many-block documents (north_rule) and
                  quarantine docs (dangling words, wordless tables).
 
 Quarantine composition (measured, asserted exactly in
@@ -19,7 +17,7 @@ reference's *faithful* table-splice crash path — a Key/Value or de-nested
 layout as the table's word-order predecessor raises ValueError in the
 reference (convert_aws.py:931-936), which this engine maps to quarantine
 per SURVEY §2.8. The pure-Python oracle and the Spark kernel agree on the
-exact per-doc verdict; ``mut-`` and ``skew-`` docs always convert.
+exact per-doc verdict; ``skew-`` docs always convert.
 """
 
 from __future__ import annotations
@@ -383,49 +381,13 @@ def generate_quarantine_doc(doc_id: str, seed: int) -> Tuple[Dict, int, int, str
     return builder.build(), 1000, 1000, f"images/{doc_id}.jpg"
 
 
-def mutate_fixture(aws_json: Dict, seed: int) -> Dict:
-    """Rewrite every block id with a seeded uuid map (relationships follow)."""
-    rng = random.Random(seed)
-    mapping = {}
-    out = json.loads(json.dumps(aws_json))
-    for block in out["Blocks"]:
-        mapping.setdefault(block["Id"], _uuid(rng))
-        block["Id"] = mapping[block["Id"]]
-    for block in out["Blocks"]:
-        for rel in block.get("Relationships") or []:
-            rel["Ids"] = [mapping.get(i, i) for i in rel.get("Ids") or []]
-    return out
-
-
-_FIXTURE_CACHE: Optional[List] = None
-
-
-def _load_fixtures() -> List:
-    global _FIXTURE_CACHE
-    if _FIXTURE_CACHE is None:
-        import os
-
-        from t2p_spark.fixtures import REF_JSON_DIR, fixture_ids, golden_meta
-
-        fixtures = []
-        for fid in fixture_ids():
-            meta = golden_meta(fid)
-            with open(os.path.join(REF_JSON_DIR, f"{fid}.json"),
-                      encoding="utf-8") as f:
-                fixtures.append((json.load(f), meta))
-        _FIXTURE_CACHE = fixtures
-    return _FIXTURE_CACHE
-
-
 def row_for_index(i: int, seed: int = 42,
                   chunk_size: Optional[int] = None,
                   quarantine_ratio: float = 0.02,
                   skew_ratio: float = 0.01) -> Tuple[str, List]:
     """The i-th corpus row — a pure function of (i, seed), so corpus
-    generation distributes over the cluster (tools/make_corpus.py runs it
-    inside mapInArrow; an undistributable generator is useless at target
-    scale)."""
-    fixtures = _load_fixtures()
+    generation distributes over the cluster (``synth_docs`` runs it inside
+    mapInArrow; an undistributable generator is useless at target scale)."""
     doc_seed = seed * 1_000_003 + i
     r = (i * 2654435761) % 1000 / 1000.0  # deterministic mix selector
     if r < quarantine_ratio:
@@ -435,11 +397,6 @@ def row_for_index(i: int, seed: int = 42,
         doc_id = f"skew-{i:08d}"
         aws, w, h, ref = generate_skew_doc(doc_id, doc_seed,
                                            n_lines=2000 + (i % 3) * 2000)
-    elif r < quarantine_ratio + skew_ratio + 0.125 and fixtures:
-        src, meta = fixtures[i % len(fixtures)]
-        doc_id = f"mut-{i:08d}"
-        aws = mutate_fixture(src, doc_seed)
-        w, h, ref = meta["width"], meta["height"], meta["media_ref"]
     else:
         doc_id = f"gen-{i:08d}"
         aws, w, h, ref = generate_doc(doc_id, doc_seed)
@@ -452,8 +409,33 @@ def corpus_rows(n_docs: int, seed: int = 42, chunk_size: Optional[int] = None,
                 skew_ratio: float = 0.01) -> Iterator[Tuple[str, List]]:
     """(doc_id, spans) input rows for a synthetic corpus of n_docs docs.
 
-    Deterministic in (n_docs, seed). Mix: ~1/8 fixture mutants, skew and
-    quarantine docs per the ratios, remainder generated DAGs.
+    Deterministic in (n_docs, seed). Mix: skew and quarantine docs per the
+    ratios, remainder generated DAGs.
     """
     for i in range(n_docs):
         yield row_for_index(i, seed, chunk_size, quarantine_ratio, skew_ratio)
+
+
+def synth_docs(ids, seed: int):
+    """The docs table (schema.DOCS_SCHEMA) for an ``id`` frame such as
+    ``spark.range(n)``: row ``i`` is ``row_for_index(i, seed)`` with 1 MiB
+    text spans, generated on the executors. The caller partitions ``ids``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from t2p_spark.schema import DOCS_SCHEMA
+
+    arrow_schema = to_arrow_schema(DOCS_SCHEMA)
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = [row_for_index(i, seed, chunk_size=1 << 20)
+                    for i in batch.column("id").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r[0] for r in rows], pa.string()),
+                 pa.array([r[1] for r in rows],
+                          arrow_schema.field("spans").type)],
+                schema=arrow_schema)
+
+    return ids.mapInArrow(gen, DOCS_SCHEMA)

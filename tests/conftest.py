@@ -1,5 +1,3 @@
-import glob
-import json
 import os
 import sys
 
@@ -8,27 +6,16 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-GOLDEN_DIR = os.path.join(REPO, "tests", "golden")
-REF_JSON_DIR = "/root/reference/tests/workspace/textract_responses"
-
-FIXTURE_IDS = sorted(
-    os.path.basename(p)[:-5] for p in glob.glob(os.path.join(GOLDEN_DIR, "*.json"))
+from t2p_spark.fixtures import (  # noqa: E402,F401  (re-exported to tests)
+    REF_JSON_DIR, REFERENCE_MISSING, fixture_ids, golden_meta as load_golden,
+    load_textract_json, reference_available,
 )
 
+FIXTURE_IDS = fixture_ids()
 
-def load_golden(doc_id: str) -> dict:
-    with open(os.path.join(GOLDEN_DIR, f"{doc_id}.json"), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def load_textract_json(doc_id: str) -> dict:
-    with open(os.path.join(REF_JSON_DIR, f"{doc_id}.json"), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def load_textract_text(doc_id: str) -> str:
-    with open(os.path.join(REF_JSON_DIR, f"{doc_id}.json"), encoding="utf-8") as f:
-        return f.read()
+# The one mark for tests that read the external reference inputs.
+needs_reference = pytest.mark.skipif(not reference_available(),
+                                     reason=REFERENCE_MISSING)
 
 
 @pytest.fixture(scope="session")

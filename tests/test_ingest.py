@@ -7,7 +7,9 @@ import pyspark.sql.functions as F
 from t2p_spark.fixtures import fixture_ids, golden_meta
 from t2p_spark.ingest import docs_from_json_dir
 from t2p_spark.pipeline import extract
-from tests.conftest import REF_JSON_DIR, load_golden
+from tests.conftest import REF_JSON_DIR, load_golden, needs_reference
+
+pytestmark = needs_reference
 
 DOCS_SCHEMA_STR = ("doc_id string, spans array<struct<kind:string,"
                    "text:string,media_ref:string,offset:int>>")

@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tests.conftest import needs_reference
 
 SF = "/root/testdata/sf0.001"
 
@@ -65,9 +66,14 @@ QUERIES = [
     "ann_recall_eval", "events_anomaly_days", "stream_quality_gate",
     "seq_pack_plan",
 ]
+# queries whose inputs are the external reference Textract JSONs
+REFERENCE_QUERIES = {"extract_fixture_spans", "render_pagexml"}
 
 
-@pytest.mark.parametrize("name", QUERIES)
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=needs_reference) if n in REFERENCE_QUERIES else n
+    for n in QUERIES
+])
 def test_query_matches_oracle(spark, con, name):
     fn = entrymod.queries()[name]
     sql = entrymod.oracle_sql()[name]
@@ -78,6 +84,7 @@ def test_query_matches_oracle(spark, con, name):
     assert _rowset(sdf.columns, srows) == _rowset(res.columns, res.fetchall())
 
 
+@needs_reference
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -10,9 +10,12 @@ cf. /root/reference/tests/test_workspace.py:24-60).
 import pytest
 
 from t2p_spark.convert import convert_doc, convert_doc_safe
-from tests.conftest import FIXTURE_IDS, load_golden, load_textract_json
+from tests.conftest import (
+    FIXTURE_IDS, load_golden, load_textract_json, needs_reference,
+)
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", FIXTURE_IDS)
 def test_oracle_matches_golden(doc_id):
     golden = load_golden(doc_id)

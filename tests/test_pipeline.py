@@ -6,6 +6,7 @@ import pytest
 from t2p_spark.fixtures import doc_row, fixture_doc_rows, fixture_ids, golden_meta
 from t2p_spark.pipeline import extract, extracted_metrics
 from t2p_spark.schema import DOCS_SCHEMA
+from tests.conftest import needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -18,12 +19,14 @@ def extracted_rows(spark):
     return {r["doc_id"]: r for r in out}
 
 
+@needs_reference
 def test_all_fixture_docs_ok(extracted_rows):
     assert sorted(extracted_rows) == fixture_ids()
     for doc_id, row in extracted_rows.items():
         assert row["status"] == "ok", (doc_id, row["error"])
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", fixture_ids())
 def test_spark_spans_equal_golden(extracted_rows, doc_id):
     golden = golden_meta(doc_id)["spans"]
@@ -32,6 +35,7 @@ def test_spark_spans_equal_golden(extracted_rows, doc_id):
     assert got == golden
 
 
+@needs_reference
 def test_shuffled_span_order_is_reassembled(spark):
     doc_id = fixture_ids()[0]
     meta = golden_meta(doc_id)
@@ -67,6 +71,7 @@ def test_quarantine_row_not_crash(spark):
     assert rows["no-media"]["status"] == "quarantined"
 
 
+@needs_reference
 def test_metrics_aggregate(spark):
     docs = spark.createDataFrame(
         list(fixture_doc_rows()), schema=DOCS_SCHEMA

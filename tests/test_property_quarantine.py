@@ -8,10 +8,12 @@ reference crashes on.
 """
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import HealthCheck, given, settings
 
 from t2p_spark.convert import convert_doc_safe
 from t2p_spark.kernel import _fingerprint
+from tests.conftest import needs_reference
 
 json_scalars = st.one_of(
     st.none(), st.booleans(), st.integers(-10, 10**12),
@@ -79,29 +81,26 @@ doc_like = st.fixed_dictionaries(
 )
 
 
-def _load_small_fixture():
-    import copy
-
+@pytest.fixture(scope="module")
+def base_doc():
+    """The smallest reference fixture document (fewest blocks)."""
     from tests.conftest import FIXTURE_IDS, load_textract_json
 
-    docs = [(d, load_textract_json(d)) for d in FIXTURE_IDS]
-    doc = min(docs, key=lambda p: len(p[1]["Blocks"]))[1]
-    return copy.deepcopy(doc)
+    docs = [load_textract_json(d) for d in FIXTURE_IDS]
+    return min(docs, key=lambda doc: len(doc["Blocks"]))
 
 
-_BASE_DOC = _load_small_fixture()
-
-
+@needs_reference
 @settings(max_examples=150, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(data=st.data())
-def test_corrupted_real_doc_never_raises(data):
+def test_corrupted_real_doc_never_raises(base_doc, data):
     """Mutate random fields of a VALID reference document — exercises the
     deep conversion paths (linking, ordering, emission) with realistic
     structure around each corruption, not just shallow bucketing."""
     import copy
 
-    doc = copy.deepcopy(_BASE_DOC)
+    doc = copy.deepcopy(base_doc)
     blocks = doc["Blocks"]
     n_mut = data.draw(st.integers(1, 4))
     for _ in range(n_mut):
@@ -143,7 +142,8 @@ def test_convert_doc_safe_never_raises(doc):
         assert spans == [] and error
 
 
-def test_typeless_relationship_crash_parity():
+@needs_reference
+def test_typeless_relationship_crash_parity(base_doc):
     """convert_aws.py:622-630: once any CHILD relationship exists, the
     reference evaluates rel["Type"] on EVERY relationship — a Type-less
     entry raises KeyError, so the doc must quarantine (r2 ADVICE: an
@@ -174,7 +174,7 @@ def test_typeless_relationship_crash_parity():
 
     # end-to-end: such a doc quarantines instead of converting (LINE —
     # PAGE children are never fetched through this accessor, there or here)
-    doc = copy.deepcopy(_BASE_DOC)
+    doc = copy.deepcopy(base_doc)
     for b in doc["Blocks"]:
         if b.get("BlockType") == "LINE" and b.get("Relationships"):
             b["Relationships"].append({"Ids": ["dangling"]})

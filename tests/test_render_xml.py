@@ -11,16 +11,17 @@ from t2p_spark.flatten import flatten_page_xml, page_dims
 from t2p_spark.render_xml import (
     canonical_form, canonical_md5, render_page_xml,
 )
-from tests.conftest import FIXTURE_IDS, REF_JSON_DIR, load_textract_json
-
-REF_XML_DIR = "/root/reference/tests/workspace/reference_page_xml"
+from t2p_spark.fixtures import REF_XML_DIR, read_reference
+from tests.conftest import (
+    FIXTURE_IDS, REF_JSON_DIR, load_textract_json, needs_reference,
+)
 
 
 def _ref_xml(doc_id: str) -> str:
-    with open(f"{REF_XML_DIR}/{doc_id}.xml", encoding="utf-8") as f:
-        return f.read()
+    return read_reference(f"{REF_XML_DIR}/{doc_id}.xml")
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", FIXTURE_IDS)
 def test_render_matches_reference_xml(doc_id):
     """Canonical-form equality with the committed reference PAGE-XML —
@@ -32,6 +33,7 @@ def test_render_matches_reference_xml(doc_id):
     assert canonical_form(got) == canonical_form(ref), doc_id
 
 
+@needs_reference
 def test_rendered_xml_flattens_to_golden_spans():
     """Round-trip: our rendered XML, flattened by the golden-derivation
     spec, reproduces the exact golden span sequence."""
@@ -46,6 +48,7 @@ def test_rendered_xml_flattens_to_golden_spans():
     assert spans == golden
 
 
+@needs_reference
 def test_render_spark_kernel(spark):
     from t2p_spark.fixtures import fixture_doc_rows
     from t2p_spark.render_xml import render_pagexml_df
@@ -77,6 +80,7 @@ def test_render_kernel_quarantines_bad_doc(spark):
     assert out[0]["status"] == "quarantined"
 
 
+@needs_reference
 def test_cli_single_file(tmp_path):
     doc_id = FIXTURE_IDS[0]
     ref = _ref_xml(doc_id)

@@ -11,6 +11,7 @@ from t2p_spark import synth
 from t2p_spark.checkpoint import run_extract_job
 from t2p_spark.fixtures import doc_row, fixture_doc_rows
 from t2p_spark.schema import DOCS_SCHEMA
+from tests.conftest import needs_reference
 
 
 def _bucket_metrics(spark, path):
@@ -71,6 +72,7 @@ def _assert_exact_resume(spark, tmp_path, rows):
     return want
 
 
+@needs_reference
 def test_exact_resume_after_partial_failure(spark, tmp_path):
     _assert_exact_resume(
         spark, tmp_path, list(fixture_doc_rows(chunk_size=1 << 20)))

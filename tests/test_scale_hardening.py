@@ -14,6 +14,7 @@ import pytest
 
 from t2p_spark import materialize, textkit
 from t2p_spark.schema import DOCS_SCHEMA
+from tests.conftest import needs_reference
 
 DOCS_COLS = "doc_id long, source string, n_chars int, text string"
 
@@ -130,6 +131,7 @@ def test_kernel_quarantines_non_object_json(spark):
     assert out["str-doc"]["status"] == "quarantined"
 
 
+@needs_reference
 def test_oversized_payload_quarantined_not_crashed(spark):
     """Arrow row-limit guard (pipeline.py): a doc whose concatenated payload
     exceeds max_payload_bytes must quarantine with PayloadTooLarge — the
@@ -173,6 +175,7 @@ def test_oversized_payload_quarantined_not_crashed(spark):
     assert 0 < flipped < len(mixed)
 
 
+@needs_reference
 def test_oversize_guard_covers_renderer_and_splitter(spark):
     """The Arrow-row-limit cap defaults inside assemble_payload, so EVERY
     consumer is contained — render_pagexml_df quarantines an over-cap doc
@@ -233,6 +236,7 @@ def test_kernel_reenables_gc():
     assert gc.isenabled()
 
 
+@needs_reference
 def test_resume_rejects_mismatched_bucket_layout(spark, tmp_path):
     """A clustered input whose stored bucket column disagrees with
     --n-buckets must fail fast on a pruning resume — silently applying the

@@ -5,11 +5,13 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from t2p_spark.fixtures import fixture_doc_rows
+from t2p_spark.fixtures import fixture_doc_rows, media_doc_rows
 from t2p_spark.multimodal import decode_media, media_meta, media_table_from_docs
 from t2p_spark.schema import DOCS_SCHEMA
+from tests.conftest import needs_reference
 
 
+@needs_reference
 def test_streaming_extract_equals_batch(spark, tmp_path):
     from t2p_spark.pipeline import extract
     from t2p_spark.streaming import run_extract_stream
@@ -36,6 +38,7 @@ def test_streaming_extract_equals_batch(spark, tmp_path):
     assert fp(got) == fp(batch)
 
 
+@needs_reference
 def test_streaming_oversized_doc_does_not_kill_stream(spark, tmp_path):
     """One pathological oversized doc arriving mid-stream must quarantine
     as PayloadTooLarge while the stream keeps draining: every other doc's
@@ -133,6 +136,7 @@ def test_streaming_events_window_equals_batch(spark, tmp_path):
     assert got == want
 
 
+@needs_reference
 def test_streaming_sink_idempotent_on_retry(spark, tmp_path):
     """foreachBatch is at-least-once: re-delivering the SAME microbatch
     (same batch_id, e.g. retry after a partial write) must not duplicate
@@ -193,9 +197,7 @@ def test_streaming_sessionize_equals_batch(spark, tmp_path):
 
 
 def test_media_table_and_meta(spark):
-    docs = spark.createDataFrame(
-        list(fixture_doc_rows(chunk_size=1 << 20)), schema=DOCS_SCHEMA
-    )
+    docs = spark.createDataFrame(media_doc_rows(), schema=DOCS_SCHEMA)
     media = media_table_from_docs(docs)
     meta = media_meta(media).collect()
     assert len(meta) == 8
@@ -218,9 +220,7 @@ def test_resize_and_features_and_frames(spark):
         frame_sample, media_features, media_meta, resize_media,
     )
 
-    docs = spark.createDataFrame(
-        list(fixture_doc_rows(chunk_size=1 << 20)), schema=DOCS_SCHEMA
-    )
+    docs = spark.createDataFrame(media_doc_rows(), schema=DOCS_SCHEMA)
     media = media_table_from_docs(docs)
 
     resized = resize_media(media, max_side=512).collect()

@@ -54,8 +54,8 @@ def test_rowcount_and_statuses(sweep):
     assert got_quar == expected_quar
     bad = {doc_id for doc_id, _ in rows if doc_id.startswith("bad-")}
     assert bad <= expected_quar  # every intentional bad doc quarantined
-    # mutants and skew docs always convert
-    assert not any(d.startswith(("mut-", "skew-")) for d in expected_quar)
+    # skew docs always convert
+    assert not any(d.startswith("skew-") for d in expected_quar)
 
 
 def test_spark_equals_oracle_everywhere(sweep):

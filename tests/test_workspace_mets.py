@@ -1,7 +1,7 @@
 """METS workspace resolution parity (the reference's corpus entry point).
 
 The reference's own test harness reaches its fixtures through an OCR-D
-workspace (/root/reference/tests/test_workspace.py:17-22 resolves
+workspace (its tests/test_workspace.py:17-22 resolves
 tests/workspace/mets.xml, then pairs images/ with textract_responses/ and
 reference_page_xml/). These tests pin that t2p_spark.workspace re-derives
 the same resolution without the ocrd stack: same page set, same image dims
@@ -15,12 +15,13 @@ Pure-Python module: no Spark session needed.
 import os
 
 from t2p_spark import workspace
-from t2p_spark.fixtures import fixture_doc_rows, fixture_ids, golden_meta
+from t2p_spark.fixtures import (
+    REF_METS as METS, fixture_doc_rows, fixture_ids, golden_meta,
+)
+from tests.conftest import needs_reference
 
-METS = "/root/reference/tests/workspace/mets.xml"
-WS = os.path.dirname(METS)
 
-
+@needs_reference
 def test_parse_mets_resolves_every_fixture_page():
     pages = {p.page_id: p for p in workspace.parse_mets(METS)}
     # the reference workspace enumerates exactly the fixture corpus
@@ -32,6 +33,7 @@ def test_parse_mets_resolves_every_fixture_page():
             f"{p.page_id}.xml")
 
 
+@needs_reference
 def test_image_dims_sniffer_matches_reference_dims():
     """For every image materialized in the reference workspace, the pure
     byte sniffer must report the dims the goldens pinned (the goldens'
@@ -48,6 +50,7 @@ def test_image_dims_sniffer_matches_reference_dims():
     assert sniffed >= 3  # jpgs materialized in the reference checkout
 
 
+@needs_reference
 def test_workspace_rows_equal_fixture_rows():
     """With golden dims supplied for unmaterialized images, the workspace
     yields byte-identical rows to fixtures.fixture_doc_rows — the input
@@ -125,6 +128,7 @@ def test_richer_workspace_resilience(tmp_path):
     assert workspace.image_dims(str(fill)) == (425, 600)
 
 
+@needs_reference
 def test_workspace_rows_skip_unresolvable_pages():
     """Without a dims fallback, only pages with a materialized image
     resolve — the contract of an offline partial workspace copy."""

@@ -74,6 +74,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from t2p_spark.fixtures import ReferenceMissing
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -93,7 +94,7 @@ def main() -> int:
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_fail = n_rowsonly = n_skip = 0
     for name, fn in queries.items():
         if args.only and name not in args.only.split(","):
             continue
@@ -101,6 +102,10 @@ def main() -> int:
             sdf = fn(spark, args.sf)
             srows = sdf.collect()
             scols = sdf.columns
+        except ReferenceMissing as exc:
+            print(f"SKIP  {name}: {exc}")
+            n_skip += 1
+            continue
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: spark raised {type(exc).__name__}: {exc}")
             n_fail += 1
@@ -142,7 +147,8 @@ def main() -> int:
             for d in list(sb - sa)[:3]:
                 print("   duckdb-only:", str(d)[:160])
             n_fail += 1
-    print(f"\n{n_pass} ok, {n_fail} fail, {n_rowsonly} rows-only")
+    print(f"\n{n_pass} ok, {n_fail} fail, {n_skip} skipped, "
+          f"{n_rowsonly} rows-only")
     spark.stop()
     return 1 if n_fail else 0
 

@@ -2,9 +2,9 @@
 
     python tools/make_corpus.py --out /tmp/corpus --n-docs 2000 [--seed 42]
 
-Generation runs inside a mapInArrow kernel over spark.range(n_docs) — each
-row is a pure function of (index, seed) (t2p_spark.synth.row_for_index), so
-the generator scales with the cluster like everything else.
+Generation runs inside a mapInArrow kernel over spark.range(n_docs)
+(t2p_spark.synth.synth_docs) — each row is a pure function of (index,
+seed), so the generator scales with the cluster like everything else.
 """
 
 from __future__ import annotations
@@ -29,32 +29,8 @@ def main() -> int:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    import pyarrow as pa
 
-    seed = args.seed
-
-    def gen_kernel(batches):
-        from t2p_spark.synth import row_for_index
-
-        span_type = pa.list_(pa.struct([
-            ("kind", pa.string()), ("text", pa.string()),
-            ("media_ref", pa.string()), ("offset", pa.int32()),
-        ]))
-        for batch in batches:
-            ids, spans = [], []
-            for i in batch.column("id").to_pylist():
-                doc_id, row_spans = row_for_index(int(i), seed,
-                                                  chunk_size=1 << 20)
-                ids.append(doc_id)
-                spans.append([
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for k, t, m, o in row_spans
-                ])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()),
-                 pa.array(spans, span_type)],
-                names=["doc_id", "spans"],
-            )
+    from t2p_spark.synth import synth_docs
 
     spark = (
         SparkSession.builder.appName("t2p-make-corpus")
@@ -67,12 +43,8 @@ def main() -> int:
     # input table layout per FIXTURES.md §1: partitioned by bucket(doc_id)
     # (Iceberg `bucket(N, doc_id)`; dir-per-bucket on the parquet fallback).
     # A bucketed input keeps the whole extract job a single pipelined stage.
-    (spark.range(args.n_docs)
-     .repartition(args.partitions)
-     .mapInArrow(
-         gen_kernel,
-         "doc_id string, spans array<struct<kind:string,text:string,"
-         "media_ref:string,offset:int>>")
+    (synth_docs(spark.range(args.n_docs).repartition(args.partitions),
+                args.seed)
      .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int"))
      .repartition(64, "bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(args.out))

@@ -3,9 +3,9 @@
 Usage: python tools/make_goldens.py [--check]
 
 Writes tests/golden/<doc_id>.json: {doc_id, width, height, media_ref, spans}.
-Goldens are mechanical flattenings (FIXTURES.md §3) of
-/root/reference/tests/workspace/reference_page_xml/*.xml — the only
-executable ground truth offline (the reference's ocrd dep is absent).
+Goldens are mechanical flattenings (FIXTURES.md §3) of the reference
+PAGE-XMLs in t2p_spark.fixtures.REF_XML_DIR — the only executable ground
+truth offline (the reference's ocrd dep is absent).
 """
 
 from __future__ import annotations
@@ -17,9 +17,11 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from t2p_spark.fixtures import (  # noqa: E402
+    REF_XML_DIR, read_reference, reference_path,
+)
 from t2p_spark.flatten import flatten_page_xml, page_dims  # noqa: E402
 
-REF_XML_DIR = "/root/reference/tests/workspace/reference_page_xml"
 OUT_DIR = os.path.join(os.path.dirname(__file__), "..", "tests", "golden")
 
 
@@ -27,9 +29,10 @@ def main() -> int:
     check = "--check" in sys.argv
     os.makedirs(OUT_DIR, exist_ok=True)
     n = 0
-    for path in sorted(glob.glob(os.path.join(REF_XML_DIR, "*.xml"))):
+    xml_dir = reference_path(REF_XML_DIR)
+    for path in sorted(glob.glob(os.path.join(xml_dir, "*.xml"))):
         stem = os.path.basename(path)[:-4]
-        xml = open(path, encoding="utf-8").read()
+        xml = read_reference(path)
         width, height, media_ref = page_dims(xml)
         spans = flatten_page_xml(xml, media_ref=media_ref)
         record = {

@@ -20,9 +20,11 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from t2p_spark.fixtures import (  # noqa: E402
+    REF_XML_DIR, read_reference, reference_path,
+)
 from t2p_spark.render_xml import canonical_md5  # noqa: E402
 
-REF_XML_DIR = "/root/reference/tests/workspace/reference_page_xml"
 OUT_PATH = os.path.join(os.path.dirname(__file__), "..", "tests",
                         "golden_render", "render_canon_md5.json")
 SYNTH_OUT_PATH = os.path.join(os.path.dirname(__file__), "..", "tests",
@@ -65,9 +67,10 @@ def main() -> int:
     check = "--check" in sys.argv
     os.makedirs(os.path.dirname(OUT_PATH), exist_ok=True)
     records = []
-    for path in sorted(glob.glob(os.path.join(REF_XML_DIR, "*.xml"))):
+    xml_dir = reference_path(REF_XML_DIR)
+    for path in sorted(glob.glob(os.path.join(xml_dir, "*.xml"))):
         doc_id = os.path.basename(path)[:-4]
-        xml = open(path, encoding="utf-8").read()
+        xml = read_reference(path)
         records.append({
             "doc_id": doc_id,
             "status": "ok",
