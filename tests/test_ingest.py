@@ -9,12 +9,11 @@ from t2p_spark.ingest import docs_from_json_dir
 from t2p_spark.pipeline import extract
 from tests.conftest import REF_JSON_DIR, load_golden, needs_reference
 
-pytestmark = needs_reference
-
 DOCS_SCHEMA_STR = ("doc_id string, spans array<struct<kind:string,"
                    "text:string,media_ref:string,offset:int>>")
 
 
+@needs_reference
 def test_ingest_json_dir_roundtrip(spark, tmp_path):
     json_dir = str(tmp_path / "responses")
     (tmp_path / "responses").mkdir()
@@ -50,6 +49,7 @@ def test_ingest_json_dir_roundtrip(spark, tmp_path):
         assert got == load_golden(doc_id)["spans"], doc_id
 
 
+@needs_reference
 def test_streaming_ingest_extract(spark, tmp_path):
     """JSON landing zone as a stream -> extraction stream == goldens."""
     from t2p_spark.streaming import extract_stream
@@ -83,6 +83,7 @@ def test_streaming_ingest_extract(spark, tmp_path):
     assert got == want
 
 
+@needs_reference
 def test_ingest_small_chunks(spark, tmp_path):
     """Chunked encoding (many text spans per doc) reassembles identically."""
     json_dir = str(tmp_path / "responses")
@@ -102,6 +103,7 @@ def test_ingest_small_chunks(spark, tmp_path):
     assert [list(s) for s in out["spans"]] == load_golden(doc_id)["spans"]
 
 
+@needs_reference
 def test_ingest_encoded_names_and_quarantine(spark, tmp_path):
     """Filenames with spaces/%/# decode to the right doc_id (r2 ADVICE:
     input_file_name() is URL-encoded), and dim-less docs route to the
@@ -136,6 +138,7 @@ def test_ingest_encoded_names_and_quarantine(spark, tmp_path):
         assert got[1:] == want[1:]
 
 
+@needs_reference
 def test_split_multipage(spark):
     """Synthetic 3-page Textract response -> 3 per-page docs whose
     extracted spans equal the single-page conversions; a multi-PAGE
@@ -190,3 +193,35 @@ def test_split_multipage(spark):
     q = split_multipage(docs_bad).collect()
     assert len(q) == 1 and q[0]["status"] == "quarantined"
     assert "Page field" in q[0]["error"]
+
+
+def test_split_two_generated_pages(spark):
+    """A two-page response built from two generated pages, with Page set
+    on every block, splits into two docs that each convert exactly like
+    their page alone."""
+    import json
+
+    from t2p_spark.convert import convert_doc
+    from t2p_spark.fixtures import doc_row
+    from t2p_spark.ingest import split_multipage
+    from t2p_spark.schema import DOCS_SCHEMA
+    from t2p_spark.synth import generate_doc
+
+    aws1, w, h, media = generate_doc("two-1", 1)
+    aws2 = generate_doc("two-2", 2)[0]
+    merged = dict(aws1)
+    merged["Blocks"] = ([dict(b, Page=1) for b in aws1["Blocks"]]
+                        + [dict(b, Page=2) for b in aws2["Blocks"]])
+    docs = spark.createDataFrame(
+        [doc_row("two", json.dumps(merged), w, h, media, chunk_size=4096)],
+        schema=DOCS_SCHEMA)
+    rows = {r["doc_id"]: r
+            for r in split_multipage(docs, chunk_size=4096).collect()}
+    assert sorted(rows) == ["two#p1", "two#p2"]
+    for doc_id, aws in (("two#p1", aws1), ("two#p2", aws2)):
+        row = rows[doc_id]
+        assert (row["status"], row["error"]) == ("ok", None)
+        assert tuple(row["spans"][0]) == ("media", f"{w}x{h}", media, 0)
+        text = "".join(s["text"] for s in row["spans"][1:])
+        assert convert_doc(json.loads(text), w, h, media) == \
+            convert_doc(aws, w, h, media), doc_id

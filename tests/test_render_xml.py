@@ -80,6 +80,33 @@ def test_render_kernel_quarantines_bad_doc(spark):
     assert out[0]["status"] == "quarantined"
 
 
+def test_render_spark_kernel_synth(spark):
+    """The Spark render kernel over the generated gap-feature docs gives
+    the same pinned canonical md5s as rendering each doc alone."""
+    import os
+
+    from t2p_spark.fixtures import doc_row
+    from t2p_spark.render_xml import render_pagexml_df
+    from t2p_spark.schema import DOCS_SCHEMA
+    from t2p_spark.synth import generate_doc
+
+    golden_path = os.path.join(os.path.dirname(__file__), "golden_render",
+                               "render_synth_md5.json")
+    records = json.load(open(golden_path, encoding="utf-8"))
+    rows = []
+    for rec in records:
+        seed = int(rec["doc_id"].rsplit("-", 1)[1])
+        aws, w, h, media = generate_doc(rec["doc_id"], seed)
+        rows.append(doc_row(rec["doc_id"], json.dumps(aws), w, h, media,
+                            chunk_size=4096))
+    docs = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+    got = {r["doc_id"]: (r["status"], r["canon_md5"])
+           for r in render_pagexml_df(docs).collect()}
+    assert len(got) == 8
+    assert got == {rec["doc_id"]: ("ok", rec["canon_md5"])
+                   for rec in records}
+
+
 @needs_reference
 def test_cli_single_file(tmp_path):
     doc_id = FIXTURE_IDS[0]

@@ -38,6 +38,44 @@ def test_streaming_extract_equals_batch(spark, tmp_path):
     assert fp(got) == fp(batch)
 
 
+
+def test_run_extract_stream_equals_extract_on_synth(spark, tmp_path):
+    """The extraction stream over a parquet of generated docs (plus one
+    quarantined doc) lands exactly the rows batch extract gives."""
+    import json
+
+    from t2p_spark.fixtures import doc_row
+    from t2p_spark.pipeline import extract
+    from t2p_spark.streaming import run_extract_stream
+    from t2p_spark.synth import generate_doc
+
+    rows = []
+    for i in range(8):
+        aws, w, h, media = generate_doc(f"gen-{i}", i)
+        rows.append(doc_row(f"gen-{i}", json.dumps(aws), w, h, media,
+                            chunk_size=4096))
+    rows.append(("bad", [("media", "10x10", "m.jpg", 0),
+                         ("text", "[1,2]", "", 1)]))
+    docs = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+    in_path = str(tmp_path / "docs")
+    docs.repartition(3).write.parquet(in_path)
+
+    q = run_extract_stream(spark, in_path, str(tmp_path / "out"),
+                           str(tmp_path / "ck"))
+    q.awaitTermination(120)
+
+    def fp(df):
+        return sorted(
+            (r["doc_id"], r["status"], r["error"], r["span_fp"],
+             r["bucket"],
+             tuple((s["kind"], s["text"], s["media_ref"], s["offset"])
+                   for s in r["spans"]))
+            for r in df.collect())
+
+    got = fp(spark.read.parquet(str(tmp_path / "out")))
+    assert len(got) == 9
+    assert got == fp(extract(docs))
+
 @needs_reference
 def test_streaming_oversized_doc_does_not_kill_stream(spark, tmp_path):
     """One pathological oversized doc arriving mid-stream must quarantine
@@ -101,6 +139,7 @@ def test_stream_drain_removes_its_checkpoint(spark, monkeypatch):
     assert len(ck) == 1
     assert os.path.dirname(ck[0]) == tempfile.gettempdir()
     assert not os.path.exists(ck[0])
+
 
 
 def test_streaming_events_window_equals_batch(spark, tmp_path):
