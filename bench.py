@@ -34,12 +34,11 @@ def ensure_corpus(spark, n_docs: int, path: str) -> None:
     """Distributed generation, bucket-partitioned layout (FIXTURES.md §1)."""
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
-    import pyspark.sql.functions as F
-
+    from t2p_spark.pipeline import bucket_of
     from t2p_spark.synth import synth_docs
 
     (synth_docs(spark.range(n_docs).repartition(CPUS * 2), SEED)
-     .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int"))
+     .withColumn("bucket", bucket_of())
      .repartition(64, "bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
 

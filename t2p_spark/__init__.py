@@ -13,16 +13,30 @@ converter's PAGE-XML output (see FIXTURES.md §3 for the flattening spec and
 ``t2p_spark.flatten`` for its implementation).
 
 Architecture (SURVEY.md §7):
-  - ``schema``    fixed Textract / span / doc schemas (Spark + Arrow)
-  - ``flatten``   PAGE-XML -> span list (golden derivation, stdlib ET)
-  - ``convert``   pure-Python single-doc converter (the oracle)
-  - ``kernel``    Arrow batch kernel wrapping the converter
-  - ``pipeline``  DataFrame job: read -> salt/repartition -> kernel -> write
-  - ``checkpoint``metrics/lineage table + exact resume
-  - ``synth``     deterministic corpus generator
-  - ``textkit``   training-data ops: dedup, similarity, language-ID, quality
-  - ``ann``       embedding similarity search (brute-force + LSH-bucketed)
-  - ``multimodal``binary media column plumbing (decode stubbed offline)
+  - ``schema``      span struct, docs and extracted table schemas
+  - ``flatten``     PAGE-XML -> span list (golden derivation, stdlib ET)
+  - ``convert``     pure-Python single-doc converter (the oracle)
+  - ``kernel``      the Arrow kernel boundary: payload decoder, row loop,
+                    extract kernel wrapping the converter
+  - ``pipeline``    DataFrame job: scan -> payload assembly -> [optional
+                    repartition] -> kernel -> bucket
+  - ``checkpoint``  metrics/lineage table + exact resume
+  - ``io_tables``   Iceberg sink when configured, bucketed Parquet otherwise
+  - ``render_xml``  PAGE-XML renderer + its Spark kernel
+  - ``ingest``      raw Textract-JSON directory -> docs table; multi-page split
+  - ``workspace``   OCR-D METS workspace -> docs table; image header dims
+  - ``streaming``   Structured Streaming extraction and landing-zone screens
+  - ``synth``       deterministic corpus generator
+  - ``fixtures``    reference fixture corpus; the one home of the reference
+                    input paths
+  - ``materialize`` the one registry of shared cached relations
+  - ``session``     the session key the registries are scoped by
+  - ``relational``  shared-ANSI-SQL analytics queries
+  - ``textkit``     training-data ops: dedup, similarity, language-ID, quality
+  - ``curate``      curation job: gates -> kept set -> chunks -> shards
+  - ``ann``         embedding similarity search (brute-force + LSH-bucketed)
+  - ``multimodal``  binary media column plumbing (decode stubbed offline)
+  - ``cli``         single-file Textract JSON -> PAGE-XML converter
 """
 
 __version__ = "0.1.0"

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from t2p_spark.io_tables import write_extracted
-from t2p_spark.pipeline import extract, extracted_metrics
+from t2p_spark.pipeline import bucket_of, extract, extracted_metrics
 
 
 def completed_buckets(spark: SparkSession, metrics_path: str) -> List[int]:
@@ -75,10 +75,7 @@ def run_extract_job(
         # check is one extra Spark job on the hot path.
         mism = (
             docs.select("doc_id", "bucket").limit(200)
-            .filter(
-                F.col("bucket")
-                != F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-            )
+            .filter(F.col("bucket") != bucket_of(n_buckets))
             .count()
         )
         if mism:
@@ -90,9 +87,7 @@ def run_extract_job(
                 f"matching --n-buckets."
             )
     else:
-        docs = docs.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+        docs = docs.withColumn("bucket", bucket_of(n_buckets))
     if done:
         # on a clustered input this prunes bucket directories at the scan
         docs = docs.filter(~F.col("bucket").isin(done))

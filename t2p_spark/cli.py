@@ -10,8 +10,8 @@ conversion model the distributed pipeline uses (t2p_spark.convert +
 t2p_spark.render_xml), so single-file and cluster output are identical.
 
 Like the reference's ``convert_file_without_image``, pixel dimensions can
-be passed explicitly to avoid opening the image; opening the image needs
-PIL, which is gated behind an import-try (absent in this sandbox).
+be passed explicitly to avoid opening the image; otherwise they are read
+from the image's JPEG/TIFF/PNG header (``workspace.image_dims``, no PIL).
 """
 
 from __future__ import annotations
@@ -19,18 +19,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-
-
-def _image_dims(image_file: str) -> tuple:
-    try:
-        from PIL import Image  # noqa: PLC0415 — optional, like the reference
-    except ImportError as exc:  # pragma: no cover
-        raise SystemExit(
-            "PIL is not installed; pass --image-width/--image-height "
-            "(the reference's convert_file_without_image path)"
-        ) from exc
-    with Image.open(image_file) as img:
-        return img.width, img.height
 
 
 def main(argv=None) -> int:
@@ -49,11 +37,16 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     from t2p_spark.render_xml import render_page_xml
+    from t2p_spark.workspace import image_dims
 
     if args.image_width and args.image_height:
         width, height = args.image_width, args.image_height
     else:
-        width, height = _image_dims(args.image_file)
+        try:
+            width, height = image_dims(args.image_file)
+        except ValueError as exc:
+            raise SystemExit(
+                f"{exc}; pass --image-width/--image-height") from exc
 
     with open(args.aws_json_file, encoding="utf-8") as f:
         aws = json.load(f)

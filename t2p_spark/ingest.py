@@ -23,8 +23,15 @@ row-group/page sizes stay bounded.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
+
+from t2p_spark.kernel import decode_payloads, row_kernel
+from t2p_spark.pipeline import MAX_PAYLOAD_BYTES, assemble_payload
+from t2p_spark.schema import SPAN_STRUCT
 
 
 def docs_from_json_dir(spark: SparkSession, json_dir: str,
@@ -37,8 +44,8 @@ def docs_from_json_dir(spark: SparkSession, json_dir: str,
 
     streaming=True returns the same table as an UNBOUNDED stream
     (readStream over the directory — a landing zone continuously receiving
-    Textract responses); feed it to streaming.extract_stream for
-    end-to-end streaming extraction with the idempotent sink.
+    Textract responses); feed it to pipeline.extract for end-to-end
+    streaming extraction.
 
     with_quarantine=True returns (docs, quarantined) where quarantined is
     (doc_id, reason) for files whose doc_id has no dims row — otherwise
@@ -108,10 +115,12 @@ def docs_from_json_dir(spark: SparkSession, json_dir: str,
 # per-page docs (doc_id#pN) whose conversions equal the page-at-a-time
 # reference runs; single-page docs pass through byte-identically.
 
-SPLIT_SCHEMA = ("doc_id string, "
-                "spans array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>, "
-                "status string, error string")
+SPLIT_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
+    T.StructField("status", T.StringType()),
+    T.StructField("error", T.StringType()),
+])
 
 
 def _encode_spans(dims_text: str, media_ref: str, payload: str,
@@ -123,16 +132,15 @@ def _encode_spans(dims_text: str, media_ref: str, payload: str,
     return spans
 
 
-def _split_doc(doc_id: str, width, height, media_ref: str, json_text: str,
-               chunk_size: int) -> list:
-    """One (doc_id, payload) -> [(doc_id', spans, status, error)] rows."""
+def _split_doc(chunk_size: int, doc_id: str, width, height, media_ref: str,
+               json_text: str, payload, reason) -> list:
+    """One decoded doc -> [(doc_id', spans, status, error)] rows."""
+    if reason is not None:
+        return [(doc_id, [], "quarantined", reason)]
     import orjson
 
     dims_text = f"{width}x{height}"
     try:
-        payload = orjson.loads(json_text)
-        if not isinstance(payload, dict):
-            raise TypeError(f"payload is {type(payload).__name__}, not dict")
         blocks = payload.get("Blocks") or []
         n_pages = sum(1 for b in blocks
                       if isinstance(b, dict)
@@ -170,59 +178,22 @@ def _split_doc(doc_id: str, width, height, media_ref: str, json_text: str,
                  f"{type(exc).__name__}: {exc}")]
 
 
+def split_kernel(chunk_size: int):
+    """The split mapInArrow kernel: assembled doc batches -> SPLIT_SCHEMA."""
+    return row_kernel(SPLIT_SCHEMA, partial(_split_doc, chunk_size),
+                      decode_payloads)
+
+
 def split_multipage(docs: DataFrame, chunk_size: int = 1 << 20,
-                    max_payload_bytes: int | None = None) -> DataFrame:
+                    max_payload_bytes: int = MAX_PAYLOAD_BYTES) -> DataFrame:
     """docs(doc_id, spans) -> per-page docs + status/error.
 
     Column-only payload assembly feeds an Arrow kernel (orjson parse —
     the measured-fastest path, see BENCH/BASELINE.md) that regroups
     blocks by their Page field; narrow map, no shuffle, binary-bounded
     batches. Rows with status='ok' feed pipeline.extract unchanged;
-    'quarantined' rows carry the reason (pageless multi-PAGE, non-dict
-    payload, parse failure, or PayloadTooLarge under the default
-    Arrow-row-limit cap — pipeline.MAX_PAYLOAD_BYTES unless overridden)."""
-    import pyarrow as pa
-
-    from t2p_spark import pipeline
-
-    if max_payload_bytes is None:
-        max_payload_bytes = pipeline.MAX_PAYLOAD_BYTES
-
-    span_type = pa.list_(pa.struct([
-        ("kind", pa.string()), ("text", pa.string()),
-        ("media_ref", pa.string()), ("offset", pa.int32()),
-    ]))
-
-    def kernel(batches):
-        for batch in batches:
-            ids, spans, status, errs = [], [], [], []
-            d = batch.to_pydict()
-            oversizes = d.get("payload_bytes", [None] * batch.num_rows)
-            for doc_id, w, h, mref, text, oversize in zip(
-                    d["doc_id"], d["width"], d["height"],
-                    d["media_ref"], d["json_text"], oversizes):
-                if oversize is not None:
-                    ids.append(doc_id)
-                    spans.append([])
-                    status.append("quarantined")
-                    errs.append(f"PayloadTooLarge: {oversize} bytes exceeds "
-                                "the max_payload_bytes cap (Arrow row limit)")
-                    continue
-                for row in _split_doc(doc_id, w, h, mref, text or "",
-                                      chunk_size):
-                    ids.append(row[0])
-                    spans.append([
-                        {"kind": k, "text": t, "media_ref": m, "offset": o}
-                        for k, t, m, o in row[1]
-                    ])
-                    status.append(row[2])
-                    errs.append(row[3])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(spans, span_type),
-                 pa.array(status, pa.string()), pa.array(errs, pa.string())],
-                names=["doc_id", "spans", "status", "error"],
-            )
-
-    assembled = pipeline.assemble_payload(
-        docs, max_payload_bytes=max_payload_bytes)
-    return assembled.mapInArrow(kernel, schema=SPLIT_SCHEMA)
+    'quarantined' rows carry the reason: the extract kernel's own
+    (PayloadTooLarge over ``max_payload_bytes``, InvalidDoc,
+    JSONDecodeError) or a pageless multi-PAGE response."""
+    return assemble_payload(docs, max_payload_bytes).mapInArrow(
+        split_kernel(chunk_size), schema=SPLIT_SCHEMA)

@@ -1,27 +1,41 @@
-"""Arrow batch kernel: columnar doc batches -> extracted span batches.
+"""Arrow batch kernels: the one boundary between Spark and Python.
 
-JVM->Python crosses exactly once per Arrow batch (``mapInArrow``); inside a
-batch the per-document conversion is the shared ``convert_doc_safe`` logic —
-the same code pytest validates against the reference goldens, so Spark==oracle
-by construction. No row-at-a-time Python UDFs anywhere (input_hint
-constraint); the payload assembly / dimension parsing upstream of this kernel
-is pure Column ops (see ``t2p_spark.pipeline``).
+JVM->Python crosses exactly once per Arrow batch (``mapInArrow``). Every
+kernel of the package crosses it the same way:
+
+  - its output is declared once, as a Spark ``StructType``; the Arrow
+    schema is derived from it with ``to_arrow_schema``;
+  - ``decode_payloads`` is the one decoder of an assembled doc batch
+    (``t2p_spark.pipeline.assemble_payload``): per row the parsed Textract
+    object, or the quarantine reason;
+  - ``row_kernel`` is the one row loop: ``to_pylist`` in, zero or more
+    output rows per input row, ``from_arrays`` out.
+
+The extract kernel is the exception to the row loop: its span column is
+built columnar (see ``_convert_batch``). Inside a batch the per-document
+conversion is the shared ``convert_doc_safe`` logic — the same code pytest
+validates against the reference goldens, so Spark==oracle by construction.
+No row-at-a-time Python UDFs anywhere (input_hint constraint); the payload
+assembly / dimension parsing upstream of this kernel is pure Column ops.
 
 Batch shape in:  doc_id string, width int32, height int32,
                  media_ref string, json_text string(large ok)
+                 [, payload_bytes int64 — the oversize marker]
 Batch shape out: EXTRACTED_SCHEMA (doc_id, spans, status, error,
-                 n_blocks, n_spans)
+                 n_blocks, n_spans, span_fp)
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from t2p_spark.convert import convert_doc_safe
+from t2p_spark.schema import EXTRACTED_SCHEMA
 
 try:  # orjson (Rust) parses ~2x faster than stdlib json, identical dicts;
     # gate behind import-try so the kernel runs on any worker image
@@ -31,22 +45,68 @@ try:  # orjson (Rust) parses ~2x faster than stdlib json, identical dicts;
 except ImportError:  # pragma: no cover
     _loads = json.loads
 
-SPAN_ARROW = pa.list_(pa.struct([
-    ("kind", pa.string()),
-    ("text", pa.string()),
-    ("media_ref", pa.string()),
-    ("offset", pa.int32()),
-]))
+EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
+_SPANS_ARROW = EXTRACTED_ARROW.field("spans").type
 
-EXTRACTED_ARROW = pa.schema([
-    ("doc_id", pa.string()),
-    ("spans", SPAN_ARROW),
-    ("status", pa.string()),
-    ("error", pa.string()),
-    ("n_blocks", pa.int32()),
-    ("n_spans", pa.int32()),
-    ("span_fp", pa.int64()),
-])
+
+def decode_payloads(batch: pa.RecordBatch) -> Iterator[tuple]:
+    """Per row of an assembled batch: ``(doc_id, width, height, media_ref,
+    json_text, doc, reason)``. ``doc`` is the parsed Textract object and
+    ``reason`` None, or ``doc`` is None and ``reason`` is the quarantine
+    reason: ``PayloadTooLarge``, ``InvalidDoc`` or ``JSONDecodeError``.
+
+    A non-NULL ``payload_bytes`` marks a doc over assemble_payload's cap
+    whose json_text was deliberately left unbuilt (one such row would
+    overflow Arrow's int32 string offsets and kill the stage). Batches
+    without that column are accepted.
+    """
+    names = ("doc_id", "width", "height", "media_ref", "json_text")
+    cols = [batch.column(n).to_pylist() for n in names]
+    if "payload_bytes" in batch.schema.names:
+        cols.append(batch.column("payload_bytes").to_pylist())
+    else:
+        cols.append([None] * batch.num_rows)
+    for doc_id, width, height, media_ref, text, oversize in zip(*cols):
+        doc = reason = None
+        if oversize is not None:
+            reason = (f"PayloadTooLarge: {oversize} bytes exceeds the "
+                      "max_payload_bytes cap (Arrow row limit)")
+        elif width is None or height is None or not text:
+            reason = "InvalidDoc: missing media dims or payload"
+        else:
+            try:
+                doc = _loads(text)
+            except ValueError as exc:
+                reason = f"JSONDecodeError: {exc}"
+            else:
+                if not isinstance(doc, dict):
+                    reason = (f"JSONDecodeError: payload is JSON "
+                              f"{type(doc).__name__}, not an object")
+                    doc = None
+        yield doc_id, width, height, media_ref, text, doc, reason
+
+
+def _pylist_rows(batch: pa.RecordBatch) -> Iterator[tuple]:
+    return zip(*(col.to_pylist() for col in batch.columns))
+
+
+def row_kernel(schema, fn: Callable[..., Iterable[tuple]],
+               rows: Callable[[pa.RecordBatch], Iterable[tuple]] = _pylist_rows):
+    """A mapInArrow kernel producing Spark ``schema``: ``fn(*row)`` maps
+    each input row to an iterable of output tuples in ``schema`` field
+    order (one-to-many allowed). ``rows(batch)`` yields the input rows —
+    by default the batch's columns zipped, or ``decode_payloads``."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        arrow = to_arrow_schema(schema)
+        for batch in batches:
+            out = [rec for row in rows(batch) for rec in fn(*row)]
+            cols = zip(*out) if out else [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(cols, arrow)],
+                schema=arrow)
+
+    return kernel
 
 
 def _fingerprint(doc_id: str, spans) -> int:
@@ -67,11 +127,6 @@ def _fingerprint(doc_id: str, spans) -> int:
 
 
 def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
-    widths = batch.column("width").to_pylist()
-    heights = batch.column("height").to_pylist()
-    media_refs = batch.column("media_ref").to_pylist()
-    payloads = batch.column("json_text").to_pylist()
-
     # columnar span construction: flat value arrays + list offsets — no
     # per-span Python dicts (the naive from_pylist path was the kernel's
     # hotspot, ~2x the conversion cost itself)
@@ -82,44 +137,15 @@ def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     list_offsets = [0]
     status_col, error_col, nb_col, ns_col, fp_col = [], [], [], [], []
 
-    # oversized-payload marker from assemble_payload(max_payload_bytes=...):
-    # non-NULL byte count == the doc exceeded the cap and json_text was
-    # deliberately left unbuilt (one such row would overflow Arrow's int32
-    # string offsets and kill the stage — quarantine it instead)
-    if "payload_bytes" in batch.schema.names:
-        oversizes = batch.column("payload_bytes").to_pylist()
-    else:
-        oversizes = [None] * batch.num_rows
-
-    doc_ids = batch.column("doc_id").to_pylist()
-    for doc_id, width, height, media_ref, payload, oversize in zip(
-        doc_ids, widths, heights, media_refs, payloads, oversizes
-    ):
-        n_blocks = 0
-        if oversize is not None:
-            status, spans, error = (
-                "quarantined", [],
-                f"PayloadTooLarge: {oversize} bytes exceeds the "
-                "max_payload_bytes cap (Arrow row limit)",
-            )
-        elif width is None or height is None or not payload:
-            status, spans, error = (
-                "quarantined", [], "InvalidDoc: missing media dims or payload"
+    for doc_id, width, height, media_ref, _, aws, reason in \
+            decode_payloads(batch):
+        if reason is None:
+            n_blocks = len(aws.get("Blocks") or [])
+            status, spans, error = convert_doc_safe(
+                aws, width, height, media_ref or ""
             )
         else:
-            try:
-                aws = _loads(payload)
-                if not isinstance(aws, dict):
-                    raise ValueError(
-                        f"payload is JSON {type(aws).__name__}, not an object"
-                    )
-                n_blocks = len(aws.get("Blocks") or [])
-            except ValueError as exc:
-                status, spans, error = "quarantined", [], f"JSONDecodeError: {exc}"
-            else:
-                status, spans, error = convert_doc_safe(
-                    aws, width, height, media_ref or ""
-                )
+            n_blocks, status, spans, error = 0, "quarantined", [], reason
         if spans:
             ks, ts, ms, os_ = zip(*spans)
             kinds.extend(ks)
@@ -133,17 +159,14 @@ def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         ns_col.append(len(spans))
         fp_col.append(_fingerprint(doc_id, spans))
 
+    span_type = _SPANS_ARROW.value_type
     span_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(kinds, pa.string()),
-            pa.array(texts, pa.string()),
-            pa.array(refs, pa.string()),
-            pa.array(offs, pa.int32()),
-        ],
-        names=["kind", "text", "media_ref", "offset"],
+        [pa.array(vals, f.type)
+         for vals, f in zip((kinds, texts, refs, offs), span_type)],
+        fields=list(span_type),
     )
     spans_arr = pa.ListArray.from_arrays(
-        pa.array(list_offsets, pa.int32()), span_struct
+        pa.array(list_offsets, pa.int32()), span_struct, type=_SPANS_ARROW
     )
     return pa.RecordBatch.from_arrays(
         [

@@ -36,6 +36,10 @@ read other entries by view name; each owner ensures its inputs first.
   vecs2_mat [(n_planes,)]   embeddings + two-table LSH buckets + norm (same)
   ivf_vecs [()]             embeddings + quantized vector + norm
                             (ann.run_ivf_spark)
+  fixture_docs, synth120_docs, fixture_media, synth120_extracted,
+  workspace_docs [()]       the driver queries' staged input corpora and
+                            the synth corpus's extraction output
+                            (__spark_entry__)
 """
 
 from __future__ import annotations

@@ -20,11 +20,12 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from t2p_spark.kernel import row_kernel
 
 MAGIC = b"T2PIMG"
 
@@ -45,16 +46,6 @@ META_SCHEMA = T.StructType([
     T.StructField("valid", T.BooleanType()),
 ])
 
-META_ARROW = pa.schema([
-    ("media_id", pa.string()),
-    ("format", pa.string()),
-    ("width", pa.int32()),
-    ("height", pa.int32()),
-    ("channels", pa.int32()),
-    ("n_bytes", pa.int64()),
-    ("valid", pa.bool_()),
-])
-
 
 def encode_fake_image(width: int, height: int, channels: int = 3,
                       seed: int = 0) -> bytes:
@@ -67,32 +58,13 @@ def encode_fake_image(width: int, height: int, channels: int = 3,
     return header + body
 
 
-def _meta_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        ids = batch.column("media_id").to_pylist()
-        blobs = batch.column("content").to_pylist()
-        fmt, w, h, c, nb, ok = [], [], [], [], [], []
-        for blob in blobs:
-            if blob is not None and blob[:6] == MAGIC and len(blob) >= 16:
-                width, height, channels = struct.unpack(">IIH", blob[6:16])
-                fmt.append("t2pimg")
-                w.append(width)
-                h.append(height)
-                c.append(channels)
-                ok.append(True)
-            else:
-                fmt.append("unknown")
-                w.append(None)
-                h.append(None)
-                c.append(None)
-                ok.append(False)
-            nb.append(len(blob) if blob is not None else 0)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids), pa.array(fmt), pa.array(w, pa.int32()),
-             pa.array(h, pa.int32()), pa.array(c, pa.int32()),
-             pa.array(nb, pa.int64()), pa.array(ok)],
-            schema=META_ARROW,
-        )
+def _meta_row(media_id, blob) -> Iterator[tuple]:
+    if blob is not None and blob[:6] == MAGIC and len(blob) >= 16:
+        width, height, channels = struct.unpack(">IIH", blob[6:16])
+        yield media_id, "t2pimg", width, height, channels, len(blob), True
+    else:
+        n_bytes = len(blob) if blob is not None else 0
+        yield media_id, "unknown", None, None, None, n_bytes, False
 
 
 def media_meta(media: DataFrame) -> DataFrame:
@@ -100,7 +72,7 @@ def media_meta(media: DataFrame) -> DataFrame:
     n_bytes, valid). One Arrow cross per batch; binary never leaves the
     executor."""
     return media.select("media_id", "content").mapInArrow(
-        _meta_kernel, schema=META_SCHEMA
+        row_kernel(META_SCHEMA, _meta_row), schema=META_SCHEMA
     )
 
 
@@ -137,38 +109,15 @@ def media_table_from_docs(docs: DataFrame) -> DataFrame:
         F.element_at(dims, 2).cast("int").alias("h"),
     )
 
-    def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        out_schema = pa.schema([
-            ("media_id", pa.string()), ("doc_id", pa.string()),
-            ("media_ref", pa.string()), ("content", pa.binary()),
-        ])
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            dids = batch.column("doc_id").to_pylist()
-            refs = batch.column("media_ref").to_pylist()
-            ws = batch.column("w").to_pylist()
-            hs = batch.column("h").to_pylist()
-            blobs = [
-                encode_fake_image(w or 1, h or 1, seed=len(i))
-                for i, w, h in zip(ids, ws, hs)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(dids), pa.array(refs),
-                 pa.array(blobs, pa.binary())],
-                schema=out_schema,
-            )
+    def _encode(media_id, doc_id, media_ref, w, h) -> Iterator[tuple]:
+        content = encode_fake_image(w or 1, h or 1, seed=len(media_id))
+        yield media_id, doc_id, media_ref, content
 
-    return with_dims.mapInArrow(_encode, schema=MEDIA_SCHEMA)
+    return with_dims.mapInArrow(row_kernel(MEDIA_SCHEMA, _encode),
+                                schema=MEDIA_SCHEMA)
 
 
 # --- transform kernels -------------------------------------------------------
-
-RESIZED_ARROW = pa.schema([
-    ("media_id", pa.string()),
-    ("content", pa.binary()),
-    ("width", pa.int32()),
-    ("height", pa.int32()),
-])
 
 RESIZED_SCHEMA = T.StructType([
     T.StructField("media_id", T.StringType()),
@@ -185,39 +134,23 @@ def resize_media(media: DataFrame, max_side: int = 512) -> DataFrame:
     through unchanged. The kernel shape (binary in -> binary out, Arrow
     batches) is exactly what a PIL/libvips body would use."""
 
-    def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            blobs = batch.column("content").to_pylist()
-            out_blobs, ws, hs = [], [], []
-            for blob in blobs:
-                if blob is None or blob[:6] != MAGIC:
-                    out_blobs.append(blob)
-                    ws.append(None)
-                    hs.append(None)
-                    continue
-                w, h, c = struct.unpack(">IIH", blob[6:16])
-                scale = max(w, h) / max_side
-                if scale <= 1:
-                    nw, nh = w, h
-                    body = blob[16:]
-                else:
-                    nw, nh = max(1, int(w / scale)), max(1, int(h / scale))
-                    step = max(1, int(scale))
-                    body = blob[16::step]
-                out_blobs.append(
-                    MAGIC + struct.pack(">IIH", nw, nh, c) + body
-                )
-                ws.append(nw)
-                hs.append(nh)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(out_blobs, pa.binary()),
-                 pa.array(ws, pa.int32()), pa.array(hs, pa.int32())],
-                schema=RESIZED_ARROW,
-            )
+    def _resize(media_id, blob) -> Iterator[tuple]:
+        if blob is None or blob[:6] != MAGIC:
+            yield media_id, blob, None, None
+            return
+        w, h, c = struct.unpack(">IIH", blob[6:16])
+        scale = max(w, h) / max_side
+        if scale <= 1:
+            nw, nh = w, h
+            body = blob[16:]
+        else:
+            nw, nh = max(1, int(w / scale)), max(1, int(h / scale))
+            step = max(1, int(scale))
+            body = blob[16::step]
+        yield media_id, MAGIC + struct.pack(">IIH", nw, nh, c) + body, nw, nh
 
     return media.select("media_id", "content").mapInArrow(
-        _kernel, schema=RESIZED_SCHEMA
+        row_kernel(RESIZED_SCHEMA, _resize), schema=RESIZED_SCHEMA
     )
 
 
@@ -228,46 +161,28 @@ FEATURES_SCHEMA = T.StructType([
     T.StructField("feature", T.ArrayType(T.FloatType())),
 ])
 
-FEATURES_ARROW = pa.schema([
-    ("media_id", pa.string()),
-    ("feature", pa.list_(pa.float32())),
-])
+
+def _feature_row(media_id, blob) -> Iterator[tuple]:
+    body = (blob or b"")[16:2048 + 16]
+    # numpy bincount == the per-byte `hist[b % 8] += 1` loop
+    arr = np.frombuffer(body, dtype=np.uint8)
+    hist = np.bincount(arr % FEATURE_DIM, minlength=FEATURE_DIM)
+    total = max(1, int(hist.sum()))
+    yield media_id, [round(int(v) / total, 6) for v in hist]
 
 
 def media_features(media: DataFrame) -> DataFrame:
     """Deterministic byte-histogram feature per media row (stand-in for a
     real vision encoder — offline stub; the Arrow plumbing, batch shape and
     array<float> output column are production-real and feed t2p_spark.ann)."""
-
-    def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            blobs = batch.column("content").to_pylist()
-            feats = []
-            for blob in blobs:
-                body = (blob or b"")[16:2048 + 16]
-                # numpy bincount == the per-byte `hist[b % 8] += 1` loop
-                arr = np.frombuffer(body, dtype=np.uint8)
-                hist = np.bincount(arr % FEATURE_DIM, minlength=FEATURE_DIM)
-                total = max(1, int(hist.sum()))
-                feats.append([round(int(v) / total, 6) for v in hist])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(feats, pa.list_(pa.float32()))],
-                schema=FEATURES_ARROW,
-            )
-
     return media.select("media_id", "content").mapInArrow(
-        _kernel, schema=FEATURES_SCHEMA
+        row_kernel(FEATURES_SCHEMA, _feature_row), schema=FEATURES_SCHEMA
     )
 
 
 PHASH_SCHEMA = T.StructType([
     T.StructField("media_id", T.StringType()),
     T.StructField("phash", T.LongType()),
-])
-PHASH_ARROW = pa.schema([
-    ("media_id", pa.string()),
-    ("phash", pa.int64()),
 ])
 
 
@@ -280,6 +195,17 @@ PHASH_ARROW = pa.schema([
 PHASH_STRIDE, PHASH_OFFSET = 233, 97
 
 
+def _phash_row(media_id, blob) -> Iterator[tuple]:
+    body = (blob or b"")[16:2048 + 16]
+    ph = 0
+    for b in range(FEATURE_DIM):
+        p = PHASH_STRIDE * b
+        q = p + PHASH_OFFSET
+        if q < len(body) and body[p] > body[q]:
+            ph |= 1 << b
+    yield media_id, ph
+
+
 def media_phash(media: DataFrame) -> DataFrame:
     """Perceptual-hash-style media fingerprint — the dHash recipe (bit =
     sampled cell brighter than its neighbor) over the decoded byte stream;
@@ -289,28 +215,8 @@ def media_phash(media: DataFrame) -> DataFrame:
     Pure integer comparisons, so the DuckDB oracle replays it bit-for-bit
     from (media_id, W, H). Near-dup media dedup then clusters on the
     fingerprint — no pairwise compare anywhere."""
-
-    def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            blobs = batch.column("content").to_pylist()
-            hashes = []
-            for blob in blobs:
-                body = (blob or b"")[16:2048 + 16]
-                ph = 0
-                for b in range(FEATURE_DIM):
-                    p = PHASH_STRIDE * b
-                    q = p + PHASH_OFFSET
-                    if q < len(body) and body[p] > body[q]:
-                        ph |= 1 << b
-                hashes.append(ph)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(hashes, pa.int64())],
-                schema=PHASH_ARROW,
-            )
-
     return media.select("media_id", "content").mapInArrow(
-        _kernel, schema=PHASH_SCHEMA
+        row_kernel(PHASH_SCHEMA, _phash_row), schema=PHASH_SCHEMA
     )
 
 
@@ -325,30 +231,12 @@ def frame_sample(media: DataFrame, every_n: int = 4,
         T.StructField("frame_idx", T.IntegerType()),
         T.StructField("frame", T.BinaryType()),
     ])
-    out_arrow = pa.schema([
-        ("media_id", pa.string()),
-        ("frame_idx", pa.int32()),
-        ("frame", pa.binary()),
-    ])
 
-    def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            blobs = batch.column("content").to_pylist()
-            o_ids, o_idx, o_frames = [], [], []
-            for mid, blob in zip(ids, blobs):
-                body = (blob or b"")[16:]
-                n_frames = len(body) // frame_bytes
-                for i in range(0, n_frames, every_n):
-                    o_ids.append(mid)
-                    o_idx.append(i)
-                    o_frames.append(body[i * frame_bytes:(i + 1) * frame_bytes])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_ids), pa.array(o_idx, pa.int32()),
-                 pa.array(o_frames, pa.binary())],
-                schema=out_arrow,
-            )
+    def _frames(media_id, blob) -> Iterator[tuple]:
+        body = (blob or b"")[16:]
+        for i in range(0, len(body) // frame_bytes, every_n):
+            yield media_id, i, body[i * frame_bytes:(i + 1) * frame_bytes]
 
     return media.select("media_id", "content").mapInArrow(
-        _kernel, schema=out_schema
+        row_kernel(out_schema, _frames), schema=out_schema
     )

@@ -21,14 +21,13 @@ Skew strategy (north_rule "pathological many-block documents"):
 Oversized-payload guard (the Arrow row limit): a single document whose
 serialized payload approaches the Arrow string/int32 offset range (~2GB)
 cannot cross mapInArrow — Spark cannot split a row, so one such doc would
-fail the whole stage. ``assemble_payload`` therefore caps the payload BY
-DEFAULT for every consumer (extract, the extraction stream, the PAGE-XML
-renderer, the multi-page splitter): the byte count is computed column-side
-(a codegen ``aggregate`` over span lengths — the giant string itself is
-NEVER materialized, CASE WHEN branch-skips the array_join) and the
-extract/split kernels quarantine the marked row with ``PayloadTooLarge``
-instead of crashing. Default cap 1GiB leaves 2x headroom under the hard
-int32 limit.
+fail the whole stage. ``assemble_payload`` therefore caps the payload for
+every consumer (extract, the extraction stream, the PAGE-XML renderer, the
+multi-page splitter): the byte count is computed column-side (a codegen
+``aggregate`` over span lengths — the giant string itself is NEVER
+materialized, CASE WHEN branch-skips the array_join) and every kernel
+quarantines the marked row with ``PayloadTooLarge`` instead of crashing.
+Default cap 1GiB leaves 2x headroom under the hard int32 limit.
 
 Everything before/after the kernel is whole-stage-codegen Column ops —
 ``.explain()`` shows one scan, at most one explicit exchange, the kernel,
@@ -38,7 +37,7 @@ and the write.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from t2p_spark.kernel import extract_kernel
 from t2p_spark.schema import EXTRACTED_SCHEMA
@@ -49,9 +48,13 @@ DEFAULT_BUCKETS = 64
 MAX_PAYLOAD_BYTES = 1 << 30
 
 
+def bucket_of(n_buckets: int = DEFAULT_BUCKETS) -> Column:
+    """The output bucket of a doc: ``pmod(xxhash64(doc_id), n_buckets)``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def assemble_payload(docs: DataFrame,
-                     max_payload_bytes: int | None = MAX_PAYLOAD_BYTES
-                     ) -> DataFrame:
+                     max_payload_bytes: int = MAX_PAYLOAD_BYTES) -> DataFrame:
     """Column-only: interleaved spans -> (doc_id, width, height, media_ref, json_text).
 
     Encoding per FIXTURES.md §1: the 'media' span carries "WxH" pixel dims in
@@ -59,16 +62,13 @@ def assemble_payload(docs: DataFrame,
     PIL lookup, convert_aws.py:720-723); 'text' spans concatenate to the
     Textract JSON in `offset` order.
 
-    The Arrow-row-limit guard is ON BY DEFAULT for every consumer (extract,
-    the extraction stream, the PAGE-XML renderer, the multi-page splitter):
-    a ``payload_bytes`` column is added that is non-NULL exactly for docs
+    The Arrow-row-limit guard holds for every consumer (extract, the
+    extraction stream, the PAGE-XML renderer, the multi-page splitter): a
+    ``payload_bytes`` column is added that is non-NULL exactly for docs
     whose concatenated text payload exceeds the cap; for those rows
     ``json_text`` stays NULL and the oversized string is never built (CASE
-    WHEN short-circuits the array_join). The extract/split kernels turn the
-    marker into a ``PayloadTooLarge`` quarantine row; kernels that ignore
-    the marker still quarantine on the NULL payload instead of dying on the
-    Arrow int32 offset overflow. ``max_payload_bytes=None`` disables the
-    guard (uncapped — the pre-guard behavior).
+    WHEN short-circuits the array_join). ``kernel.decode_payloads`` turns
+    the marker into a ``PayloadTooLarge`` quarantine reason.
     """
     # try_element_at: a doc without a media span yields NULL dims and is
     # quarantined by the kernel rather than failing the stage
@@ -91,8 +91,6 @@ def assemble_payload(docs: DataFrame,
         F.element_at(dims, 2).cast("int").alias("height"),
         F.coalesce(media["media_ref"], F.lit("")).alias("media_ref"),
     ]
-    if max_payload_bytes is None:
-        return docs.select(*cols, json_text.alias("json_text"))
     # codegen fold over span byte lengths — O(spans), never builds the string
     payload_bytes = F.aggregate(
         text_spans,
@@ -124,9 +122,7 @@ def extract(docs: DataFrame, parallelism: int | None = None,
         assembled = assembled.repartition(parallelism * 4, "doc_id")
 
     out = assembled.mapInArrow(extract_kernel, schema=EXTRACTED_SCHEMA)
-    return out.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    return out.withColumn("bucket", bucket_of(n_buckets))
 
 
 def extracted_metrics(extracted: DataFrame) -> DataFrame:

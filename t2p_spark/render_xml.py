@@ -16,7 +16,7 @@ the same normalization the reference's own test applies
 generateDS's '%.15g' rendering (verified against the goldens).
 
 OFF the extraction hot path: rendering is a separate per-doc kernel
-(render_kernel) — the span pipeline never pays for XML.
+(``render_pagexml_df``) — the span pipeline never pays for XML.
 """
 
 from __future__ import annotations
@@ -26,7 +26,11 @@ import io
 import xml.etree.ElementTree as ET
 from typing import Iterator, Optional
 
+import pyspark.sql.types as T
+
 from t2p_spark.convert import Layout, Table, build_model, points_from_geometry
+from t2p_spark.kernel import decode_payloads, row_kernel
+from t2p_spark.pipeline import MAX_PAYLOAD_BYTES, assemble_payload
 
 NS_PC = "http://schema.primaresearch.org/PAGE/gts/pagecontent/2019-07-15"
 NS_XSI = "http://www.w3.org/2001/XMLSchema-instance"
@@ -282,68 +286,35 @@ def canonical_md5(xml_text: str) -> str:
 
 # --- Spark surface -----------------------------------------------------------
 
-RENDERED_SCHEMA = ("doc_id string, status string, n_bytes int, "
-                   "canon_md5 string")
+RENDERED_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("status", T.StringType()),
+    T.StructField("n_bytes", T.IntegerType()),
+    T.StructField("canon_md5", T.StringType()),
+])
 
 
-def render_kernel(batches) -> Iterator:
-    """mapInArrow kernel: assembled doc batches -> rendered PAGE-XML
-    fingerprints (same batch shape as the extract kernel; quarantine
-    semantics identical — the model build raises exactly where the span
-    path does)."""
-    import json as _json
-
-    import pyarrow as pa
-
-    try:
-        import orjson
-
-        loads = orjson.loads
-    except ImportError:  # pragma: no cover
-        loads = _json.loads
-
-    for batch in batches:
-        doc_ids = batch.column("doc_id").to_pylist()
-        widths = batch.column("width").to_pylist()
-        heights = batch.column("height").to_pylist()
-        media_refs = batch.column("media_ref").to_pylist()
-        payloads = batch.column("json_text").to_pylist()
-        out_status, out_bytes, out_md5 = [], [], []
-        for doc_id, w, h, m, p in zip(doc_ids, widths, heights,
-                                      media_refs, payloads):
-            try:
-                if w is None or h is None or not p:
-                    raise ValueError("missing media dims or payload")
-                aws = loads(p)
-                if not isinstance(aws, dict):
-                    raise ValueError("payload is not a JSON object")
-                xml = render_page_xml(aws, w, h, m or "")
-            except Exception:  # noqa: BLE001 — reference crash paths
-                out_status.append("quarantined")
-                out_bytes.append(0)
-                out_md5.append("")
-            else:
-                out_status.append("ok")
-                out_bytes.append(len(xml.encode()))
-                out_md5.append(canonical_md5(xml))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(doc_ids), pa.array(out_status),
-             pa.array(out_bytes, pa.int32()), pa.array(out_md5)],
-            names=["doc_id", "status", "n_bytes", "canon_md5"],
-        )
+def _render_row(doc_id, width, height, media_ref, _json_text, aws,
+                reason) -> Iterator[tuple]:
+    """One decoded doc -> its rendered PAGE-XML fingerprint; quarantine
+    semantics identical to the extract kernel — the model build raises
+    exactly where the span path does."""
+    if reason is None:
+        try:
+            xml = render_page_xml(aws, width, height, media_ref or "")
+        except Exception:  # noqa: BLE001 — reference crash paths
+            pass
+        else:
+            yield doc_id, "ok", len(xml.encode()), canonical_md5(xml)
+            return
+    yield doc_id, "quarantined", 0, ""
 
 
-def render_pagexml_df(docs, max_payload_bytes=None):
+def render_pagexml_df(docs, max_payload_bytes: int = MAX_PAYLOAD_BYTES):
     """docs(doc_id, spans) -> (doc_id, status, n_bytes, canon_md5).
 
-    Inherits assemble_payload's default Arrow-row-limit cap: an oversized
-    doc renders as status=quarantined (NULL payload path) instead of
-    overflowing the Arrow string column and killing the stage. Pass
-    ``max_payload_bytes`` to override the default cap."""
-    from t2p_spark import pipeline
-
-    if max_payload_bytes is None:
-        max_payload_bytes = pipeline.MAX_PAYLOAD_BYTES
-    assembled = pipeline.assemble_payload(
-        docs, max_payload_bytes=max_payload_bytes)
-    return assembled.mapInArrow(render_kernel, schema=RENDERED_SCHEMA)
+    A doc over ``max_payload_bytes`` renders as status=quarantined instead
+    of overflowing the Arrow string column and killing the stage."""
+    return assemble_payload(docs, max_payload_bytes).mapInArrow(
+        row_kernel(RENDERED_SCHEMA, _render_row, decode_payloads),
+        schema=RENDERED_SCHEMA)

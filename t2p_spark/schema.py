@@ -1,10 +1,7 @@
-"""Fixed schemas: Textract payload, span struct, docs/extracted tables.
+"""Fixed schemas: the span struct and the docs/extracted tables.
 
-The Textract response schema is *closed*: the reference's bucketing switch
-(reference convert_aws.py:769-792) enumerates every consumed BlockType and
-field, so we parse with one explicit StructType — never per-file inference
-(10^12-doc scale forbids ``spark.read.json`` schema sampling), and column
-pruning through ``from_json`` stays effective.
+The Textract payload has no Spark schema: the kernel parses it in Python
+(orjson), which BENCH/BASELINE.md measured faster than JVM ``from_json``.
 """
 
 from __future__ import annotations
@@ -33,48 +30,4 @@ EXTRACTED_SCHEMA = T.StructType([
     T.StructField("n_blocks", T.IntegerType()),
     T.StructField("n_spans", T.IntegerType()),
     T.StructField("span_fp", T.LongType()),
-])
-
-# --- Textract response (SURVEY.md §1.1 / FIXTURES.md §2) --------------------
-
-GEOMETRY_STRUCT = T.StructType([
-    T.StructField("BoundingBox", T.StructType([
-        T.StructField("Left", T.DoubleType()),
-        T.StructField("Top", T.DoubleType()),
-        T.StructField("Width", T.DoubleType()),
-        T.StructField("Height", T.DoubleType()),
-    ])),
-    T.StructField("Polygon", T.ArrayType(T.StructType([
-        T.StructField("X", T.DoubleType()),
-        T.StructField("Y", T.DoubleType()),
-    ]))),
-])
-
-BLOCK_STRUCT = T.StructType([
-    T.StructField("Id", T.StringType()),
-    T.StructField("BlockType", T.StringType()),
-    T.StructField("Confidence", T.DoubleType()),
-    T.StructField("Text", T.StringType()),
-    T.StructField("TextType", T.StringType()),
-    T.StructField("Page", T.IntegerType()),
-    T.StructField("SelectionStatus", T.StringType()),
-    T.StructField("EntityTypes", T.ArrayType(T.StringType())),
-    T.StructField("RowIndex", T.IntegerType()),
-    T.StructField("ColumnIndex", T.IntegerType()),
-    T.StructField("RowSpan", T.IntegerType()),
-    T.StructField("ColumnSpan", T.IntegerType()),
-    T.StructField("Geometry", GEOMETRY_STRUCT),
-    T.StructField("Relationships", T.ArrayType(T.StructType([
-        T.StructField("Type", T.StringType()),
-        T.StructField("Ids", T.ArrayType(T.StringType())),
-    ]))),
-])
-
-TEXTRACT_SCHEMA = T.StructType([
-    T.StructField("DocumentMetadata", T.StructType([
-        T.StructField("Pages", T.IntegerType()),
-    ])),
-    T.StructField("JobStatus", T.StringType()),
-    T.StructField("AnalyzeDocumentModelVersion", T.StringType()),
-    T.StructField("Blocks", T.ArrayType(BLOCK_STRUCT)),
 ])

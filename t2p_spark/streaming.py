@@ -4,10 +4,11 @@ The reference is a batch converter (no streaming anywhere, SURVEY.md §2.7);
 these are the natural streaming extensions a continuously-ingesting corpus
 needs, built on the same kernels so batch/stream semantics are identical:
 
-  - ``extract_stream``: the extraction pipeline as a stream — readStream
-    over the docs table, the same ``extract_kernel`` via mapInArrow,
-    per-microbatch bucket metrics through foreachBatch. Exactly-once lands
-    on the same per-bucket idempotent commit as the batch job.
+  - ``run_extract_stream``: the extraction pipeline as a stream —
+    ``pipeline.extract`` over a readStream of the docs table, written by
+    a foreachBatch sink partitioned by (batch_id, bucket) with dynamic
+    partition overwrite, so a retried microbatch rewrites exactly its own
+    output. The stream writes no metrics table.
   - ``events_tumbling_stream``: watermarked tumbling-window aggregation of
     the events table (streaming twin of the batch
     ``events_tumbling_hour`` query; late data dropped past 2h).
@@ -23,9 +24,8 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from t2p_spark.kernel import extract_kernel
-from t2p_spark.pipeline import assemble_payload
-from t2p_spark.schema import DOCS_SCHEMA, EXTRACTED_SCHEMA
+from t2p_spark.pipeline import MAX_PAYLOAD_BYTES, extract
+from t2p_spark.schema import DOCS_SCHEMA
 
 
 def read_docs_stream(spark: SparkSession, path: str,
@@ -37,39 +37,17 @@ def read_docs_stream(spark: SparkSession, path: str,
     )
 
 
-def extract_stream(docs_stream: DataFrame,
-                   max_payload_bytes: int | None = None) -> DataFrame:
-    """Streaming extraction: same Column-only assembly + Arrow kernel.
-
-    No shuffle inside the stream — one stage per microbatch; bucket
-    assignment happens in foreachBatch at sink time (see run_extract_stream).
-    Oversized docs quarantine (PayloadTooLarge) exactly as in batch extract —
-    one pathological arriving doc must not kill the long-running stream.
-    ``max_payload_bytes`` defaults to the batch cap (pipeline 1GiB).
-    """
-    from t2p_spark.pipeline import MAX_PAYLOAD_BYTES
-
-    if max_payload_bytes is None:
-        max_payload_bytes = MAX_PAYLOAD_BYTES
-    assembled = assemble_payload(docs_stream,
-                                 max_payload_bytes=max_payload_bytes)
-    return assembled.mapInArrow(extract_kernel, schema=EXTRACTED_SCHEMA)
-
-
 def write_extract_batch(batch_df: DataFrame, batch_id: int,
                         output_path: str) -> None:
-    """Idempotent microbatch sink: partitioned by (batch_id, bucket) with
-    dynamic partition overwrite, so a retried microbatch rewrites exactly
-    its own batch_id partitions — at-least-once delivery becomes
-    effectively-once durable output."""
+    """Idempotent microbatch sink for ``pipeline.extract`` output:
+    partitioned by (batch_id, bucket) with dynamic partition overwrite, so
+    a retried microbatch rewrites exactly its own batch_id partitions —
+    at-least-once delivery becomes effectively-once durable output."""
     batch_df.sparkSession.conf.set(
         "spark.sql.sources.partitionOverwriteMode", "dynamic"
     )
     (batch_df
      .withColumn("batch_id", F.lit(batch_id))
-     .withColumn(
-         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int")
-     )
      .write.mode("overwrite")
      .partitionBy("batch_id", "bucket")
      .parquet(output_path))
@@ -77,9 +55,13 @@ def write_extract_batch(batch_df: DataFrame, batch_id: int,
 
 def run_extract_stream(spark: SparkSession, input_path: str, output_path: str,
                        checkpoint_path: str, available_now: bool = True,
-                       max_payload_bytes: int | None = None):
+                       max_payload_bytes: int = MAX_PAYLOAD_BYTES):
     """availableNow=True drains the current table once (backfill mode);
     False tails it continuously.
+
+    No shuffle inside the stream — one stage per microbatch. Oversized docs
+    quarantine (PayloadTooLarge) exactly as in batch extract: one
+    pathological arriving doc must not kill the long-running stream.
 
     Exactly-once: foreachBatch is at-least-once — on retry after a partial
     write the whole microbatch re-runs — so the sink must dedupe on batch_id.
@@ -87,8 +69,8 @@ def run_extract_stream(spark: SparkSession, input_path: str, output_path: str,
     a retry rewrite exactly its own batch_id partitions and nothing else:
     idempotent per microbatch, append across microbatches.
     """
-    out = extract_stream(read_docs_stream(spark, input_path),
-                         max_payload_bytes=max_payload_bytes)
+    out = extract(read_docs_stream(spark, input_path),
+                  max_payload_bytes=max_payload_bytes)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         write_extract_batch(batch_df, batch_id, output_path)
@@ -276,11 +258,11 @@ def _next_qname(prefix: str) -> str:
 
 
 @contextlib.contextmanager
-def _checkpoint():
-    """A fresh checkpoint dir for one drain, removed when the block exits:
-    the memory sink then holds the output and the drains here are never
-    resumed."""
-    ck = tempfile.mkdtemp(prefix="t2p_ck_")
+def _checkpoint(prefix: str = "t2p_ck_"):
+    """A fresh temp dir for one drain (its checkpoint, or the dedup
+    screen's replay input), removed when the block exits: the memory sink
+    then holds the output and the drains here are never resumed."""
+    ck = tempfile.mkdtemp(prefix=prefix)
     try:
         yield ck
     finally:
@@ -366,16 +348,17 @@ def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
     path, schema = _stage_chronological_chunks(spark, sf_dir)
-    dup_dir = tempfile.mkdtemp(prefix="t2p_events_dup_")
-    for f in glob.glob(f"{path}/*.parquet"):
-        shutil.copy(f, dup_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    (ev.where("CAST(CONV(SUBSTRING(md5(CAST(event_id AS STRING)), 1, 8), "
-              "16, 10) AS BIGINT) % 100 < 5")
-     .coalesce(1).write.mode("append").parquet(dup_dir))
-
     qname = _next_qname("dedup_streamed")
-    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
+    # the replay dir is removed once the drain returns: the memory sink
+    # holds the output
+    with _stream_shuffle_partitions(spark), _checkpoint() as ck, \
+            _checkpoint("t2p_events_dup_") as dup_dir:
+        for f in glob.glob(f"{path}/*.parquet"):
+            shutil.copy(f, dup_dir)
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        (ev.where("CAST(CONV(SUBSTRING(md5(CAST(event_id AS STRING)), 1, 8), "
+                  "16, 10) AS BIGINT) % 100 < 5")
+         .coalesce(1).write.mode("append").parquet(dup_dir))
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)

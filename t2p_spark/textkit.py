@@ -115,7 +115,6 @@ def _wide(expr: str, engine: str) -> str:
 N_MINHASH = 8  # bands = n/2 (2 rows per band)
 SIMHASH_BITS = 60       # fixed: fits signed BIGINT
 SIMHASH_BANDS = 4       # band_bits = 60/bands; hamming_max = bands-1
-SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
 HAMMING_MAX = 3         # <= bands-1 differing bits guarantees a shared band
 # Shingles appearing in more documents than this are dropped before the
 # Jaccard inverted-index self-join: one hot shingle ("in the of the")

@@ -52,7 +52,6 @@ def test_ingest_json_dir_roundtrip(spark, tmp_path):
 @needs_reference
 def test_streaming_ingest_extract(spark, tmp_path):
     """JSON landing zone as a stream -> extraction stream == goldens."""
-    from t2p_spark.streaming import extract_stream
 
     json_dir = str(tmp_path / "responses")
     (tmp_path / "responses").mkdir()
@@ -67,7 +66,7 @@ def test_streaming_ingest_extract(spark, tmp_path):
     )
     stream = docs_from_json_dir(spark, json_dir, dims, streaming=True)
     q = (
-        extract_stream(stream)
+        extract(stream)
         .writeStream.format("memory").queryName("ingest_stream")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck"))
@@ -225,3 +224,25 @@ def test_split_two_generated_pages(spark):
         text = "".join(s["text"] for s in row["spans"][1:])
         assert convert_doc(json.loads(text), w, h, media) == \
             convert_doc(aws, w, h, media), doc_id
+
+
+def test_split_quarantine_reasons_match_extract(spark):
+    """A doc without media dims, an empty payload and a non-object payload
+    quarantine in the splitter with exactly the extract kernel's reasons."""
+    from t2p_spark.ingest import split_multipage
+    from t2p_spark.schema import DOCS_SCHEMA
+
+    docs = spark.createDataFrame([
+        ("nodims", [("text", '{"Blocks": []}', "", 1)]),
+        ("empty", [("media", "10x10", "m.jpg", 0)]),
+        ("list", [("media", "10x10", "m.jpg", 0), ("text", "[1,2]", "", 1)]),
+    ], schema=DOCS_SCHEMA)
+    split = {r["doc_id"]: (r["status"], r["error"])
+             for r in split_multipage(docs).collect()}
+    extracted = {r["doc_id"]: (r["status"], r["error"])
+                 for r in extract(docs).collect()}
+    assert split == extracted
+    assert split["nodims"][1].startswith("InvalidDoc")
+    assert split["empty"][1].startswith("InvalidDoc")
+    assert split["list"][1] == \
+        "JSONDecodeError: payload is JSON list, not an object"

@@ -193,14 +193,22 @@ def test_split_doc_never_raises(doc):
     task at corpus scale)."""
     import json
 
-    from t2p_spark.ingest import _split_doc
+    import pyarrow as pa
 
-    rows = _split_doc("d", 100, 100, "m.jpg", json.dumps(doc), 1 << 20)
+    from t2p_spark.ingest import split_kernel
+
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": ["d"], "width": pa.array([100], pa.int32()),
+        "height": pa.array([100], pa.int32()), "media_ref": ["m.jpg"],
+        "json_text": [json.dumps(doc)]})
+    rows = [r for out in split_kernel(1 << 20)(iter([batch]))
+            for r in out.to_pylist()]
     assert rows, "must emit at least one row"
-    for doc_id, spans, status, error in rows:
+    for row in rows:
+        spans, status, error = row["spans"], row["status"], row["error"]
         assert status in ("ok", "quarantined")
         if status == "ok":
-            assert spans[0][0] == "media"
-            assert all(isinstance(s[1], str) for s in spans)
+            assert spans[0]["kind"] == "media"
+            assert all(isinstance(s["text"], str) for s in spans)
         else:
             assert spans == [] and error

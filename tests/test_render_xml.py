@@ -125,6 +125,33 @@ def test_cli_single_file(tmp_path):
         == canonical_md5(ref)
 
 
+def test_cli_reads_png_dims(tmp_path):
+    """Without --image-width/--image-height the CLI reads the dims from
+    the image header (no PIL) and renders what render_page_xml renders."""
+    import struct
+    import zlib
+
+    from t2p_spark.synth import generate_doc
+    from tests.conftest import REPO
+
+    aws, w, h, _ = generate_doc("synthrender-0", 0)
+    src = tmp_path / "doc.json"
+    src.write_text(json.dumps(aws), encoding="utf-8")
+    ihdr = b"IHDR" + struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    png = tmp_path / "page.png"
+    png.write_bytes(b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + ihdr
+                    + struct.pack(">I", zlib.crc32(ihdr)))
+    out = tmp_path / "out.xml"
+    rc = subprocess.run(
+        [sys.executable, "-m", "t2p_spark.cli", str(src), str(png),
+         "-O", str(out)],
+        capture_output=True, text=True, cwd=REPO,
+    )
+    assert rc.returncode == 0, rc.stderr[-500:]
+    assert canonical_md5(out.read_text(encoding="utf-8")) == \
+        canonical_md5(render_page_xml(aws, w, h, str(png)))
+
+
 def test_render_synth_gap_fixtures_pinned():
     """The renderer's behavior on the gap features the 8 reference
     fixtures never exercise (KV regions, LAYOUT_TABLE claiming, merged

@@ -142,6 +142,29 @@ def test_stream_drain_removes_its_checkpoint(spark, monkeypatch):
 
 
 
+def test_dedup_stream_removes_its_replay_dir(spark, monkeypatch):
+    """The dedup screen's redelivery replay dir (t2p_events_dup_*) is gone
+    once the drain returns: the memory sink holds the output."""
+    import tempfile
+
+    from t2p_spark import streaming
+    from tests.test_curate_job import SF
+
+    made = []
+    real = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    out = streaming.dedup_streamed_result(spark, SF)
+    assert out.count() > 0
+    dup = [d for d in made
+           if os.path.basename(d).startswith("t2p_events_dup_")]
+    assert len(dup) == 1
+    assert not os.path.exists(dup[0])
+
 def test_streaming_events_window_equals_batch(spark, tmp_path):
     from t2p_spark.relational import register_views
     from t2p_spark.streaming import run_events_stream

@@ -30,6 +30,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from t2p_spark.pipeline import bucket_of
     from t2p_spark.synth import synth_docs
 
     spark = (
@@ -38,14 +39,12 @@ def main() -> int:
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .getOrCreate()
     )
-    import pyspark.sql.functions as F
-
     # input table layout per FIXTURES.md §1: partitioned by bucket(doc_id)
     # (Iceberg `bucket(N, doc_id)`; dir-per-bucket on the parquet fallback).
     # A bucketed input keeps the whole extract job a single pipelined stage.
     (synth_docs(spark.range(args.n_docs).repartition(args.partitions),
                 args.seed)
-     .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int"))
+     .withColumn("bucket", bucket_of())
      .repartition(64, "bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(args.out))
     n = spark.read.parquet(args.out).count()
