@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import math
 from operator import itemgetter
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Tuple
 
 _GET_XY = itemgetter("X", "Y")
 
@@ -163,6 +163,52 @@ def get_child_ids(block: Dict) -> List[str]:
 # ---------------------------------------------------------------------------
 # block model — minimal mirrors of the reference classes; identity-based
 # equality everywhere except geometry (tuples), exactly like the reference.
+# The model is a tree: objects hold only their downward lists. The
+# reference's upward parent_* attributes live in the per-build _Links.
+
+class _Links:
+    """Upward links of one ``build_model`` call, one dict per parent slot
+    of the reference (``parent_line``, ``parent_cell`` -> its table,
+    ``parent_value``, ``parent_key``, ``parent_layout``), each mapping a
+    Word or Line object to its parent. Keyed by object, not Id: a WORD and
+    a LINE block may share an Id. Written in construction order, so the
+    last constructor wins, as with the reference's attribute writes."""
+    __slots__ = ("line", "table", "value", "key", "layout")
+
+    def __init__(self) -> None:
+        self.line: Dict = {}
+        self.table: Dict = {}
+        self.value: Dict = {}
+        self.key: Dict = {}
+        self.layout: Dict = {}
+
+
+def _link(links: Dict, children: list, parent) -> None:
+    """The reference's ``child.parent_x = parent`` loop: a None child (a
+    child id that resolved to no block) raises AttributeError there."""
+    if None in children:
+        raise AttributeError(
+            f"child of {parent!r} is no block: reference crash path "
+            "(parent link set on None)")
+    links.update(dict.fromkeys(children, parent))
+
+
+def _child_lines(lines: list, words: list, up: _Links) -> list:
+    """Append the words' lines to ``lines`` first-seen (:354-357, :182-184);
+    a word outside any line appends None."""
+    _append_first_seen(lines, map(up.line.get, words))
+    return lines
+
+
+def _check_selection_elements(child_ids, selection_blocks) -> None:
+    """The reference builds a SelectionElement per selection child
+    (:529-554) that no output reads; only its validation is kept."""
+    for i in child_ids:
+        block = selection_blocks.get(i)
+        if block:
+            build_geometry(block.get("Geometry"))  # :130
+            float(block.get("Confidence"))  # :131
+
 
 class _Block:
     __slots__ = ("id", "prefix", "geometry", "confidence")
@@ -173,203 +219,135 @@ class _Block:
         self.geometry = build_geometry(block.get("Geometry"))  # :130
         self.confidence = float(block.get("Confidence")) / 100  # :131
 
+    def __repr__(self) -> str:
+        return f"{type(self).__name__}({self.id!r})"
+
 
 class Word(_Block):
-    __slots__ = ("text", "text_type",
-                 "parent_line", "parent_cell", "parent_layout",
-                 "parent_value", "parent_key")
+    __slots__ = ("text", "text_type")
 
     def __init__(self, block: Dict) -> None:  # :406-421
         self._base(block, "textract-word")
         self.text = block.get("Text")
         self.text_type = TEXT_TYPE_MAP.get(block.get("TextType"))
-        self.parent_line = None
-        self.parent_cell = None
-        self.parent_layout = None
-        self.parent_value = None
-        self.parent_key = None
 
 
 class Line(_Block):
-    __slots__ = ("text", "child_words",
-                 "parent_cell", "parent_layout", "parent_value", "parent_key")
+    __slots__ = ("text", "child_words")
 
-    def __init__(self, block: Dict, words: Dict[str, Word]) -> None:  # :273-292
+    def __init__(self, block: Dict, words: Dict[str, Word], up: _Links) -> None:  # :273-292
         self._base(block, "textract-line")
         self.text = block.get("Text")
-        # :284-286 — no None-filter: a non-WORD child id yields None and the
-        # backref loop crashes (AttributeError), like the reference.
+        # :284-288 — no None-filter: a non-WORD child id yields None and the
+        # parent link crashes (AttributeError), like the reference.
         self.child_words = [words.get(i) for i in get_child_ids(block)]
-        for word in self.child_words:
-            word.parent_line = self  # :287-288
-        self.parent_cell = None
-        self.parent_layout = None
-        self.parent_value = None
-        self.parent_key = None
-
-
-class SelectionElement(_Block):
-    __slots__ = ("selected", "parent_cell", "parent_value")
-
-    def __init__(self, block: Dict, parent_cell=None, parent_value=None) -> None:  # :529-554
-        self._base(block, "textract-selection-element")
-        self.selected = block.get("SelectionStatus") == "SELECTED"
-        self.parent_cell = parent_cell
-        self.parent_value = parent_value
+        _link(up.line, self.child_words, self)
 
 
 class _Cell(_Block):
-    __slots__ = ("parent_table", "row_index", "column_index", "row_span",
-                 "column_span", "column_header", "table_title", "table_footer",
-                 "table_section_title", "table_summary")
+    __slots__ = ("row_index", "column_index", "row_span", "column_span",
+                 "column_header")
 
-    def _cell_base(self, block: Dict, parent_table, prefix: str) -> None:  # :295-312
+    def _cell_base(self, block: Dict, prefix: str) -> None:  # :295-312
         self._base(block, prefix)
-        self.parent_table = parent_table
         self.row_index = int(block["RowIndex"]) - 1
         self.column_index = int(block["ColumnIndex"]) - 1
         self.row_span = int(block["RowSpan"])
         self.column_span = int(block["ColumnSpan"])
-        ents = block.get("EntityTypes") or []
-        self.column_header = "COLUMN_HEADER" in ents
-        self.table_title = "TABLE_TITLE" in ents
-        self.table_footer = "TABLE_FOOTER" in ents
-        self.table_section_title = "TABLE_SECTION_TITLE" in ents
-        self.table_summary = "TABLE_SUMMARY" in ents
+        self.column_header = "COLUMN_HEADER" in (block.get("EntityTypes") or [])
 
 
 class CommonCell(_Cell):
-    __slots__ = ("parent_merged_cell", "child_words", "child_lines",
-                 "child_selection_elements")
+    __slots__ = ("child_lines",)
 
-    def __init__(self, block, parent_table, selection_blocks, words) -> None:  # :331-369
-        self._cell_base(block, parent_table, "textract-cell")
-        self.parent_merged_cell = None
+    def __init__(self, block, table, selection_blocks, words, up) -> None:  # :331-369
+        self._cell_base(block, "textract-cell")
         child_ids = get_child_ids(block)
-        self.child_words = [w for w in map(words.get, child_ids) if w]
-        for word in self.child_words:
-            word.parent_cell = self  # :351-352
-        self.child_lines = []
-        # :354-357 first-seen dedup
-        _append_first_seen(self.child_lines,
-                           (w.parent_line for w in self.child_words))
-        for line in self.child_lines:
-            line.parent_cell = self  # :358-359
-        self.child_selection_elements = [
-            SelectionElement(selection_blocks.get(i), parent_cell=self)
-            for i in child_ids
-            if selection_blocks.get(i)
-        ]
+        child_words = [w for w in map(words.get, child_ids) if w]
+        _link(up.table, child_words, table)  # :351-352
+        self.child_lines = _child_lines([], child_words, up)
+        _link(up.table, self.child_lines, table)  # :358-359
+        _check_selection_elements(child_ids, selection_blocks)
 
 
 class MergedCell(_Cell):
-    __slots__ = ("child_cells", "child_words", "child_lines",
-                 "child_selection_elements")
+    __slots__ = ("child_cells", "child_lines")
 
-    def __init__(self, block, parent_table) -> None:  # :372-403
-        self._cell_base(block, parent_table, "textract-merged-cell")
-        child_cell_ids = get_child_ids(block)
-        self.child_cells = []
-        for cell_id in child_cell_ids:  # :384-389 nested loop, CHILD-id order
-            for cell in parent_table.common_cells:
-                if cell.id == cell_id:
-                    self.child_cells.append(cell)
-                    cell.parent_merged_cell = self
-        self.child_words = [w for c in self.child_cells for w in c.child_words]
+    def __init__(self, block, common_cells) -> None:  # :372-403
+        self._cell_base(block, "textract-merged-cell")
+        # :384-389 nested loop, CHILD-id order
+        self.child_cells = [cell for cell_id in get_child_ids(block)
+                            for cell in common_cells if cell.id == cell_id]
         self.child_lines = [l for c in self.child_cells for l in c.child_lines]
-        self.child_selection_elements = [
-            s for c in self.child_cells for s in c.child_selection_elements
-        ]
 
 
 class Table(_Block):
-    __slots__ = ("structured", "common_cells", "merged_cells",
-                 "ordered_lines", "rows", "columns", "parent_layout")
+    __slots__ = ("cells", "rows", "columns")
 
     def __init__(self, block, cell_blocks, merged_cell_blocks,
-                 selection_blocks, words) -> None:  # :199-270
+                 selection_blocks, words, up) -> None:  # :199-270
         self._base(block, "textract-table")
-        self.structured = "STRUCTURED_TABLE" in (block.get("EntityTypes") or [])
+        # :201 — the STRUCTURED_TABLE probe (its flag is never read) raises
+        # TypeError on a non-container EntityTypes
+        "STRUCTURED_TABLE" in (block.get("EntityTypes") or [])
         child_ids = get_child_ids(block)
         # :237-246 left-semi: ids not in cell_blocks are dropped
-        self.common_cells = [
-            CommonCell(cell_blocks[i], self, selection_blocks, words)
+        common_cells = [
+            CommonCell(cell_blocks[i], self, selection_blocks, words, up)
             for i in child_ids
             if cell_blocks.get(i)
         ]
-        self.merged_cells = [
-            MergedCell(merged_cell_blocks[i], self)
-            for i in child_ids
-            if merged_cell_blocks.get(i)
-        ]
-        self.ordered_lines = [
-            l for cell in self.common_cells for l in cell.child_lines
-        ]
+        merged_of = {}  # :384-389 — the last merged cell claiming a cell wins
+        for i in child_ids:
+            if merged_cell_blocks.get(i):
+                merged = MergedCell(merged_cell_blocks[i], common_cells)
+                merged_of.update(dict.fromkeys(merged.child_cells, merged))
+        # the emitted cells (:1116-1123): each merged cell once, in place of
+        # its first child cell
+        self.cells = list(dict.fromkeys(
+            merged_of.get(c, c) for c in common_cells))
         # :262-269 — max() raises on a cell-less table (quarantine, §2.8)
-        self.rows = max(c.row_index for c in self.common_cells) + 1
-        self.columns = max(c.column_index for c in self.common_cells) + 1
-        self.parent_layout = None
+        self.rows = max(c.row_index for c in common_cells) + 1
+        self.columns = max(c.column_index for c in common_cells) + 1
 
 
 class Value(_Block):
-    __slots__ = ("child_selection_elements", "associated_key",
-                 "child_words", "child_lines")
+    __slots__ = ()
 
-    def __init__(self, block, selection_blocks, words) -> None:  # :424-469
+    def __init__(self, block, selection_blocks, words, up) -> None:  # :424-469
         self._base(block, "textract-value")
-        if "VALUE" not in (block.get("EntityTypes") or []):
-            raise ValueError("not a VALUE block")
         child_ids = get_child_ids(block)
-        self.child_selection_elements = [
-            SelectionElement(selection_blocks.get(i), parent_value=self)
-            for i in child_ids
-            if selection_blocks.get(i)
-        ]
-        self.associated_key = None
-        self.child_words = [w for w in map(words.get, child_ids) if w]
-        for word in self.child_words:
-            word.parent_value = self
-        self.child_lines = []
-        _append_first_seen(self.child_lines,
-                           (w.parent_line for w in self.child_words))
-        for line in self.child_lines:
-            line.parent_value = self
+        _check_selection_elements(child_ids, selection_blocks)
+        child_words = [w for w in map(words.get, child_ids) if w]
+        _link(up.value, child_words, self)
+        _link(up.value, _child_lines([], child_words, up), self)
 
 
 class Key(_Block):
-    __slots__ = ("child_words", "associated_values", "child_lines")
+    __slots__ = ()
 
-    def __init__(self, block, values, words) -> None:  # :472-526
+    def __init__(self, block, values, words, up) -> None:  # :472-526
         self._base(block, "textract-key")
-        if "KEY" not in (block.get("EntityTypes") or []):
-            raise ValueError("not a KEY block")
         rels = block.get("Relationships") or []
-        associated_value_ids: List[str] = []
         if any(r.get("Type") == "VALUE" for r in rels):
-            associated_value_ids = [
+            value_ids = [
                 r.get("Ids") or [] for r in rels if r["Type"] == "VALUE"
             ][0]
-        # :505-509 — a missing value id yields None -> AttributeError
-        self.associated_values = [values.get(i) for i in associated_value_ids]
-        for value in self.associated_values:
-            value.associated_key = self
-        self.child_words = [
-            w for w in map(words.get, get_child_ids(block)) if w
-        ]
-        for word in self.child_words:
-            word.parent_key = self
-        self.child_lines = []
-        _append_first_seen(self.child_lines,
-                           (w.parent_line for w in self.child_words))
-        for line in self.child_lines:
-            line.parent_key = self
+            # :505-509 — a missing value id yields None -> AttributeError
+            if None in [values.get(i) for i in value_ids]:
+                raise AttributeError(
+                    f"{self!r} names a missing VALUE block: reference crash "
+                    "path")
+        child_words = [w for w in map(words.get, get_child_ids(block)) if w]
+        _link(up.key, child_words, self)
+        _link(up.key, _child_lines([], child_words, up), self)
 
 
 class Layout(_Block):
     __slots__ = ("page_layout_type", "textract_layout_type",
-                 "child_lines", "child_regions", "parent_layout")
+                 "child_lines", "child_regions")
 
-    def __init__(self, block, top_blocks, words, lines) -> None:  # :134-196
+    def __init__(self, block, top_blocks, words, lines, up) -> None:  # :134-196
         layout_type = block["BlockType"]
         prefix = "textract-" + layout_type.lower().replace("_", "-")  # :165-167
         self._base(block, prefix)
@@ -377,57 +355,32 @@ class Layout(_Block):
         self.textract_layout_type = layout_type
         child_ids = get_child_ids(block)
         child_words = [w for w in map(words.get, child_ids) if w]
-        for word in child_words:
-            word.parent_layout = self  # :174-175
-        self.child_lines = [x for x in map(lines.get, child_ids) if x]
-        # :182-184 — may append a None parent_line
-        _append_first_seen(self.child_lines,
-                           (w.parent_line for w in child_words))
-        for line in self.child_lines:
-            line.parent_layout = self  # :186-187
+        _link(up.layout, child_words, self)  # :174-175
+        # :182-184 — may append a None line, on which :186-187 crashes
+        self.child_lines = _child_lines(
+            [x for x in map(lines.get, child_ids) if x], child_words, up)
+        _link(up.layout, self.child_lines, self)
         self.child_regions = [
             b for b in map(top_blocks.get, child_ids) if b
         ]
-        self.parent_layout = None
 
 
 # ---------------------------------------------------------------------------
 # reading order — convert_aws.py:634-701
 
-def derive_reading_order(word_list) -> List[object]:
+def derive_reading_order(word_list, up: _Links) -> List[object]:
+    """Each word's line's region, then the word's own region, first-seen.
+    A region is the first set of the table (via the cell), value, key and
+    layout links — later dicts in the merge take precedence."""
+    region_of = {**up.layout, **up.key, **up.value, **up.table}
+    line_of = up.line
     top: List[object] = []
-    seen = set()  # identity-dedup accelerator for the `not in` checks
-
-    def _add(obj) -> None:
-        if id(obj) not in seen:
-            seen.add(id(obj))
-            top.append(obj)
-
+    seen = set()
     for word in word_list:
-        if word.parent_line:
-            line = word.parent_line
-            complex_line_parent = next(
-                (p for p in [
-                    line.parent_cell.parent_table if line.parent_cell else None,
-                    line.parent_value,
-                    line.parent_key,
-                    line.parent_layout,
-                ] if p),
-                False,
-            )
-            if complex_line_parent:
-                _add(complex_line_parent)
-        complex_word_parent = next(
-            (p for p in [
-                word.parent_cell.parent_table if word.parent_cell else None,
-                word.parent_value,
-                word.parent_key,
-                word.parent_layout,
-            ] if p),
-            False,
-        )
-        if complex_word_parent:
-            _add(complex_word_parent)
+        for region in (region_of.get(line_of.get(word)), region_of.get(word)):
+            if region is not None and region not in seen:
+                seen.add(region)
+                top.append(region)
     return top
 
 
@@ -469,14 +422,7 @@ class _Emitter:
             US.join([self._pts(table), str(table.rows), str(table.columns)]),
             "",
         ])
-        visited_merged = []
-        for cell in table.common_cells:
-            merged = cell.parent_merged_cell
-            if merged:
-                if merged in visited_merged:  # :1121 — identity dedup
-                    continue
-                visited_merged.append(merged)
-                cell = merged
+        for cell in table.cells:
             self.out.append([
                 "cell",
                 US.join([
@@ -590,20 +536,21 @@ def build_model(aws_json: Dict) -> _Model:
         # TABLE_TITLE / TABLE_FOOTER blocks are collected but never used by
         # the reference (§2.8.6) — we skip the dead buckets entirely.
 
-    # stage 3: link (:794-841) — construction order defines backref precedence
+    # stage 3: link (:794-841) — construction order defines link precedence
+    up = _Links()
     words = {i: Word(b) for i, b in word_blocks.items()}
-    lines = {i: Line(b, words) for i, b in line_blocks.items()}
+    lines = {i: Line(b, words, up) for i, b in line_blocks.items()}
     tables = {
-        i: Table(b, cell_blocks, merged_cell_blocks, selection_blocks, words)
+        i: Table(b, cell_blocks, merged_cell_blocks, selection_blocks, words, up)
         for i, b in table_blocks.items()
     }
     values = {
-        i: Value(b, selection_blocks, words)
+        i: Value(b, selection_blocks, words, up)
         for i, b in kv_blocks.items()
         if "VALUE" in (b.get("EntityTypes") or [])
     }
     keys = {
-        i: Key(b, values, words)
+        i: Key(b, values, words, up)
         for i, b in kv_blocks.items()
         if "KEY" in (b.get("EntityTypes") or [])
     }
@@ -612,7 +559,8 @@ def build_model(aws_json: Dict) -> _Model:
     top_blocks.update(keys)
     top_blocks.update(values)
     layouts = {
-        i: Layout(b, top_blocks, words, lines) for i, b in layout_blocks.items()
+        i: Layout(b, top_blocks, words, lines, up)
+        for i, b in layout_blocks.items()
     }
 
     # stage 4: de-nest recursive layouts, claim tables (:843-864)
@@ -621,36 +569,33 @@ def build_model(aws_json: Dict) -> _Model:
             if isinstance(child, dict):
                 child_id = child["Id"]
                 assert child_id in layouts
-                layout.child_regions[i] = layouts[child_id]
-                layouts[child_id].parent_layout = layout
-                del layouts[child_id]
+                layout.child_regions[i] = layouts.pop(child_id)
             elif child.id in tables:
-                tables[child.id].parent_layout = layout
                 del tables[child.id]
             # KEY/VALUE claiming is commented out in the reference (:857-864)
 
     # stage 5: repair (:866-909)
     for word in words.values():
-        if word.parent_line or word.parent_cell or word.parent_layout:
+        if word in up.line or word in up.table or word in up.layout:
             continue
         # reference crash path :888 (`lines.append` on a dict) — §2.8.1
         raise AttributeError(
             "dangling word (no line/cell/layout parent): reference crash path"
         )
-    for line in list(lines.values()):
-        if line.parent_cell or line.parent_layout:
+    for line in lines.values():
+        if line in up.table or line in up.layout:
             continue
         dummy_block = dict(line_blocks[line.id])  # :902
         dummy_block["Id"] = line.id + "_parent"
         dummy_block["BlockType"] = "LAYOUT_DUMMY"
-        dummy = Layout(dummy_block, {}, {}, {})
+        dummy = Layout(dummy_block, {}, {}, {}, up)
         dummy.child_lines = [line]
-        line.parent_layout = dummy
+        up.layout[line] = dummy
         block_order[dummy.id] = block_order[line.id]  # :908
         layouts[dummy.id] = dummy
 
     # stage 6: order (:911-941)
-    text_regions = derive_reading_order(words.values())
+    text_regions = derive_reading_order(words.values(), up)
     if any(layouts):
         layout_regions = sorted(layouts.values(), key=lambda o: block_order[o.id])
         for table in tables.values():  # :920-938 table splice

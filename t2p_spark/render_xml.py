@@ -47,6 +47,142 @@ def _conf(value: float) -> str:
     return "%.15g" % value
 
 
+# --- region serialization (:1003-1199) ------------------------------------
+# module-level, not closures in render_page_xml: a recursive closure is a
+# reference cycle that only the cycle collector frees
+
+def _add_text_equiv(parent: ET.Element, block) -> None:
+    if block.text:
+        te = ET.SubElement(parent, "pc:TextEquiv",
+                           {"conf": _conf(block.confidence)})
+        ET.SubElement(te, "pc:Unicode").text = block.text
+
+
+def _add_word(parent: ET.Element, word, pts, id_suffix: str = "") -> None:
+    attrs = {"id": f"{word.prefix}_{word.id}{id_suffix}"}
+    if word.text_type is not None:
+        attrs["production"] = word.text_type
+    w_el = ET.SubElement(parent, "pc:Word", attrs)
+    ET.SubElement(w_el, "pc:Coords", {"points": pts(word)})
+    _add_text_equiv(w_el, word)
+
+
+def _add_line(parent: ET.Element, line, pts, id_suffix: str = "") -> None:
+    l_el = ET.SubElement(parent, "pc:TextLine",
+                         {"id": f"{line.prefix}_{line.id}{id_suffix}"})
+    ET.SubElement(l_el, "pc:Coords", {"points": pts(line)})
+    for word in line.child_words:
+        _add_word(l_el, word, pts, id_suffix)
+    _add_text_equiv(l_el, line)
+
+
+def _inst(block, parent: ET.Element, pts,
+          local_reading_orders: dict) -> Optional[ET.Element]:
+    local_ro = local_reading_orders.get(
+        f"{block.prefix}_{block.id}_reading-order"
+    )
+    local_idx = 0
+
+    if isinstance(block, Layout) and \
+            block.textract_layout_type == "LAYOUT_FIGURE":  # :1018-1054
+        img = ET.SubElement(parent, "pc:ImageRegion", {
+            # type_=page_layout_type is silently dropped by the
+            # reference serializer (ImageRegionType has no @type)
+            "id": f"{block.prefix}_{block.id}",
+            "custom": "textract-layout-type: figure;",
+        })
+        ET.SubElement(img, "pc:Coords", {"points": pts(block)})
+        for line in block.child_lines:
+            line_region_id = f"{line.prefix}_text-region_{line.id}"
+            region = ET.SubElement(img, "pc:TextRegion",
+                                   {"id": line_region_id})
+            ET.SubElement(region, "pc:Coords", {"points": pts(line)})
+            if local_ro is not None:
+                ET.SubElement(local_ro, "pc:RegionRefIndexed", {
+                    "index": str(local_idx), "regionRef": line_region_id,
+                })
+                local_idx += 1
+            _add_line(region, line, pts)
+        assert len(block.child_regions) == 0, \
+            "unexpected AWS layout recursion in LAYOUT_FIGURE"
+        return img
+
+    if isinstance(block, Layout) and \
+            block.textract_layout_type == "LAYOUT_TABLE":  # :1057-1059
+        return None
+
+    if isinstance(block, Layout):  # :1083-1110
+        attrs = {
+            "id": f"{block.prefix}_{block.id}",
+            "type": block.page_layout_type,
+        }
+        if block.textract_layout_type != "LAYOUT_DUMMY":
+            lt = block.textract_layout_type.split("LAYOUT_")[1].lower()
+            attrs["custom"] = f"textract-layout-type: {lt};"
+        region = ET.SubElement(parent, "pc:TextRegion", attrs)
+        ET.SubElement(region, "pc:Coords", {"points": pts(block)})
+        for line in block.child_lines:
+            _add_line(region, line, pts)
+        for child in block.child_regions:
+            assert child.textract_layout_type.startswith("LAYOUT_") and \
+                child.textract_layout_type not in (
+                    "LAYOUT_FIGURE", "LAYOUT_TABLE"), \
+                "unexpected AWS layout recursion"
+            child_el = _inst(child, region, pts, local_reading_orders)
+            if local_ro is not None:
+                ET.SubElement(local_ro, "pc:RegionRefIndexed", {
+                    "index": str(local_idx),
+                    "regionRef": child_el.get("id"),
+                })
+                local_idx += 1
+        return region
+
+    if isinstance(block, Table):  # :1112-1193
+        t_el = ET.SubElement(parent, "pc:TableRegion", {
+            "id": f"{block.prefix}_{block.id}",
+            "rows": str(block.rows),
+            "columns": str(block.columns),
+        })
+        ET.SubElement(t_el, "pc:Coords", {"points": pts(block)})
+        for cell in block.cells:
+            cell_region_id = f"{cell.prefix}_text-region_{cell.id}"
+            region = ET.SubElement(t_el, "pc:TextRegion",
+                                   {"id": cell_region_id})
+            ET.SubElement(region, "pc:Coords", {"points": pts(cell)})
+            roles = ET.SubElement(region, "pc:Roles")
+            ET.SubElement(roles, "pc:TableCellRole", {
+                "rowIndex": str(cell.row_index),
+                "columnIndex": str(cell.column_index),
+                "rowSpan": str(cell.row_span),
+                "colSpan": str(cell.column_span),
+                "header": "true" if cell.column_header else "false",
+            })
+            # reference passes index= to RegionRefType, which has no
+            # such attribute — generateDS drops it (goldens confirm)
+            ET.SubElement(local_ro, "pc:RegionRef",
+                          {"regionRef": cell_region_id})
+            suffix = f"-{cell.row_index}-{cell.column_index}"
+            for line in cell.child_lines:
+                _add_line(region, line, pts, suffix)
+        return t_el
+    return None  # Key/Value are never serialized (§2.8.2)
+
+
+def _indent(el: ET.Element, level: int = 0) -> None:
+    """``ET.indent(el, space="    ")`` for an element with children,
+    without the stdlib's recursive closure (a reference cycle per call)."""
+    pad = "\n" + "    " * (level + 1)
+    if not el.text or not el.text.strip():
+        el.text = pad
+    for child in el:
+        if len(child):
+            _indent(child, level + 1)
+        if not child.tail or not child.tail.strip():
+            child.tail = pad
+    if not child.tail.strip():
+        child.tail = pad[:-4]
+
+
 def render_page_xml(aws_json: dict, img_width: int, img_height: int,
                     img_path: str = "") -> str:
     """One parsed Textract response -> PAGE-XML string (pretty-printed)."""
@@ -107,130 +243,10 @@ def render_page_xml(aws_json: dict, img_width: int, img_height: int,
                 "regionRef": ref,
             })
 
-    # --- region serialization (:1003-1199) --------------------------------
-    def add_text_equiv(parent: ET.Element, block) -> None:
-        if block.text:
-            te = ET.SubElement(parent, "pc:TextEquiv",
-                               {"conf": _conf(block.confidence)})
-            ET.SubElement(te, "pc:Unicode").text = block.text
-
-    def add_word(parent: ET.Element, word, id_suffix: str = "") -> None:
-        attrs = {"id": f"{word.prefix}_{word.id}{id_suffix}"}
-        if word.text_type is not None:
-            attrs["production"] = word.text_type
-        w_el = ET.SubElement(parent, "pc:Word", attrs)
-        ET.SubElement(w_el, "pc:Coords", {"points": pts(word)})
-        add_text_equiv(w_el, word)
-
-    def add_line(parent: ET.Element, line, id_suffix: str = "") -> None:
-        l_el = ET.SubElement(parent, "pc:TextLine",
-                             {"id": f"{line.prefix}_{line.id}{id_suffix}"})
-        ET.SubElement(l_el, "pc:Coords", {"points": pts(line)})
-        for word in line.child_words:
-            add_word(l_el, word, id_suffix)
-        add_text_equiv(l_el, line)
-
-    def inst(block, parent: ET.Element) -> Optional[ET.Element]:
-        local_ro = local_reading_orders.get(
-            f"{block.prefix}_{block.id}_reading-order"
-        )
-        local_idx = 0
-
-        if isinstance(block, Layout) and \
-                block.textract_layout_type == "LAYOUT_FIGURE":  # :1018-1054
-            img = ET.SubElement(parent, "pc:ImageRegion", {
-                # type_=page_layout_type is silently dropped by the
-                # reference serializer (ImageRegionType has no @type)
-                "id": f"{block.prefix}_{block.id}",
-                "custom": "textract-layout-type: figure;",
-            })
-            ET.SubElement(img, "pc:Coords", {"points": pts(block)})
-            for line in block.child_lines:
-                line_region_id = f"{line.prefix}_text-region_{line.id}"
-                region = ET.SubElement(img, "pc:TextRegion",
-                                       {"id": line_region_id})
-                ET.SubElement(region, "pc:Coords", {"points": pts(line)})
-                if local_ro is not None:
-                    ET.SubElement(local_ro, "pc:RegionRefIndexed", {
-                        "index": str(local_idx), "regionRef": line_region_id,
-                    })
-                    local_idx += 1
-                add_line(region, line)
-            assert len(block.child_regions) == 0, \
-                "unexpected AWS layout recursion in LAYOUT_FIGURE"
-            return img
-
-        if isinstance(block, Layout) and \
-                block.textract_layout_type == "LAYOUT_TABLE":  # :1057-1059
-            return None
-
-        if isinstance(block, Layout):  # :1083-1110
-            attrs = {
-                "id": f"{block.prefix}_{block.id}",
-                "type": block.page_layout_type,
-            }
-            if block.textract_layout_type != "LAYOUT_DUMMY":
-                lt = block.textract_layout_type.split("LAYOUT_")[1].lower()
-                attrs["custom"] = f"textract-layout-type: {lt};"
-            region = ET.SubElement(parent, "pc:TextRegion", attrs)
-            ET.SubElement(region, "pc:Coords", {"points": pts(block)})
-            for line in block.child_lines:
-                add_line(region, line)
-            for child in block.child_regions:
-                assert child.textract_layout_type.startswith("LAYOUT_") and \
-                    child.textract_layout_type not in (
-                        "LAYOUT_FIGURE", "LAYOUT_TABLE"), \
-                    "unexpected AWS layout recursion"
-                child_el = inst(child, region)
-                if local_ro is not None:
-                    ET.SubElement(local_ro, "pc:RegionRefIndexed", {
-                        "index": str(local_idx),
-                        "regionRef": child_el.get("id"),
-                    })
-                    local_idx += 1
-            return region
-
-        if isinstance(block, Table):  # :1112-1193
-            t_el = ET.SubElement(parent, "pc:TableRegion", {
-                "id": f"{block.prefix}_{block.id}",
-                "rows": str(block.rows),
-                "columns": str(block.columns),
-            })
-            ET.SubElement(t_el, "pc:Coords", {"points": pts(block)})
-            visited_merged = []
-            for cell in block.common_cells:
-                merged = cell.parent_merged_cell
-                if merged:
-                    if merged in visited_merged:
-                        continue
-                    visited_merged.append(merged)
-                    cell = merged
-                cell_region_id = f"{cell.prefix}_text-region_{cell.id}"
-                region = ET.SubElement(t_el, "pc:TextRegion",
-                                       {"id": cell_region_id})
-                ET.SubElement(region, "pc:Coords", {"points": pts(cell)})
-                roles = ET.SubElement(region, "pc:Roles")
-                ET.SubElement(roles, "pc:TableCellRole", {
-                    "rowIndex": str(cell.row_index),
-                    "columnIndex": str(cell.column_index),
-                    "rowSpan": str(cell.row_span),
-                    "colSpan": str(cell.column_span),
-                    "header": "true" if cell.column_header else "false",
-                })
-                # reference passes index= to RegionRefType, which has no
-                # such attribute — generateDS drops it (goldens confirm)
-                ET.SubElement(local_ro, "pc:RegionRef",
-                              {"regionRef": cell_region_id})
-                suffix = f"-{cell.row_index}-{cell.column_index}"
-                for line in cell.child_lines:
-                    add_line(region, line, suffix)
-            return t_el
-        return None  # Key/Value are never serialized (§2.8.2)
-
     for layout in layouts.values():  # :1201-1202 construction order
-        inst(layout, page)
+        _inst(layout, page, pts, local_reading_orders)
     for table in tables.values():  # :1204-1205
-        inst(table, page)
+        _inst(table, page, pts, local_reading_orders)
 
     # generateDS exports Page's choice-group children grouped BY MEMBER
     # TYPE (all TextRegions in insertion order, then all ImageRegions,
@@ -244,14 +260,23 @@ def render_page_xml(aws_json: dict, img_width: int, img_height: int,
             if el.tag == tag:
                 page.append(el)
 
+    _indent(root)
     tree = ET.ElementTree(root)
-    ET.indent(tree, space="    ")
     buf = io.BytesIO()
     tree.write(buf, encoding="UTF-8", xml_declaration=True)
     return buf.getvalue().decode("utf-8") + "\n"
 
 
 # --- parity normalization (mirrors the reference test's comparison) ---------
+
+def _strip_ws(el: ET.Element) -> None:
+    if len(el) and el.text is not None and not el.text.strip():
+        el.text = None
+    if el.tail is not None and not el.tail.strip():
+        el.tail = None
+    for child in el:
+        _strip_ws(child)
+
 
 def canonical_form(xml_text: str) -> str:
     """Strip Metadata children + Page/@imageFilename, drop indentation
@@ -268,15 +293,7 @@ def canonical_form(xml_text: str) -> str:
     if page is not None and "imageFilename" in page.attrib:
         del page.attrib["imageFilename"]
 
-    def strip_ws(el: ET.Element) -> None:
-        if len(el) and el.text is not None and not el.text.strip():
-            el.text = None
-        if el.tail is not None and not el.tail.strip():
-            el.tail = None
-        for child in el:
-            strip_ws(child)
-
-    strip_ws(root)
+    _strip_ws(root)
     return ET.canonicalize(ET.tostring(root, encoding="unicode"))
 
 

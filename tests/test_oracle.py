@@ -73,6 +73,8 @@ def test_quarantine_wordless_table_in_layout_mode():
     ]}
     status, _, err = convert_doc_safe(doc, 100, 100)
     assert status == "quarantined" and "ValueError" in err
+    # the reason names the table by Id, not by address: the same every run
+    assert convert_doc_safe(doc, 100, 100)[2] == err and "0x" not in err
 
 
 def test_table_geometry_match_replaces_layout():

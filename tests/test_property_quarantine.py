@@ -7,6 +7,8 @@ drives deeply malformed Blocks structures at the same code paths the
 reference crashes on.
 """
 
+import gc
+
 import hypothesis.strategies as st
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -118,7 +120,14 @@ def test_corrupted_real_doc_never_raises(base_doc, data):
             other = blocks[data.draw(st.integers(0, len(blocks) - 1))]
             if key in other:
                 b[key], other[key] = other[key], b[key]
-    status, spans, error = convert_doc_safe(doc, 2135, 3240, "m.jpg")
+    # crash paths too free all they allocate by refcount: no cycles
+    gc.collect()
+    gc.disable()
+    try:
+        status, spans, error = convert_doc_safe(doc, 2135, 3240, "m.jpg")
+        assert gc.collect() == 0
+    finally:
+        gc.enable()
     assert status in ("ok", "quarantined")
     if status == "ok":
         _fingerprint("doc", [tuple(s) for s in spans])

@@ -217,9 +217,10 @@ def test_oversize_guard_covers_renderer_and_splitter(spark):
 
 
 def test_kernel_reenables_gc():
-    """The kernel must leave the worker's gc enabled after the batch loop
-    (convert.py builds reference cycles; a permanently disabled collector
-    leaks per document in long-lived reused workers)."""
+    """The kernel must leave the worker's gc enabled after the batch loop.
+    The converter leaves no reference cycles, but a long-lived reused
+    worker runs other code that may, and a collector left disabled would
+    leak them."""
     import gc
 
     import pyarrow as pa
@@ -234,6 +235,24 @@ def test_kernel_reenables_gc():
     assert gc.isenabled()
     list(extract_kernel(iter([batch])))
     assert gc.isenabled()
+
+
+def test_kernel_quarantines_non_list_blocks():
+    """A truthy ``Blocks`` that is no list is build_model's to quarantine;
+    counting it must not raise outside the quarantine guard and fail the
+    Spark task."""
+    import pyarrow as pa
+
+    from t2p_spark.kernel import extract_kernel
+
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": ["d1", "d2"], "width": pa.array([10, 10], pa.int32()),
+        "height": pa.array([10, 10], pa.int32()), "media_ref": ["m", "m"],
+        "json_text": ['{"Blocks": 5}', '{"Blocks": true}'],
+    })
+    out = pa.Table.from_batches(list(extract_kernel(iter([batch]))))
+    assert [(r["status"], r["n_blocks"]) for r in out.to_pylist()] == \
+        [("quarantined", 0), ("quarantined", 0)]
 
 
 @needs_reference

@@ -71,7 +71,8 @@ def doc_metrics(spans) -> dict:
             aws = json.loads(payload)
             if not isinstance(aws, dict):
                 raise ValueError("payload is not a JSON object")
-            n_blocks = len(aws.get("Blocks") or [])
+            blocks = aws.get("Blocks")
+            n_blocks = len(blocks) if isinstance(blocks, list) else 0
         except ValueError:
             status, out_spans, reason = "quarantined", [], "JSONDecodeError"
         else:
