@@ -3,7 +3,7 @@ branch that the 120-doc synth corpus (``synth.corpus_rows(120, seed=7)``)
 does not reach.
 
 Together the two corpora reach every executable line of a function body in
-``t2p_spark/convert.py`` (tests/test_convert_reach.py). Their verdicts
+``t2p_spark/convert.py`` (tests/test_branch_corpus.py). Their verdicts
 (status, error class, span md5, render md5) are pinned in
 tests/golden_synth/convert_golden.json by ``tools/make_synth_golden.py``.
 
@@ -14,6 +14,7 @@ circular.
 
 from __future__ import annotations
 
+import math
 from typing import Dict, List, Tuple
 
 W, H = 1000, 800
@@ -67,8 +68,6 @@ def one_cell_table(tid: str = "t1", word: str = "w9", **extra) -> List[Dict]:
 
 def _circle(n: int, x_at=None) -> List[Tuple[float, float]]:
     """n points on a small ring; point ``x_at`` (if given) has X=1.5."""
-    import math
-
     pts = [(0.5 + 0.1 * math.cos(2 * math.pi * k / n),
             0.5 + 0.1 * math.sin(2 * math.pi * k / n)) for k in range(n)]
     if x_at is not None:
