@@ -5,18 +5,29 @@ these are the natural streaming extensions a continuously-ingesting corpus
 needs, built on the same kernels so batch/stream semantics are identical:
 
   - ``run_extract_stream``: the extraction pipeline as a stream —
-    ``pipeline.extract`` over a readStream of the docs table, written by
-    a foreachBatch sink partitioned by (batch_id, bucket) with dynamic
-    partition overwrite, so a retried microbatch rewrites exactly its own
-    output. The stream writes no metrics table.
-  - ``events_tumbling_stream``: watermarked tumbling-window aggregation of
-    the events table (streaming twin of the batch
-    ``events_tumbling_hour`` query; late data dropped past 2h).
+    ``pipeline.extract`` over a readStream of the docs table, drained
+    once with availableNow and written by a foreachBatch sink
+    partitioned by (batch_id, bucket) with dynamic partition overwrite,
+    so a retried microbatch rewrites exactly its own output. The stream
+    writes no metrics table.
+  - ``_stage_chunks``: the one replay stager. It writes a table (or a
+    slice of it) as ordered parquet chunk files with pinned mtimes, the
+    landing-zone history a file stream replays oldest-first. Staging is
+    memoized per session and table, and every staged dir lives under one
+    per-process root that is removed at interpreter exit.
+  - ``_drain_to_memory``: the one memory drain. Each of the six streamed
+    driver queries (sessionization, tumbling windows, redelivery dedup,
+    near-dup / PII / quality screens) is a ``build`` from the replay
+    stream to its output; the drain runs it to completion into a memory
+    sink with availableNow and records its executed plan in
+    ``LAST_STREAM_PLANS``. Each query's oracle is its batch twin.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import functools
 import os
 import shutil
 import tempfile
@@ -26,15 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from t2p_spark.pipeline import MAX_PAYLOAD_BYTES, extract
 from t2p_spark.schema import DOCS_SCHEMA
-
-
-def read_docs_stream(spark: SparkSession, path: str,
-                     max_files: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
 
 
 def write_extract_batch(batch_df: DataFrame, batch_id: int,
@@ -54,10 +56,10 @@ def write_extract_batch(batch_df: DataFrame, batch_id: int,
 
 
 def run_extract_stream(spark: SparkSession, input_path: str, output_path: str,
-                       checkpoint_path: str, available_now: bool = True,
+                       checkpoint_path: str,
                        max_payload_bytes: int = MAX_PAYLOAD_BYTES):
-    """availableNow=True drains the current table once (backfill mode);
-    False tails it continuously.
+    """Drain the docs table at ``input_path`` once (availableNow, backfill
+    mode), four files per microbatch.
 
     No shuffle inside the stream — one stage per microbatch. Oversized docs
     quarantine (PayloadTooLarge) exactly as in batch extract: one
@@ -69,23 +71,22 @@ def run_extract_stream(spark: SparkSession, input_path: str, output_path: str,
     a retry rewrite exactly its own batch_id partitions and nothing else:
     idempotent per microbatch, append across microbatches.
     """
-    out = extract(read_docs_stream(spark, input_path),
-                  max_payload_bytes=max_payload_bytes)
+    docs = (spark.readStream.schema(DOCS_SCHEMA)
+            .option("maxFilesPerTrigger", 4).parquet(input_path))
+    out = extract(docs, max_payload_bytes=max_payload_bytes)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         write_extract_batch(batch_df, batch_id, output_path)
 
-    writer = (
+    return (
         out.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def events_sessionize_stream(events_stream: DataFrame,
-                             gap_minutes: int = 30) -> DataFrame:
+def events_sessionize_stream(events_stream: DataFrame) -> DataFrame:
     """Custom stateful operator: per-user sessionization as a stream via
     ``applyInPandasWithState`` — the streaming twin of the batch
     ``events_sessionize`` query (same 30-min inactivity gap, same
@@ -103,7 +104,8 @@ def events_sessionize_stream(events_stream: DataFrame,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    gap_sec = float(gap_minutes * 60)
+    # the batch twin's gap, hard-coded there too: stream == batch
+    gap_sec = 30 * 60.0
 
     def fn(key, pdf_iter, state):
         if state.exists:
@@ -138,247 +140,6 @@ def events_sessionize_stream(events_stream: DataFrame,
     )
 
 
-def run_sessionize_stream(spark: SparkSession, events_path: str,
-                          events_schema, checkpoint_path: str,
-                          query_name: str):
-    # maxFilesPerTrigger=2: the drain's per-microbatch fixed cost
-    # (offset/commit log writes, one state-store instance per shuffle
-    # partition, job scheduling) dominates at bench scale, so the backfill
-    # batches two chunk files per trigger — still >= 2 stateful
-    # microbatches over the 4 staged chunks, so state genuinely crosses
-    # batch boundaries; a 100-TB backfill does exactly this (availableNow
-    # with large maxFilesPerTrigger / maxBytesPerTrigger). The drained
-    # result is trigger-granularity-invariant (oracle-checked).
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_path)
-    )
-    agg = events_sessionize_stream(stream)
-    return (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-_STAGED: dict = {}
-
-
-def _stage_chronological_chunks(spark: SparkSession, sf_dir: str,
-                                n_chunks: int = 4):
-    """Stage the events table as n_chunks chronologically-disjoint parquet
-    files written in order (the file stream replays them oldest-first by
-    modification time) — a faithful replay of how a landing zone receives
-    history, and the precondition for stream==batch equality: the stateful
-    gap fold assumes batches arrive in time order, and the watermark drops
-    data arriving >2h late. Returns (dir, schema); memoized per
-    (session, sf_dir) — the staged replay of an immutable table is itself
-    immutable, and both streamed driver queries share it."""
-    from pyspark.sql import Window
-
-    from t2p_spark.session import session_key
-
-    key = (session_key(spark), sf_dir, n_chunks)
-    if key in _STAGED:
-        return _STAGED[key]
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out_dir = tempfile.mkdtemp(prefix="t2p_events_stream_")
-    rn = F.row_number().over(Window.orderBy("ts", "event_id"))
-    # cache the ranked relation: each chunk write filters it, and without
-    # the cache every write re-runs the global (ts, event_id) sort —
-    # n_chunks full sorts for one staging pass (r7 optimization round)
-    chunked = ev.withColumn("_rn", rn).cache()
-    n = chunked.count()
-    per = (n + n_chunks - 1) // n_chunks
-    # FileStreamSource orders files by mtime at ms resolution: two chunk
-    # writes landing in the same millisecond could replay out of order and
-    # break the time-order precondition above (the 2h watermark would then
-    # drop rows — an intermittent oracle flake, r3 ADVICE). Pin each
-    # chunk's part-file mtime explicitly in chunk order.
-    pinned: set = set()
-    base_mtime = os.stat(out_dir).st_mtime
-    for i in range(n_chunks):
-        (chunked
-         .filter((F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per))
-         .drop("_rn").coalesce(1).write.mode("append").parquet(out_dir))
-        for f in os.listdir(out_dir):
-            if f.startswith("part-") and f not in pinned:
-                t = base_mtime + (i + 1) * 10.0
-                os.utime(os.path.join(out_dir, f), (t, t))
-                pinned.add(f)
-    chunked.unpersist()
-    _STAGED[key] = (out_dir, ev.schema)
-    return _STAGED[key]
-
-
-class _stream_shuffle_partitions:
-    """Temporarily cap spark.sql.shuffle.partitions for a drain: each
-    stateful microbatch spins one state-store instance PER shuffle
-    partition per batch — at a bench-style 64 partitions x 4 batches the
-    fixed state-store overhead dwarfs the (tiny) data. The default is
-    scale-adaptive (half the session's core count, floor 8): the
-    per-GROUP pandas invocation inside applyInPandasWithState is the
-    drain's real cost, so too few partitions serializes Python work
-    (measured: 2 partitions 9.0s, 8 -> 3.2-5.1s, 16 -> 2.8-3.1s on 32
-    cores), while partitions >> cores only multiply state-store
-    instances. Fresh checkpoints pin their own partition count, so the
-    cap never leaks into a resumed stream; the previous session value is
-    restored on exit."""
-
-    def __init__(self, spark: SparkSession, n: int | None = None):
-        if n is None:
-            n = max(8, spark.sparkContext.defaultParallelism // 2)
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
-_STREAM_SEQ = [0]
-
-# driver-query name -> the last drained run's FINAL microbatch executed
-# plan (explainInternal over lastExecution). Streams have no batch
-# DataFrame whose plan tools/audit_plans.py could explain, so each drain
-# records its own executed plan here and the audit reads it back — the
-# same scale screening (joins/shuffles/red flags) the batch queries get.
-LAST_STREAM_PLANS: dict[str, str] = {}
-
-
-def _next_qname(prefix: str) -> str:
-    _STREAM_SEQ[0] += 1
-    return f"{prefix}_{_STREAM_SEQ[0]}"
-
-
-@contextlib.contextmanager
-def _checkpoint(prefix: str = "t2p_ck_"):
-    """A fresh temp dir for one drain (its checkpoint, or the dedup
-    screen's replay input), removed when the block exits: the memory sink
-    then holds the output and the drains here are never resumed."""
-    ck = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield ck
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-
-
-def _drain(q, audit_name: str) -> None:
-    """awaitTermination + record the last microbatch's executed plan
-    under ``audit_name`` (best-effort: plan capture must never fail a
-    drain — py4j internals are version-sensitive)."""
-    q.awaitTermination()
-    try:
-        from pyspark import SparkContext
-
-        jvm = SparkContext._active_spark_context._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted")
-        # StreamingQueryWrapper -> StreamExecution -> IncrementalExecution
-        # (a QueryExecution): the formatted executed plan of the final
-        # microbatch, same shape tools/audit_plans.py parses for batch
-        LAST_STREAM_PLANS[audit_name] = (
-            q._jsq.streamingQuery().lastExecution().explainString(mode))
-    except Exception:  # pragma: no cover - capture is diagnostic only
-        try:
-            LAST_STREAM_PLANS[audit_name] = q._jsq.explainInternal(True)
-        except Exception:
-            pass
-
-
-def sessionize_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-oracle surface for the stateful sessionization stream: drain
-    the applyInPandasWithState stream over chronological chunks with
-    availableNow and return the FINAL per-user totals. The update-mode
-    memory sink accumulates one row per (user, microbatch); running totals
-    only grow, so MAX per user is the drained state. Oracle: the batch
-    events_sessionize window SQL (RELATIONAL_SQL) — hash equality means
-    the stateful streaming operator reproduces the batch semantics."""
-    path, schema = _stage_chronological_chunks(spark, sf_dir)
-    qname = _next_qname("sess_streamed")
-    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
-        q = run_sessionize_stream(spark, path, schema, ck, qname)
-        _drain(q, "events_sessionize_streamed")
-    return spark.sql(f"""
-        SELECT user_id,
-               MAX(n_sessions) AS n_sessions,
-               MAX(n_events) AS n_events
-        FROM {qname} GROUP BY user_id
-    """)
-
-
-def tumbling_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-oracle surface for the watermarked tumbling-window stream:
-    drain over chronological chunks (complete output mode — the memory
-    table IS the final aggregate). Oracle: the batch events_tumbling_hour
-    SQL. Chronological replay matters: the 2h watermark would drop
-    genuinely-late rows if chunks arrived out of order."""
-    path, schema = _stage_chronological_chunks(spark, sf_dir)
-    qname = _next_qname("tumbling_streamed")
-    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
-        q = run_events_stream(spark, path, schema, ck, qname)
-        _drain(q, "events_tumbling_streamed")
-    return spark.sql(
-        f"SELECT event_type, hour_bucket, n_events, total_value "
-        f"FROM {qname}"
-    )
-
-
-def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming duplicate suppression — the exactly-once ingestion shape:
-    a landing zone redelivers events (at-least-once feeds always do), the
-    stream drops redeliveries with stateful ``dropDuplicates`` on the
-    event key, and the durable output contains each event once.
-
-    The replay is the staged chronological chunks PLUS a final chunk that
-    redelivers a deterministic ~5% sample of earlier events (md5-bucket
-    of event_id — twin-checkable, no random()), so the duplicates
-    genuinely cross microbatch boundaries and exercise the dedup state
-    store. Oracle: the batch per-type counts over the original events
-    table — hash equality means every redelivery was suppressed and
-    nothing real was lost. At scale: state is one key per event in the
-    retention window; production feeds bound it with
-    ``dropDuplicatesWithinWatermark``."""
-    import glob
-
-    path, schema = _stage_chronological_chunks(spark, sf_dir)
-    qname = _next_qname("dedup_streamed")
-    # the replay dir is removed once the drain returns: the memory sink
-    # holds the output
-    with _stream_shuffle_partitions(spark), _checkpoint() as ck, \
-            _checkpoint("t2p_events_dup_") as dup_dir:
-        for f in glob.glob(f"{path}/*.parquet"):
-            shutil.copy(f, dup_dir)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        (ev.where("CAST(CONV(SUBSTRING(md5(CAST(event_id AS STRING)), 1, 8), "
-                  "16, 10) AS BIGINT) % 100 < 5")
-         .coalesce(1).write.mode("append").parquet(dup_dir))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(dup_dir)
-        )
-        q = (
-            stream.dropDuplicates(["event_id"])
-            .writeStream.outputMode("append")
-            .format("memory").queryName(qname)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, "events_stream_dedup")
-    return spark.sql(f"""
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
-        FROM {qname} GROUP BY event_type
-    """)
-
-
 def events_tumbling_stream(events_stream: DataFrame) -> DataFrame:
     """Watermarked 1h tumbling windows per event_type (late data > 2h dropped)."""
     return (
@@ -399,52 +160,243 @@ def events_tumbling_stream(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def run_events_stream(spark: SparkSession, events_path: str,
-                      events_schema, checkpoint_path: str, query_name: str):
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_path)
-    )
-    agg = events_tumbling_stream(stream)
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+# The two landing-zone replays, as _stage_chunks arguments (table, slice,
+# order columns, chunk count). Events arrive chronologically: the stateful
+# gap fold assumes batches in time order, and the 2h watermark drops data
+# arriving later than that. The incoming documents are the doc_id % 4 = 0
+# slice (the oracles restrict their batch twins to it), in doc_id order.
+_EVENTS_REPLAY = ("events", "TRUE", ("ts", "event_id"), 4)
+_DOCS_REPLAY = ("documents", "doc_id % 4 = 0", ("doc_id",), 3)
 
-def _stage_document_chunks(spark: SparkSession, sf_dir: str,
-                           n_chunks: int = 3):
-    """Stage the 'incoming' documents slice (doc_id % 4 == 0) as n_chunks
-    parquet files written in doc_id order — the landing-zone replay for
-    the stream-static near-dup screen. Memoized per (session, sf_dir),
-    like the events staging."""
+_STAGED: dict = {}
+
+
+@functools.cache
+def _stage_root() -> str:
+    """The per-process parent of every staged replay dir. The memo keeps
+    staged dirs for the life of the process, so no drain may remove them;
+    the whole root goes at interpreter exit instead."""
+    root = tempfile.mkdtemp(prefix="t2p_stream_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _stage_chunks(spark: SparkSession, sf_dir: str, table: str,
+                  where: str, order: tuple, n_chunks: int):
+    """Stage the ``where`` slice of ``table`` as n_chunks parquet files,
+    disjoint in ``order`` and written in that order (the file stream
+    replays them oldest-first by modification time) — a faithful replay
+    of how a landing zone receives history. Returns (dir, schema);
+    memoized per (session, sf_dir, table, n_chunks) — the staged replay
+    of an immutable table is itself immutable, and the streamed driver
+    queries over one table share it. The source frame is read only on a
+    memo miss."""
     from pyspark.sql import Window
 
     from t2p_spark.session import session_key
 
-    key = (session_key(spark), sf_dir, "docs", n_chunks)
+    key = (session_key(spark), sf_dir, table, n_chunks)
     if key in _STAGED:
         return _STAGED[key]
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 4 = 0"))
-    out_dir = tempfile.mkdtemp(prefix="t2p_docs_stream_")
-    rn = F.row_number().over(Window.orderBy("doc_id"))
-    # cached for the same reason as the events staging: one sort, n_chunks
-    # cheap filtered writes
-    chunked = docs.withColumn("_rn", rn).cache()
+    src = spark.read.parquet(f"{sf_dir}/{table}.parquet").where(where)
+    out_dir = tempfile.mkdtemp(prefix=f"t2p_{table}_stream_",
+                               dir=_stage_root())
+    rn = F.row_number().over(Window.orderBy(*order))
+    # cache the ranked relation: each chunk write filters it, and without
+    # the cache every write re-runs the global sort — n_chunks full sorts
+    # for one staging pass
+    chunked = src.withColumn("_rn", rn).cache()
     n = chunked.count()
     per = (n + n_chunks - 1) // n_chunks
+    # FileStreamSource orders files by mtime at ms resolution: two chunk
+    # writes landing in the same millisecond could replay out of order and
+    # break the time-order precondition of the events replay (the 2h
+    # watermark would then drop rows — an intermittent oracle flake). Pin
+    # each chunk's part-file mtime explicitly in chunk order.
+    pinned: set = set()
+    base_mtime = os.stat(out_dir).st_mtime
     for i in range(n_chunks):
         (chunked
          .filter((F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per))
          .drop("_rn").coalesce(1).write.mode("append").parquet(out_dir))
+        for f in os.listdir(out_dir):
+            if f.startswith("part-") and f not in pinned:
+                t = base_mtime + (i + 1) * 10.0
+                os.utime(os.path.join(out_dir, f), (t, t))
+                pinned.add(f)
     chunked.unpersist()
-    _STAGED[key] = (out_dir, docs.schema)
+    _STAGED[key] = (out_dir, src.schema)
     return _STAGED[key]
+
+
+_STREAM_SEQ = [0]
+
+# driver-query name -> the last drained run's FINAL microbatch executed
+# plan (explainInternal over lastExecution). Streams have no batch
+# DataFrame whose plan tools/audit_plans.py could explain, so each drain
+# records its own executed plan here and the audit reads it back — the
+# same scale screening (joins/shuffles/red flags) the batch queries get.
+LAST_STREAM_PLANS: dict[str, str] = {}
+
+
+@contextlib.contextmanager
+def _checkpoint(prefix: str = "t2p_ck_"):
+    """A fresh temp dir for one drain (its checkpoint, or the dedup
+    screen's replay input), removed when the block exits: the memory sink
+    then holds the output and the drains here are never resumed."""
+    ck = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield ck
+    finally:
+        shutil.rmtree(ck, ignore_errors=True)
+
+
+def _drain_to_memory(spark: SparkSession, audit_name: str, path: str,
+                     schema, build, mode: str) -> str:
+    """Run one streamed query to completion and return the name of its
+    memory-sink table.
+
+    The parquet files at ``path`` are replayed as a stream, which is also
+    registered as the temp view ``<sink table>_in`` for builders that retarget
+    batch SQL at it; ``build(stream, view)`` returns the query's output,
+    written in output ``mode`` to a memory sink and drained with
+    availableNow. The input view is dropped when the drain returns; the
+    sink's table stays, because the caller's frame reads it. The last
+    microbatch's executed plan is recorded as
+    ``LAST_STREAM_PLANS[audit_name]`` (best-effort: plan capture must
+    never fail a drain — py4j internals are version-sensitive).
+
+    Shuffle partitions are capped for the drain: each stateful
+    microbatch spins one state-store instance PER shuffle partition per
+    batch — at a bench-style 64 partitions x 4 batches the fixed
+    state-store overhead dwarfs the (tiny) data. The cap is
+    scale-adaptive (half the session's core count, floor 8): the
+    per-GROUP pandas invocation inside applyInPandasWithState is the
+    sessionization drain's real cost, so too few partitions serializes
+    Python work (measured: 2 partitions 9.0s, 8 -> 3.2-5.1s, 16 ->
+    2.8-3.1s on 32 cores), while partitions >> cores only multiply
+    state-store instances. Fresh checkpoints pin their own partition
+    count, so the cap never leaks into a resumed stream; the previous
+    session value is restored on exit.
+    """
+    _STREAM_SEQ[0] += 1
+    qname = f"{audit_name}_{_STREAM_SEQ[0]}"
+    view = f"{qname}_in"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(8, spark.sparkContext.defaultParallelism // 2)))
+    try:
+        with _checkpoint() as ck:
+            # maxFilesPerTrigger=2: the drain's per-microbatch fixed cost
+            # (offset/commit log writes, one state-store instance per
+            # shuffle partition, job scheduling) dominates at bench scale,
+            # so the backfill batches two chunk files per trigger — still
+            # >= 2 stateful microbatches over the 4 staged event chunks, so
+            # state genuinely crosses batch boundaries; a 100-TB backfill
+            # does exactly this (availableNow with large maxFilesPerTrigger
+            # / maxBytesPerTrigger). The drained result is
+            # trigger-granularity-invariant (oracle-checked).
+            stream = (spark.readStream.schema(schema)
+                      .option("maxFilesPerTrigger", 2).parquet(path))
+            stream.createOrReplaceTempView(view)
+            q = (build(stream, view).writeStream.outputMode(mode)
+                 .format("memory").queryName(qname)
+                 .option("checkpointLocation", ck)
+                 .trigger(availableNow=True)
+                 .start())
+            q.awaitTermination()
+            try:
+                explain = (spark.sparkContext._jvm
+                           .org.apache.spark.sql.execution.ExplainMode)
+                # StreamingQueryWrapper -> StreamExecution ->
+                # IncrementalExecution (a QueryExecution): the formatted
+                # executed plan of the final microbatch, same shape
+                # tools/audit_plans.py parses for batch
+                LAST_STREAM_PLANS[audit_name] = (
+                    q._jsq.streamingQuery().lastExecution()
+                    .explainString(explain.fromString("formatted")))
+            except Exception:  # pragma: no cover - capture is diagnostic
+                try:
+                    LAST_STREAM_PLANS[audit_name] = q._jsq.explainInternal(
+                        True)
+                except Exception:
+                    pass
+    finally:
+        spark.catalog.dropTempView(view)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return qname
+
+
+def sessionize_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-oracle surface for the stateful sessionization stream: drain
+    the applyInPandasWithState stream over chronological chunks with
+    availableNow and return the FINAL per-user totals. The update-mode
+    memory sink accumulates one row per (user, microbatch); running totals
+    only grow, so MAX per user is the drained state. Oracle: the batch
+    events_sessionize window SQL (RELATIONAL_SQL) — hash equality means
+    the stateful streaming operator reproduces the batch semantics."""
+    path, schema = _stage_chunks(spark, sf_dir, *_EVENTS_REPLAY)
+    table = _drain_to_memory(
+        spark, "events_sessionize_streamed", path, schema,
+        lambda stream, _: events_sessionize_stream(stream), "update")
+    return spark.sql(f"""
+        SELECT user_id,
+               MAX(n_sessions) AS n_sessions,
+               MAX(n_events) AS n_events
+        FROM {table} GROUP BY user_id
+    """)
+
+
+def tumbling_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-oracle surface for the watermarked tumbling-window stream:
+    drain over chronological chunks (complete output mode — the memory
+    table IS the final aggregate). Oracle: the batch events_tumbling_hour
+    SQL. Chronological replay matters: the 2h watermark would drop
+    genuinely-late rows if chunks arrived out of order."""
+    path, schema = _stage_chunks(spark, sf_dir, *_EVENTS_REPLAY)
+    table = _drain_to_memory(
+        spark, "events_tumbling_streamed", path, schema,
+        lambda stream, _: events_tumbling_stream(stream), "complete")
+    return spark.sql(
+        f"SELECT event_type, hour_bucket, n_events, total_value "
+        f"FROM {table}"
+    )
+
+
+def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming duplicate suppression — the exactly-once ingestion shape:
+    a landing zone redelivers events (at-least-once feeds always do), the
+    stream drops redeliveries with stateful ``dropDuplicates`` on the
+    event key, and the durable output contains each event once.
+
+    The replay is the staged chronological chunks PLUS a final chunk that
+    redelivers a deterministic ~5% sample of earlier events (md5-bucket
+    of event_id — twin-checkable, no random()), so the duplicates
+    genuinely cross microbatch boundaries and exercise the dedup state
+    store. Oracle: the batch per-type counts over the original events
+    table — hash equality means every redelivery was suppressed and
+    nothing real was lost. At scale: state is one key per event in the
+    retention window; production feeds bound it with
+    ``dropDuplicatesWithinWatermark``."""
+    import glob
+
+    path, schema = _stage_chunks(spark, sf_dir, *_EVENTS_REPLAY)
+    # the replay dir is removed once the drain returns: the memory sink
+    # holds the output
+    with _checkpoint("t2p_events_dup_") as dup_dir:
+        for f in glob.glob(f"{path}/*.parquet"):
+            shutil.copy(f, dup_dir)
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        (ev.where("CAST(CONV(SUBSTRING(md5(CAST(event_id AS STRING)), 1, 8), "
+                  "16, 10) AS BIGINT) % 100 < 5")
+         .coalesce(1).write.mode("append").parquet(dup_dir))
+        table = _drain_to_memory(
+            spark, "events_stream_dedup", dup_dir, schema,
+            lambda stream, _: stream.dropDuplicates(["event_id"]), "append")
+    return spark.sql(f"""
+        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
+        FROM {table} GROUP BY event_type
+    """)
 
 
 def _band_key_array(col_fmt: str, n_minhash: int) -> str:
@@ -484,7 +436,7 @@ def neardup_screen_streamed_result(spark: SparkSession,
     )
 
     register_views(spark, sf_dir)
-    path, schema = _stage_document_chunks(spark, sf_dir)
+    path, schema = _stage_chunks(spark, sf_dir, *_DOCS_REPLAY)
     band_static = _band_key_array("sig_{}", N_MINHASH)
     # the corpus signature table is the shared sigs_mat materialization
     # (the batch dedup job maintains it; the screen only band-explodes it)
@@ -496,32 +448,27 @@ def neardup_screen_streamed_result(spark: SparkSession,
         .cache()
     )
     band_stream = _band_key_array("sigs[{}]", N_MINHASH)
-    qname = _next_qname("neardup_streamed")
+
+    def build(stream, _):
+        s_bands = (
+            stream
+            .selectExpr("doc_id", f"{minhash_sig_inline()} AS sigs")
+            .selectExpr("doc_id AS new_doc_id",
+                        f"posexplode({band_stream}) AS (band, key)")
+        )
+        return (s_bands.join(index, ["band", "key"])
+                .select("new_doc_id", "corpus_doc_id")
+                .dropDuplicates(["new_doc_id", "corpus_doc_id"]))
+
     try:
-        with _stream_shuffle_partitions(spark), _checkpoint() as ck:
-            stream = (spark.readStream.schema(schema)
-                      .option("maxFilesPerTrigger", 2).parquet(path))
-            s_bands = (
-                stream
-                .selectExpr("doc_id", f"{minhash_sig_inline()} AS sigs")
-                .selectExpr("doc_id AS new_doc_id",
-                            f"posexplode({band_stream}) AS (band, key)")
-            )
-            pairs = (s_bands.join(index, ["band", "key"])
-                     .select("new_doc_id", "corpus_doc_id")
-                     .dropDuplicates(["new_doc_id", "corpus_doc_id"]))
-            q = (pairs.writeStream.outputMode("append")
-                 .format("memory").queryName(qname)
-                 .option("checkpointLocation", ck)
-                 .trigger(availableNow=True)
-                 .start())
-            _drain(q, "stream_neardup_screen")
+        table = _drain_to_memory(spark, "stream_neardup_screen", path,
+                                 schema, build, "append")
     finally:
         index.unpersist()
     # no final DISTINCT: if the stream ever emitted a pair twice, the
     # oracle hash-compare must see it
     return spark.sql(
-        f"SELECT new_doc_id, corpus_doc_id FROM {qname}")
+        f"SELECT new_doc_id, corpus_doc_id FROM {table}")
 
 
 def neardup_screen_oracle_sql() -> str:
@@ -558,35 +505,27 @@ def pii_screen_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     from t2p_spark.textkit import spark_sql_queries
 
     register_views(spark, sf_dir)
-    path, schema = _stage_document_chunks(spark, sf_dir)
-    qname = _next_qname("pii_streamed")
-    vname = f"{qname}_in"
-    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 2).parquet(path))
-        stream.createOrReplaceTempView(vname)
+    path, schema = _stage_chunks(spark, sf_dir, *_DOCS_REPLAY)
+
+    def build(_, view):
         # the batch twin's SQL, retargeted at the stream view verbatim;
         # the uniqueness assert guards the prefix-substring replace (a
         # future "FROM documents_tok" reference would match too and
-        # silently corrupt the SQL — r5 ADVICE)
+        # silently corrupt the SQL)
         pii_sql = spark_sql_queries()["pii_scrub"]
         assert pii_sql.count("FROM documents") == 1
-        pii_sql = pii_sql.replace("FROM documents", f"FROM {vname}")
-        out = spark.sql(pii_sql)
-        q = (out.writeStream.outputMode("append")
-             .format("memory").queryName(qname)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True)
-             .start())
-        _drain(q, "stream_pii_screen")
+        return spark.sql(pii_sql.replace("FROM documents", f"FROM {view}"))
+
+    table = _drain_to_memory(spark, "stream_pii_screen", path, schema,
+                             build, "append")
     return spark.sql(
         f"SELECT doc_id, n_emails, n_phones, n_keys, redacted_md5 "
-        f"FROM {qname}")
+        f"FROM {table}")
 
 
 def pii_screen_oracle_sql() -> str:
     """DuckDB twin: the batch pii query restricted to the incoming slice
-    (doc_id % 4 = 0 — the same slice _stage_document_chunks replays)."""
+    (doc_id % 4 = 0 — the same slice the documents replay stages)."""
     from t2p_spark.textkit import duckdb_oracle_queries
 
     sql = duckdb_oracle_queries()["pii_scrub"]
@@ -615,34 +554,26 @@ def quality_gate_streamed_result(spark: SparkSession,
     from t2p_spark.textkit import _hash60, _tokens, _xform, spark_sql_queries
 
     register_views(spark, sf_dir)
-    path, schema = _stage_document_chunks(spark, sf_dir)
-    qname = _next_qname("quality_streamed")
-    vname = f"{qname}_in"
-    inline_tok = (
-        f"(SELECT doc_id, source, n_chars, text, "
-        f"{_tokens('text', 's')} AS toks, "
-        f"{_xform(_tokens('text', 's'), 't -> ' + _hash60('t', 's'), 's')}"
-        f" AS thashes FROM {vname})")
-    with _stream_shuffle_partitions(spark), _checkpoint() as ck:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 2).parquet(path))
-        stream.createOrReplaceTempView(vname)
-        gate_sql = spark_sql_queries()["corpus_filter"].replace(
-            "documents_tok", inline_tok)
-        out = spark.sql(gate_sql)
-        q = (out.writeStream.outputMode("append")
-             .format("memory").queryName(qname)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True)
-             .start())
-        _drain(q, "stream_quality_gate")
+    path, schema = _stage_chunks(spark, sf_dir, *_DOCS_REPLAY)
+
+    def build(_, view):
+        inline_tok = (
+            f"(SELECT doc_id, source, n_chars, text, "
+            f"{_tokens('text', 's')} AS toks, "
+            f"{_xform(_tokens('text', 's'), 't -> ' + _hash60('t', 's'), 's')}"
+            f" AS thashes FROM {view})")
+        return spark.sql(spark_sql_queries()["corpus_filter"].replace(
+            "documents_tok", inline_tok))
+
+    table = _drain_to_memory(spark, "stream_quality_gate", path, schema,
+                             build, "append")
     return spark.sql(
-        f"SELECT doc_id, verdict, n_tokens FROM {qname}")
+        f"SELECT doc_id, verdict, n_tokens FROM {table}")
 
 
 def quality_gate_oracle_sql() -> str:
     """DuckDB twin: the batch corpus_filter restricted to the incoming
-    slice (doc_id % 4 = 0, the _stage_document_chunks replay)."""
+    slice (doc_id % 4 = 0, the documents replay)."""
     from t2p_spark.textkit import duckdb_oracle_queries
 
     sql = duckdb_oracle_queries()["corpus_filter"]

@@ -68,6 +68,13 @@ QUERIES = [
 ]
 # queries whose inputs are the external reference Textract JSONs
 REFERENCE_QUERIES = {"extract_fixture_spans", "render_pagexml"}
+# streamed queries: each drain records the executed plan that
+# tools/audit_plans.py screens
+STREAMED_QUERIES = {
+    "events_sessionize_streamed", "events_tumbling_streamed",
+    "events_stream_dedup", "stream_neardup_screen", "stream_pii_screen",
+    "stream_quality_gate",
+}
 
 
 @pytest.mark.parametrize("name", [
@@ -75,9 +82,14 @@ REFERENCE_QUERIES = {"extract_fixture_spans", "render_pagexml"}
     for n in QUERIES
 ])
 def test_query_matches_oracle(spark, con, name):
+    from t2p_spark.streaming import LAST_STREAM_PLANS
+
     fn = entrymod.queries()[name]
     sql = entrymod.oracle_sql()[name]
+    LAST_STREAM_PLANS.pop(name, None)
     sdf = fn(spark, SF)
+    if name in STREAMED_QUERIES:
+        assert LAST_STREAM_PLANS.get(name)
     srows = sdf.collect()
     res = con.sql(sql)
     assert sorted(sdf.columns) == sorted(res.columns)

@@ -118,8 +118,9 @@ def test_streaming_oversized_doc_does_not_kill_stream(spark, tmp_path):
 
 
 def test_stream_drain_removes_its_checkpoint(spark, monkeypatch):
-    """A drained screen leaves no t2p_ck_* checkpoint dir behind: the
-    memory sink holds the output and the drains are never resumed."""
+    """A drained screen leaves no t2p_ck_* checkpoint dir and no *_in
+    input view behind: the memory sink holds the output and the drains
+    are never resumed."""
     import tempfile
 
     from t2p_spark import streaming
@@ -139,7 +140,37 @@ def test_stream_drain_removes_its_checkpoint(spark, monkeypatch):
     assert len(ck) == 1
     assert os.path.dirname(ck[0]) == tempfile.gettempdir()
     assert not os.path.exists(ck[0])
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.isTemporary and t.name.endswith("_in")]
 
+
+
+def test_staged_replay_dirs_removed_at_exit():
+    """Staged replay dirs outlive every drain (the memo shares them) but
+    not the process: once a child that ran a streamed screen exits, none
+    of its staged dirs is left."""
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+    from tests.test_curate_job import SF
+
+    code = f"""
+from pyspark.sql import SparkSession
+from t2p_spark import streaming
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+assert streaming.pii_screen_streamed_result(spark, {SF!r}).count() > 0
+for staged, _ in streaming._STAGED.values():
+    print("STAGED", staged)
+"""
+    out = subprocess.run([sys.executable, "-c", code], cwd=REPO,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    staged = [line.split(" ", 1)[1] for line in out.stdout.splitlines()
+              if line.startswith("STAGED ")]
+    assert staged
+    assert not [d for d in staged if os.path.exists(d)]
 
 
 def test_dedup_stream_removes_its_replay_dir(spark, monkeypatch):
@@ -167,20 +198,19 @@ def test_dedup_stream_removes_its_replay_dir(spark, monkeypatch):
 
 def test_streaming_events_window_equals_batch(spark, tmp_path):
     from t2p_spark.relational import register_views
-    from t2p_spark.streaming import run_events_stream
+    from t2p_spark.streaming import _drain_to_memory, events_tumbling_stream
 
     sf_dir = "/root/testdata/sf0.001"
     register_views(spark, sf_dir)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev_dir = str(tmp_path / "events")  # file stream source needs a directory
     ev.orderBy("ts").coalesce(4).write.parquet(ev_dir)
-    q = run_events_stream(
-        spark, ev_dir, ev.schema, str(tmp_path / "ck"), "ev_agg"
-    )
-    q.awaitTermination(120)
+    table = _drain_to_memory(
+        spark, "ev_agg", ev_dir, ev.schema,
+        lambda stream, _: events_tumbling_stream(stream), "complete")
     got = {
         (r["hour_bucket"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM ev_agg").collect()
+        for r in spark.sql(f"SELECT * FROM {table}").collect()
     }
     want = {
         (r["hour_bucket"], r["event_type"]): (r["n_events"], r["total_value"])
@@ -223,7 +253,7 @@ def test_streaming_sessionize_equals_batch(spark, tmp_path):
     """applyInPandasWithState sessionization drained over chronological
     file chunks == the batch window-function sessionization."""
     from t2p_spark.relational import RELATIONAL_SQL, register_views
-    from t2p_spark.streaming import run_sessionize_stream
+    from t2p_spark.streaming import _drain_to_memory, events_sessionize_stream
 
     sf_dir = "/root/testdata/sf0.001"
     register_views(spark, sf_dir)
@@ -241,13 +271,13 @@ def test_streaming_sessionize_equals_batch(spark, tmp_path):
             spark.createDataFrame(chunk, ev.schema).coalesce(1) \
                 .write.mode("append").parquet(ev_dir)
 
-    q = run_sessionize_stream(spark, ev_dir, ev.schema,
-                              str(tmp_path / "ck"), "sess_agg")
-    q.awaitTermination(120)
+    table = _drain_to_memory(
+        spark, "sess_agg", ev_dir, ev.schema,
+        lambda stream, _: events_sessionize_stream(stream), "update")
     # the memory sink accumulates one row per (user, microbatch); running
     # totals only grow, so the final state is the max-n_events row
     got = {}
-    for r in spark.sql("SELECT * FROM sess_agg").collect():
+    for r in spark.sql(f"SELECT * FROM {table}").collect():
         cur = got.get(r["user_id"])
         if cur is None or r["n_events"] > cur[1]:
             got[r["user_id"]] = (r["n_sessions"], r["n_events"])

@@ -187,7 +187,7 @@ def main() -> int:
     lines.append("")
     lines.append("## Streaming queries (final-microbatch executed plans)")
     lines.append("")
-    lines.append("Captured by `streaming._drain` from "
+    lines.append("Captured by `streaming._drain_to_memory` from "
                  "`StreamExecution.lastExecution` at drain time — the same "
                  "scale screening as the batch table. Stateful operators "
                  "show their state-store ops; shuffle counts are "
