@@ -48,6 +48,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from t2p_spark.fixtures import ReferenceMissing
+    from t2p_spark.kernel import warm_workers
     from t2p_spark.pipeline import extract
 
     spark = (
@@ -68,20 +69,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     sf = sf_of(SF_DIR)
 
-    # warmup: JVM JIT + the Python worker pool (pandas/pyarrow imports)
-    import pyarrow as pa
-
-    def _warm(batches):
-        import t2p_spark.kernel  # noqa: F401
-        n = 0
-        for b in batches:
-            n += b.num_rows
-        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())],
-                                         names=["n"])
-
-    (spark.range(10000).repartition(CPUS * 2)
-     .selectExpr("cast(id as string) doc_id")
-     .mapInArrow(_warm, "n long").count())
+    # warmup: JVM JIT + the Python worker pool (kernel imports)
+    warm_workers(spark, CPUS * 2)
 
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}

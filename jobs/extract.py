@@ -29,9 +29,11 @@ def main() -> int:
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--prewarm", action="store_true",
-                    help="spin up + warm the Python worker pool before the "
-                         "timed window (steady-state measurement; a real "
-                         "cluster amortizes worker startup over hours)")
+                    help="start the Python worker pool and import the "
+                         "kernel in every worker (kernel.warm_workers) "
+                         "before the timed window: a steady-state "
+                         "measurement, since a real cluster amortizes "
+                         "worker startup over hours")
     ap.add_argument("--max-partition-bytes", default=None,
                     help="spark.sql.files.maxPartitionBytes override; "
                          "smaller splits balance doc-size skew (e.g. 16m "
@@ -67,21 +69,9 @@ def main() -> int:
     spark = builder.getOrCreate()
 
     if args.prewarm:
-        import pyarrow as pa
+        from t2p_spark.kernel import warm_workers
 
-        def _warm(batches):
-            import t2p_spark.kernel  # noqa: F401 — pulls pyarrow/pandas into workers
-            n = 0
-            for b in batches:
-                n += b.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([n], pa.int64())], names=["n"]
-            )
-
-        (spark.range(10000)
-         .repartition(spark.sparkContext.defaultParallelism * 2)
-         .selectExpr("cast(id as string) doc_id")
-         .mapInArrow(_warm, "n long").count())
+        warm_workers(spark, spark.sparkContext.defaultParallelism * 2)
 
     t0 = time.monotonic()
     metrics = run_extract_job(

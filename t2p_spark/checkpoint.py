@@ -56,7 +56,6 @@ def run_extract_job(
 
     Returns the metrics DataFrame of the buckets processed in this run.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     docs = spark.read.parquet(input_path)
 
     # a bucket-partitioned input (FIXTURES.md §1 layout) gives real partition

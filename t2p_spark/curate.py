@@ -153,22 +153,21 @@ def run_curation_job(spark: SparkSession, sf_dir: str, out_dir: str,
         n_resumed = len(todo)
         if todo:
             # rewrite exactly the missing/mismatching shard partitions
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           "dynamic")
             in_list = ", ".join(str(s) for s in todo)
             (sharded.where(f"shard_id IN ({in_list})")
              .repartition(len(todo), "shard_id")
-             .write.mode("overwrite").partitionBy("shard_id")
-             .parquet(shards_path))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("shard_id").parquet(shards_path))
     else:
-        # full write replaces the WHOLE directory (static overwrite):
-        # another job on this session may have left the session conf on
-        # dynamic, which would strand partitions from a previous layout
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        # full write replaces the WHOLE directory (static overwrite, set
+        # on the write: a session left on dynamic would strand partitions
+        # from a previous layout)
         n_resumed = len(e_rows)
         (sharded.repartition(nsh, "shard_id")
-         .write.mode("overwrite").partitionBy("shard_id")
-         .parquet(shards_path))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "static")
+         .partitionBy("shard_id").parquet(shards_path))
 
     # 5. manifest FROM THE WRITTEN FILES, cross-checked against the
     # pre-write accounting (order-free digests are mergeable, so both

@@ -83,6 +83,6 @@ def write_extracted(spark: SparkSession, df: DataFrame, dest: str,
         ).collect()
         return {"format": "iceberg", "table": table,
                 "snapshot_id": snap[0][0] if snap else None}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy("bucket").parquet(dest)
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("bucket").parquet(dest))
     return {"format": "parquet", "path": dest, "snapshot_id": None}

@@ -15,6 +15,8 @@ needs, built on the same kernels so batch/stream semantics are identical:
     landing-zone history a file stream replays oldest-first. Staging is
     memoized per session and table, and every staged dir lives under one
     per-process root that is removed at interpreter exit.
+    ``_stage_redelivery`` stages the dedup screen's replay the same way:
+    a copy of the events replay plus a last chunk of redelivered events.
   - ``_drain_to_memory``: the one memory drain. Each of the six streamed
     driver queries (sessionization, tumbling windows, redelivery dedup,
     near-dup / PII / quality screens) is a ``build`` from the replay
@@ -45,12 +47,10 @@ def write_extract_batch(batch_df: DataFrame, batch_id: int,
     partitioned by (batch_id, bucket) with dynamic partition overwrite, so
     a retried microbatch rewrites exactly its own batch_id partitions —
     at-least-once delivery becomes effectively-once durable output."""
-    batch_df.sparkSession.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    )
     (batch_df
      .withColumn("batch_id", F.lit(batch_id))
      .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
      .partitionBy("batch_id", "bucket")
      .parquet(output_path))
 
@@ -229,6 +229,34 @@ def _stage_chunks(spark: SparkSession, sf_dir: str, table: str,
     return _STAGED[key]
 
 
+def _stage_redelivery(spark: SparkSession, sf_dir: str):
+    """The events replay plus a final chunk that redelivers the ~5% of
+    events whose md5-bucket of event_id is below 5. Returns (dir, schema),
+    memoized like ``_stage_chunks``: the chunks are copied with their
+    pinned mtimes, and the redelivery chunk's mtime is pinned after the
+    last of them, so the stream replays it last."""
+    from t2p_spark.session import session_key
+
+    key = (session_key(spark), sf_dir, "events_redelivery")
+    if key in _STAGED:
+        return _STAGED[key]
+    path, schema = _stage_chunks(spark, sf_dir, *_EVENTS_REPLAY)
+    out_dir = tempfile.mkdtemp(prefix="t2p_events_dup_", dir=_stage_root())
+    chunks = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    for f in chunks:
+        shutil.copy2(os.path.join(path, f), out_dir)
+    (spark.read.parquet(path)
+     .where("CAST(CONV(SUBSTRING(md5(CAST(event_id AS STRING)), 1, 8), "
+            "16, 10) AS BIGINT) % 100 < 5")
+     .coalesce(1).write.mode("append").parquet(out_dir))
+    last = max(os.stat(os.path.join(out_dir, f)).st_mtime for f in chunks)
+    for f in os.listdir(out_dir):
+        if f.endswith(".parquet") and f not in chunks:
+            os.utime(os.path.join(out_dir, f), (last + 10.0, last + 10.0))
+    _STAGED[key] = (out_dir, schema)
+    return _STAGED[key]
+
+
 _STREAM_SEQ = [0]
 
 # driver-query name -> the last drained run's FINAL microbatch executed
@@ -240,11 +268,11 @@ LAST_STREAM_PLANS: dict[str, str] = {}
 
 
 @contextlib.contextmanager
-def _checkpoint(prefix: str = "t2p_ck_"):
-    """A fresh temp dir for one drain (its checkpoint, or the dedup
-    screen's replay input), removed when the block exits: the memory sink
-    then holds the output and the drains here are never resumed."""
-    ck = tempfile.mkdtemp(prefix=prefix)
+def _checkpoint():
+    """A fresh checkpoint dir for one drain, removed when the block exits:
+    the memory sink then holds the output and the drains here are never
+    resumed."""
+    ck = tempfile.mkdtemp(prefix="t2p_ck_")
     try:
         yield ck
     finally:
@@ -378,21 +406,10 @@ def dedup_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing real was lost. At scale: state is one key per event in the
     retention window; production feeds bound it with
     ``dropDuplicatesWithinWatermark``."""
-    import glob
-
-    path, schema = _stage_chunks(spark, sf_dir, *_EVENTS_REPLAY)
-    # the replay dir is removed once the drain returns: the memory sink
-    # holds the output
-    with _checkpoint("t2p_events_dup_") as dup_dir:
-        for f in glob.glob(f"{path}/*.parquet"):
-            shutil.copy(f, dup_dir)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        (ev.where("CAST(CONV(SUBSTRING(md5(CAST(event_id AS STRING)), 1, 8), "
-                  "16, 10) AS BIGINT) % 100 < 5")
-         .coalesce(1).write.mode("append").parquet(dup_dir))
-        table = _drain_to_memory(
-            spark, "events_stream_dedup", dup_dir, schema,
-            lambda stream, _: stream.dropDuplicates(["event_id"]), "append")
+    path, schema = _stage_redelivery(spark, sf_dir)
+    table = _drain_to_memory(
+        spark, "events_stream_dedup", path, schema,
+        lambda stream, _: stream.dropDuplicates(["event_id"]), "append")
     return spark.sql(f"""
         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
         FROM {table} GROUP BY event_type

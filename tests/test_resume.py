@@ -89,7 +89,13 @@ def test_exact_resume_generated_docs(spark, tmp_path):
     for doc_id, make, seed in specs:
         aws, w, h, media = make(doc_id, seed)
         rows.append(doc_row(doc_id, json.dumps(aws), w, h, media))
+    # the job sets its partition overwrite mode per write, never on the
+    # session
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
     want = _assert_exact_resume(spark, tmp_path, rows)
+    assert spark.conf.get(key) == before
     assert sum(n_docs for n_docs, _, _, _ in want.values()) == 40
     n_ok = sum(n_ok for _, n_ok, _, _ in want.values())
     assert 0 < n_ok <= 36, "both ok and quarantined buckets are resumed"

@@ -173,28 +173,36 @@ for staged, _ in streaming._STAGED.values():
     assert not [d for d in staged if os.path.exists(d)]
 
 
-def test_dedup_stream_removes_its_replay_dir(spark, monkeypatch):
-    """The dedup screen's redelivery replay dir (t2p_events_dup_*) is gone
-    once the drain returns: the memory sink holds the output."""
-    import tempfile
-
+def test_dedup_replay_staged_once(spark):
+    """The dedup screen's replay (the events chunks plus the redelivery
+    chunk) is staged once per session: a second call writes no staged
+    file. The copied chunks keep their pinned mtimes and the redelivery
+    chunk replays after them."""
     from t2p_spark import streaming
     from tests.test_curate_job import SF
 
-    made = []
-    real = tempfile.mkdtemp
+    def mtimes(root, suffix=""):
+        return {os.path.relpath(os.path.join(d, f), root):
+                os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, files in os.walk(root) for f in files
+                if f.endswith(suffix)}
 
-    def spy(*args, **kwargs):
-        made.append(real(*args, **kwargs))
-        return made[-1]
+    first = sorted(streaming.dedup_streamed_result(spark, SF).collect())
+    staged = mtimes(streaming._stage_root())
+    second = sorted(streaming.dedup_streamed_result(spark, SF).collect())
+    assert mtimes(streaming._stage_root()) == staged
+    assert second == first
 
-    monkeypatch.setattr(tempfile, "mkdtemp", spy)
-    out = streaming.dedup_streamed_result(spark, SF)
-    assert out.count() > 0
-    dup = [d for d in made
-           if os.path.basename(d).startswith("t2p_events_dup_")]
-    assert len(dup) == 1
-    assert not os.path.exists(dup[0])
+    events_dir, _ = streaming._stage_chunks(spark, SF,
+                                            *streaming._EVENTS_REPLAY)
+    dup_dir, _ = streaming._stage_redelivery(spark, SF)
+    chunks = mtimes(events_dir, ".parquet")
+    dup = mtimes(dup_dir, ".parquet")
+    assert {f: dup[f] for f in chunks} == chunks
+    redelivery = set(dup) - set(chunks)
+    assert len(redelivery) == 1
+    assert dup[redelivery.pop()] > max(chunks.values())
+
 
 def test_streaming_events_window_equals_batch(spark, tmp_path):
     from t2p_spark.relational import register_views
