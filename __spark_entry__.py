@@ -463,9 +463,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out[name] = (lambda n: lambda spark, sf: run_ann(spark, sf, n))(name)
     # IVF coarse-quantizer ANN (integer-exact unrolled k-means; scale path)
     out["ann_topk_ivf"] = lambda spark, sf: run_ann(spark, sf, "ann_topk_ivf")
-    # streaming twins under the hard oracle: drain the stateful
-    # applyInPandasWithState sessionization / watermarked tumbling stream
-    # over chronological chunk files; oracle = the batch SQL
+    # streaming twins under the hard oracle: drain the session-window
+    # sessionization / watermarked tumbling stream over chronological
+    # chunk files; oracle = the batch SQL
     from t2p_spark.streaming import (
         dedup_streamed_result, neardup_screen_streamed_result,
         pii_screen_streamed_result, quality_gate_streamed_result,

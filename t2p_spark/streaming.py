@@ -87,57 +87,24 @@ def run_extract_stream(spark: SparkSession, input_path: str, output_path: str,
 
 
 def events_sessionize_stream(events_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user sessionization as a stream via
-    ``applyInPandasWithState`` — the streaming twin of the batch
-    ``events_sessionize`` query (same 30-min inactivity gap, same
-    (ts, event_id) tie-break).
+    """Per-user sessionization as a stream: Spark's native session window
+    with the batch ``events_sessionize`` twin's 30-min inactivity gap, one
+    row per (user_id, session) with its event count.
 
-    State per user: (last event epoch, session count, event count).
-    Each microbatch folds its events into the state with a vectorized
-    numpy gap test and emits the RUNNING totals (output mode "update");
-    once the stream drains, the last emitted row per user equals the
-    batch aggregate. At scale this is one shuffle on user_id per
-    microbatch with O(users) state, the canonical stateful-streaming
-    shape.
+    A session window merges an event whose ts is at most its session's
+    last ts plus the gap, so the plain "30 minutes" gap reproduces the
+    batch twin's strict ``ts > prev + 30 min`` new-session test: a pair
+    exactly 30 min apart stays one session, a pair 30 min + 1 us apart
+    is two.
+
+    Drained in complete mode, the sink holds every final session window,
+    and the state keeps every session window too, so state grows with
+    sessions, not with users: fine for the bounded availableNow replay
+    this query drains. An unbounded feed would need append mode with a
+    watermark plus a final flush of the sessions still open.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # the batch twin's gap, hard-coded there too: stream == batch
-    gap_sec = 30 * 60.0
-
-    def fn(key, pdf_iter, state):
-        if state.exists:
-            last_ts, n_sessions, n_events = state.get
-        else:
-            last_ts, n_sessions, n_events = None, 0, 0
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            ts = (pd.to_datetime(pdf["ts"]).astype("int64") / 1e9).to_numpy()
-            prev = np.empty_like(ts)
-            prev[0] = last_ts if last_ts is not None else -np.inf
-            prev[1:] = ts[:-1]
-            n_sessions += int((ts > prev + gap_sec).sum())
-            n_events += len(ts)
-            batch_max = float(ts.max())
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-        state.update((last_ts, n_sessions, n_events))
-        yield pd.DataFrame({
-            "user_id": [key[0]],
-            "n_sessions": [n_sessions],
-            "n_events": [n_events],
-        })
-
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType="user_id long, n_sessions long, n_events long",
-        stateStructType="last_ts double, n_sessions long, n_events long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return events_stream.groupBy(
+        "user_id", F.session_window("ts", "30 minutes")).count()
 
 
 def events_tumbling_stream(events_stream: DataFrame) -> DataFrame:
@@ -161,10 +128,10 @@ def events_tumbling_stream(events_stream: DataFrame) -> DataFrame:
 
 
 # The two landing-zone replays, as _stage_chunks arguments (table, slice,
-# order columns, chunk count). Events arrive chronologically: the stateful
-# gap fold assumes batches in time order, and the 2h watermark drops data
-# arriving later than that. The incoming documents are the doc_id % 4 = 0
-# slice (the oracles restrict their batch twins to it), in doc_id order.
+# order columns, chunk count). Events arrive chronologically, because the
+# tumbling query's 2h watermark drops data arriving later than that. The
+# incoming documents are the doc_id % 4 = 0 slice (the oracles restrict
+# their batch twins to it), in doc_id order.
 _EVENTS_REPLAY = ("events", "TRUE", ("ts", "event_id"), 4)
 _DOCS_REPLAY = ("documents", "doc_id % 4 = 0", ("doc_id",), 3)
 
@@ -294,25 +261,22 @@ def _drain_to_memory(spark: SparkSession, audit_name: str, path: str,
     ``LAST_STREAM_PLANS[audit_name]`` (best-effort: plan capture must
     never fail a drain — py4j internals are version-sensitive).
 
-    Shuffle partitions are capped for the drain: each stateful
-    microbatch spins one state-store instance PER shuffle partition per
-    batch — at a bench-style 64 partitions x 4 batches the fixed
-    state-store overhead dwarfs the (tiny) data. The cap is
-    scale-adaptive (half the session's core count, floor 8): the
-    per-GROUP pandas invocation inside applyInPandasWithState is the
-    sessionization drain's real cost, so too few partitions serializes
-    Python work (measured: 2 partitions 9.0s, 8 -> 3.2-5.1s, 16 ->
-    2.8-3.1s on 32 cores), while partitions >> cores only multiply
-    state-store instances. Fresh checkpoints pin their own partition
-    count, so the cap never leaks into a resumed stream; the previous
-    session value is restored on exit.
+    Shuffle partitions are capped at the session's default parallelism
+    for the drain, one state-store instance per core: each stateful
+    microbatch opens one state-store instance per shuffle partition, and
+    at replay scale that fixed per-partition cost, not the data, decides
+    the drain's time (sf0.1 on 4 cores, median of 5, every stateful
+    drain was fastest at 4 partitions, then 8, then 16). Fresh
+    checkpoints pin their own partition count, so the cap never leaks
+    into a resumed stream; the previous session value is restored on
+    exit.
     """
     _STREAM_SEQ[0] += 1
     qname = f"{audit_name}_{_STREAM_SEQ[0]}"
     view = f"{qname}_in"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-                   str(max(8, spark.sparkContext.defaultParallelism // 2)))
+                   str(spark.sparkContext.defaultParallelism))
     try:
         with _checkpoint() as ck:
             # maxFilesPerTrigger=2: the drain's per-microbatch fixed cost
@@ -356,21 +320,20 @@ def _drain_to_memory(spark: SparkSession, audit_name: str, path: str,
 
 
 def sessionize_streamed_result(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-oracle surface for the stateful sessionization stream: drain
-    the applyInPandasWithState stream over chronological chunks with
-    availableNow and return the FINAL per-user totals. The update-mode
-    memory sink accumulates one row per (user, microbatch); running totals
-    only grow, so MAX per user is the drained state. Oracle: the batch
+    """Driver-oracle surface for the session-window stream: drain it over
+    chronological chunks with availableNow in complete mode, so the
+    memory table holds one row per final (user, session), and count the
+    sessions and sum their events per user. Oracle: the batch
     events_sessionize window SQL (RELATIONAL_SQL) — hash equality means
-    the stateful streaming operator reproduces the batch semantics."""
+    the native session window reproduces the batch gap semantics."""
     path, schema = _stage_chunks(spark, sf_dir, *_EVENTS_REPLAY)
     table = _drain_to_memory(
         spark, "events_sessionize_streamed", path, schema,
-        lambda stream, _: events_sessionize_stream(stream), "update")
+        lambda stream, _: events_sessionize_stream(stream), "complete")
     return spark.sql(f"""
         SELECT user_id,
-               MAX(n_sessions) AS n_sessions,
-               MAX(n_events) AS n_events
+               COUNT(*) AS n_sessions,
+               SUM(count) AS n_events
         FROM {table} GROUP BY user_id
     """)
 

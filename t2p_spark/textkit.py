@@ -347,9 +347,8 @@ def _build(engine: str, n_minhash: int = None, simhash_bands: int = None,
 
     # LSH candidate pairs. Spark: explode 4 bands -> equi-join on
     # (band, key) — a shuffle on the band hash, never an OR-join nested
-    # loop (lsh_pairs_build_sql; the plan is committed under
-    # plans/r07/pairs_mat_build_after.txt). The pair relation is
-    # materialized ONCE per corpus as ``pairs_mat`` (ensure_lsh_pairs) —
+    # loop (lsh_pairs_build_sql). The pair relation is materialized
+    # ONCE per corpus as ``pairs_mat`` (ensure_lsh_pairs) —
     # the candidate-pair table a production dedup pipeline persists — and
     # every pair consumer (this query, split_leakage,
     # source_overlap_matrix, neardup_verified_pairs, the CC resolution)
@@ -1227,10 +1226,10 @@ def _build(engine: str, n_minhash: int = None, simhash_bands: int = None,
     # Spark dialect (r7 optimization round): the chained-NOT-EXISTS /
     # 6-UNION-branch formulation re-evaluated every stage CTE once per
     # branch (Catalyst inlines WITH subqueries; the branches' subtrees
-    # differ, so ReuseExchange cannot dedupe them — 152 Exchange nodes,
-    # plans/r07/curate_attrition_before.txt). Rewritten to the proven
-    # curate_attrition_incr shape with the stages INLINE: every stage
-    # relation holds at most one row per doc_id, so the funnel is ONE pass
+    # differ, so ReuseExchange cannot dedupe them — 152 Exchange nodes
+    # in that plan). Rewritten to the proven curate_attrition_incr shape
+    # with the stages INLINE: every stage relation holds at most one row
+    # per doc_id, so the funnel is ONE pass
     # of left joins + cumulative pass flags. The report aggregates by
     # ROLLUP(split) — per-split rows AND the grand-total row in one
     # aggregate — and a single explode over that tiny relation emits both

@@ -258,42 +258,45 @@ def test_streaming_sink_idempotent_on_retry(spark, tmp_path):
 
 
 def test_streaming_sessionize_equals_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization drained over chronological
-    file chunks == the batch window-function sessionization."""
-    from t2p_spark.relational import RELATIONAL_SQL, register_views
-    from t2p_spark.streaming import _drain_to_memory, events_sessionize_stream
+    """The session-window stream, drained over chronological file chunks,
+    equals the batch window-function sessionization: over the sf0.001
+    events, and over hand-built pairs at the 30-min gap boundary, where
+    the batch twin starts a new session only when ts > prev + 30 min."""
+    import datetime as dt
+
+    from t2p_spark.relational import RELATIONAL_SQL
+    from t2p_spark.streaming import sessionize_streamed_result
 
     sf_dir = "/root/testdata/sf0.001"
-    register_views(spark, sf_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev_dir = str(tmp_path / "events")
-    # four chronological chunks committed in order, so the file stream
-    # replays history across multiple stateful microbatches
-    import pyspark.sql.functions as F
+    t0 = dt.datetime(2024, 1, 1)
+    gap, us = dt.timedelta(minutes=30), dt.timedelta(microseconds=1)
+    # (user, offset from t0): a pair exactly the gap apart; a pair the
+    # gap + 1 us apart; a chain at 0, 30, 60 min and 60 min + 2 us; a
+    # pair the gap - 1 us apart
+    edge = [(1, 0 * gap), (1, gap), (2, 0 * gap), (2, gap + us),
+            (3, 0 * gap), (3, gap), (3, 2 * gap), (3, 2 * gap + 2 * us),
+            (4, 0 * gap), (4, gap - us)]
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    rows = [(i, t0 + off, user, "click", 1.0, "{}")
+            for i, (user, off) in enumerate(edge)]
+    edge_dir = str(tmp_path / "edge")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+        f"{edge_dir}/events.parquet")
 
-    rows = ev.orderBy("ts", "event_id").collect()
-    quarter = (len(rows) + 3) // 4
-    for i in range(4):
-        chunk = rows[i * quarter:(i + 1) * quarter]
-        if chunk:
-            spark.createDataFrame(chunk, ev.schema).coalesce(1) \
-                .write.mode("append").parquet(ev_dir)
-
-    table = _drain_to_memory(
-        spark, "sess_agg", ev_dir, ev.schema,
-        lambda stream, _: events_sessionize_stream(stream), "update")
-    # the memory sink accumulates one row per (user, microbatch); running
-    # totals only grow, so the final state is the max-n_events row
-    got = {}
-    for r in spark.sql(f"SELECT * FROM {table}").collect():
-        cur = got.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[1]:
-            got[r["user_id"]] = (r["n_sessions"], r["n_events"])
-    want = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in spark.sql(RELATIONAL_SQL["events_sessionize"]).collect()
-    }
-    assert got == want
+    batch_sql = RELATIONAL_SQL["events_sessionize"]
+    assert batch_sql.count("FROM events") == 1
+    for sf in (sf_dir, edge_dir):
+        spark.read.parquet(f"{sf}/events.parquet") \
+            .createOrReplaceTempView("sess_events")
+        want = {r["user_id"]: (r["n_sessions"], r["n_events"])
+                for r in spark.sql(batch_sql.replace(
+                    "FROM events", "FROM sess_events")).collect()}
+        got = {r["user_id"]: (r["n_sessions"], r["n_events"])
+               for r in sessionize_streamed_result(spark, sf).collect()}
+        assert got == want
+    spark.catalog.dropTempView("sess_events")
+    # the last input is the boundary case: (sessions, events) per user
+    assert got == {1: (1, 2), 2: (2, 2), 3: (1, 4), 4: (1, 2)}
 
 
 def test_media_table_and_meta(spark):

@@ -210,7 +210,7 @@ def main() -> int:
         state_ops = sorted({op for op in re.findall(r"^\(\d+\) (\w+)",
                                                     plan, re.M)
                             if "State" in op or "Dedup" in op
-                            or "InPandasWithState" in op})
+                            or "Session" in op})
         flags = ", ".join(s["flags"]) or (
             "null-aware-anti" if s["null_aware_anti"] else "none")
         if s["flags"] or s["null_aware_anti"]:
