@@ -261,22 +261,23 @@ def _drain_to_memory(spark: SparkSession, audit_name: str, path: str,
     ``LAST_STREAM_PLANS[audit_name]`` (best-effort: plan capture must
     never fail a drain — py4j internals are version-sensitive).
 
-    Shuffle partitions are capped at the session's default parallelism
-    for the drain, one state-store instance per core: each stateful
-    microbatch opens one state-store instance per shuffle partition, and
-    at replay scale that fixed per-partition cost, not the data, decides
-    the drain's time (sf0.1 on 4 cores, median of 5, every stateful
-    drain was fastest at 4 partitions, then 8, then 16). Fresh
-    checkpoints pin their own partition count, so the cap never leaks
-    into a resumed stream; the previous session value is restored on
-    exit.
+    Shuffle partitions are capped for the drain (half the session's core
+    count, floor 8): each stateful microbatch opens one state-store
+    instance per shuffle partition, and at a bench-style 64 partitions x
+    4 batches that fixed cost dwarfs the (tiny) replay. The rule is a
+    default, not a measured optimum: on 4 cores at sf0.1, where it gives
+    8, every stateful drain was slower at 16 and faster at 4, and the
+    fastest count from 1 to 4 differed by query. Above 16 cores, where
+    the rule gives more than 8, it is untimed. Fresh checkpoints pin
+    their own partition count, so the cap never leaks into a resumed
+    stream; the previous session value is restored on exit.
     """
     _STREAM_SEQ[0] += 1
     qname = f"{audit_name}_{_STREAM_SEQ[0]}"
     view = f"{qname}_in"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-                   str(spark.sparkContext.defaultParallelism))
+                   str(max(8, spark.sparkContext.defaultParallelism // 2)))
     try:
         with _checkpoint() as ck:
             # maxFilesPerTrigger=2: the drain's per-microbatch fixed cost
