@@ -4,7 +4,7 @@ does not reach.
 
 Together the two corpora reach every executable line of a function body in
 ``t2p_spark/convert.py`` (tests/test_branch_corpus.py). Their verdicts
-(status, error class, span md5, render md5) are pinned in
+(status, full error text, span md5, render md5) are pinned in
 tests/golden_synth/convert_golden.json by ``tools/make_synth_golden.py``.
 
 Each doc is ``(name, aws_json, width, height)``; the name says which branch
@@ -247,4 +247,54 @@ def branch_docs() -> List[Tuple[str, Dict, int, int]]:
 
     # build_model: Blocks that is no list (TypeError)
     docs.append(("blocks_not_a_list", {"Blocks": 5}, W, H))
+
+    # points: integer coordinates 0 and 1, in a box and in a polygon
+    line = text_line(1, 0.1)
+    line[0]["Geometry"] = bbox(0, 0, 1, 1)
+    line[1]["Geometry"] = poly([(0, 0), (1, 0), (1, 1), (0, 1)])
+    add("integer_coordinates", [PAGE] + line)
+
+    # points: a -0.0 coordinate formats as "0"
+    line = text_line(1, 0.1)
+    line[0]["Geometry"] = bbox(-0.0, 0.1, 0.3, 0.02)
+    line[1]["Geometry"] = poly([(-0.0, 0.1), (0.1, -0.0), (0.1, 0.1)])
+    add("negative_zero_coordinate", [PAGE] + line)
+
+    # points: (left + width) * w is computed as one product. It lands on
+    # 750.0 exactly for 0.25 + 0.5, and on 300.00000000000006 (ceil 301)
+    # for 0.1 + 0.2, where left * w + width * w would give 300
+    line = text_line(1, 0.1)
+    line[0]["Geometry"] = bbox(0.25, 0.25, 0.5, 0.5)
+    line[1]["Geometry"] = bbox(0.1, 0.1, 0.2, 0.2)
+    add("box_right_edge_on_integer", [PAGE] + line)
+
+    # points: boxes, a 3-point and a 17-point polygon in one doc
+    blocks = [PAGE]
+    for i in range(3):
+        blocks += text_line(i, 0.1 + 0.1 * i)
+    blocks[1]["Geometry"] = poly([(0.1, 0.1), (0.4, 0.1), (0.4, 0.12)])
+    blocks[4]["Geometry"] = poly(_circle(17))
+    add("mixed_box_and_polygon", blocks)
+
+    # points: a negative image width and height (ceil of negative
+    # products; 0.0004 * -1000 lies in (-1, 0) and formats as "0")
+    line = text_line(1, 0.1)
+    line[1]["Geometry"] = bbox(0.0004, 0.1, 0.1, 0.02)
+    add("negative_image_size", [PAGE] + line, -1000, -800)
+
+    # build_geometry: a negative box width fails its range assert
+    line = text_line(1, 0.1)
+    line[1]["Geometry"] = bbox(0.2, 0.1, -0.1, 0.02)
+    add("negative_box_width", [PAGE] + line)
+
+    # stage 5: a dangling line whose Id is an int cannot name its dummy
+    # layout (TypeError from line.id + "_parent")
+    line = text_line(1, 0.1)
+    line[0]["Id"] = 7
+    add("dangling_line_int_id", [PAGE] + line)
+
+    # emit: a word whose Text is a number fails the field join (TypeError)
+    line = text_line(1, 0.1)
+    line[1]["Text"] = 42
+    add("word_text_number", [PAGE] + line)
     return docs

@@ -1,7 +1,7 @@
 """Offline converter oracle: the branch corpus plus the 120 synth docs.
 
 Without the reference checkout, the committed goldens are what guards
-convert.py. ``convert_golden.json`` pins status, error class, span md5 and
+convert.py. ``convert_golden.json`` pins status, full error text, span md5 and
 render md5 for the hand-built branch corpus (tests/branch_corpus.py) and
 the 120-doc synth corpus — regenerate it with
 ``python tools/make_synth_golden.py`` only for an intended output change.
@@ -86,6 +86,63 @@ def test_every_convert_line_reached(golden_tool, synth_rows):
         src = f.read().splitlines()
     missed = sorted(_function_lines(path) - hit)
     assert not missed, "\n".join(f"{n}: {src[n - 1]}" for n in missed)
+
+
+def _kernel_batch(rows):
+    """An assembled kernel input batch of ``(doc_id, width, height,
+    media_ref, json_text)`` rows."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows]),
+         pa.array([r[1] for r in rows], pa.int32()),
+         pa.array([r[2] for r in rows], pa.int32()),
+         pa.array([r[3] for r in rows]),
+         pa.array([r[4] for r in rows])],
+        names=["doc_id", "width", "height", "media_ref", "json_text"])
+
+
+def test_kernel_equals_adapter(golden_tool, synth_rows):
+    """The Arrow kernel and ``convert_doc_safe`` agree row for row over
+    the convert corpus, a 2000-line skew doc and three decode quarantines,
+    as one batch and as batches of 7: status, full error text, spans and
+    n_blocks, and span_fp is ``_fingerprint`` of the adapter's spans."""
+    from t2p_spark import kernel
+    from t2p_spark.convert import convert_doc_safe
+    from t2p_spark.synth import generate_skew_doc
+
+    docs = list(golden_tool.convert_inputs(synth_rows))
+    aws, w, h, ref = generate_skew_doc("skew", 3, n_lines=2000)
+    docs.append(("skew", aws, w, h, ref))
+    rows, want = [], []
+    for doc_id, aws, w, h, ref in docs:
+        rows.append((doc_id, w, h, ref, json.dumps(aws)))
+        status, spans, error = convert_doc_safe(aws, w, h, ref)
+        blocks = aws.get("Blocks")
+        n_blocks = len(blocks) if isinstance(blocks, list) else 0
+        want.append((status, error, spans, n_blocks))
+    decode_rows = [("bad_json", 10, 10, "", "{not json"),
+                   ("json_array", 10, 10, "", "[1, 2]"),
+                   ("no_dims", None, 10, "", "{}")]
+    for row in decode_rows:
+        reason = next(kernel.decode_payloads(_kernel_batch([row])))[-1]
+        assert reason
+        rows.append(row)
+        want.append(("quarantined", reason, [], 0))
+
+    for size in (len(rows), 7):
+        got = []
+        for i in range(0, len(rows), size):
+            got += kernel._convert_batch(
+                _kernel_batch(rows[i:i + size])).to_pylist()
+        assert len(got) == len(rows)
+        for row, rec, (status, error, spans, n_blocks) in zip(rows, got, want):
+            assert rec["doc_id"] == row[0]
+            assert (rec["status"], rec["error"], rec["n_blocks"]) == \
+                (status, error, n_blocks), row[0]
+            assert [tuple(s.values()) for s in rec["spans"]] == spans, row[0]
+            assert rec["n_spans"] == len(spans)
+            assert rec["span_fp"] == kernel._fingerprint(row[0], spans)
 
 
 def test_model_leaves_no_reference_cycles(golden_tool, synth_rows):

@@ -12,9 +12,9 @@ Spark kernel == committed pure-Python oracle, hash-checked per round.
 
 Also writes tests/golden_synth/convert_golden.json: for every doc of the
 branch corpus (tests/branch_corpus.py) and of the 120 synth docs, the
-converter's status, error class, md5 of the span list and, for ok docs, the
-rendered PAGE-XML's canonical md5. It pins convert.py and render_xml.py
-byte for byte over inputs that reach every converter line
+converter's status, full quarantine reason, md5 of the span list and, for
+ok docs, the rendered PAGE-XML's canonical md5. It pins convert.py and
+render_xml.py byte for byte over inputs that reach every converter line
 (tests/test_branch_corpus.py); regenerate it only for an intended output
 change.
 
@@ -92,10 +92,12 @@ def doc_metrics(spans) -> dict:
 
 
 def convert_record(aws, width: int, height: int, media_ref: str) -> dict:
-    """One doc's converter verdict: status, error class, span md5 and, for
-    an ok doc, the rendered PAGE-XML's canonical md5."""
+    """One doc's converter verdict: status, the full quarantine reason
+    (``convert_doc_safe``'s error text, deterministic since blocks repr by
+    Id), span md5 and, for an ok doc, the rendered PAGE-XML's canonical
+    md5."""
     status, spans, err = convert_doc_safe(aws, width, height, media_ref)
-    rec = {"status": status, "error": err.split(":")[0],
+    rec = {"status": status, "error": err,
            "spans_md5": hashlib.md5(json.dumps(spans).encode()).hexdigest()}
     if status == "ok":
         rec["render_md5"] = canonical_md5(
