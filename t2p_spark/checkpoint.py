@@ -15,7 +15,8 @@ recorded per run (see t2p_spark.io_tables).
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+from contextlib import contextmanager
+from typing import Iterator, List, Optional
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +43,27 @@ def _exists(spark: SparkSession, path: str) -> bool:
         return False
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@contextmanager
+def _listed_on_driver(spark: SparkSession, n_dirs: int) -> Iterator[None]:
+    """Reads inside list up to ``n_dirs`` partition directories on the
+    driver instead of in a parallel-listing Spark job: the session's
+    listing threshold is raised to at least ``n_dirs``, and its value is
+    restored on exit, also when the read raises."""
+    previous = spark.conf.get(_LISTING_THRESHOLD, None)
+    current = int(spark.conf.get(_LISTING_THRESHOLD))
+    spark.conf.set(_LISTING_THRESHOLD, str(max(current, n_dirs)))
+    try:
+        yield
+    finally:
+        if previous is None:
+            spark.conf.unset(_LISTING_THRESHOLD)
+        else:
+            spark.conf.set(_LISTING_THRESHOLD, previous)
+
+
 def run_extract_job(
     spark: SparkSession,
     input_path: str,
@@ -55,8 +77,16 @@ def run_extract_job(
     """Read docs -> extract -> write spans + metrics, bucket by bucket.
 
     Returns the metrics DataFrame of the buckets processed in this run.
+
+    The input and the written output hold at most ``n_buckets`` leaf
+    directories each, so both are listed on the driver
+    (``_listed_on_driver``): a parallel-listing job of one task per
+    directory, each deserializing the Hadoop configuration, costs more
+    than the listing. The Iceberg sink is read from table metadata and
+    lists nothing.
     """
-    docs = spark.read.parquet(input_path)
+    with _listed_on_driver(spark, n_buckets):
+        docs = spark.read.parquet(input_path)
 
     # a bucket-partitioned input (FIXTURES.md §1 layout) gives real partition
     # pruning on resume AND a shuffle-free clustered write
@@ -104,7 +134,8 @@ def run_extract_job(
     if lineage["format"] == "iceberg":
         written = spark.table(lineage["table"])
     else:
-        written = spark.read.parquet(output_path)
+        with _listed_on_driver(spark, n_buckets):
+            written = spark.read.parquet(output_path)
     if done:
         written = written.filter(~F.col("bucket").isin(done))
     metrics = (

@@ -365,6 +365,23 @@ class Layout(_Block):
         ]
 
 
+def _dummy_layout(line: Line) -> Layout:
+    """The LAYOUT_DUMMY parent of a dangling line (:895-906). The reference
+    builds it from a copy of the line's block under the Id
+    ``<line id>_parent``, so its geometry and confidence are the line's,
+    already validated; a non-str line Id raises TypeError here as there."""
+    dummy = Layout.__new__(Layout)
+    dummy.id = line.id + "_parent"  # :902-903
+    dummy.prefix = "textract-layout-dummy"
+    dummy.geometry = line.geometry
+    dummy.confidence = line.confidence
+    dummy.page_layout_type = "floating"
+    dummy.textract_layout_type = "LAYOUT_DUMMY"
+    dummy.child_lines = [line]
+    dummy.child_regions = []
+    return dummy
+
+
 # ---------------------------------------------------------------------------
 # reading order — convert_aws.py:634-701
 
@@ -389,52 +406,48 @@ def derive_reading_order(word_list, up: _Links) -> List[object]:
 # flattening spec (FIXTURES.md §3): pre-order, same field joins.
 
 class _Emitter:
-    def __init__(self, w: int, h: int, media_ref: str) -> None:
-        self.w = w
-        self.h = h
+    """The spans of one document, as four columns: each span's kind, its
+    geometry, the text that follows its points, and its media ref. The
+    points are formatted afterwards, per span by :func:`convert_doc` or in
+    bulk by the Arrow kernel (``t2p_spark.kernel``). Each tail is joined
+    as ``US.join(["", ...])`` so that a non-str field raises the same
+    ``sequence item N`` TypeError as a join that starts with the points."""
+
+    def __init__(self, media_ref: str) -> None:
         self.media_ref = media_ref
-        self.out: List[List] = []
+        self.kinds: List[str] = []
+        self.geoms: List[tuple] = []
+        self.tails: List[str] = []
+        self.refs: List[str] = []
 
-    def _pts(self, obj) -> str:
-        # measured: memoizing this per geometry id costs MORE than the
-        # ~30% re-emission recompute it saves — the formatter is cheap
-        return points_from_geometry(obj.geometry, self.w, self.h)
-
-    def emit_word(self, word: Word) -> None:  # :1074-1081
-        self.out.append([
-            "word",
-            US.join([self._pts(word), word.text or "", word.text_type or ""]),
-            "",
-        ])
+    def _span(self, kind: str, obj, tail: str, ref: str = "") -> None:
+        self.kinds.append(kind)
+        self.geoms.append(obj.geometry)
+        self.tails.append(tail)
+        self.refs.append(ref)
 
     def emit_line(self, line: Line) -> None:  # :1061-1072
-        self.out.append([
-            "line",
-            US.join([self._pts(line), line.text or ""]),
-            "",
-        ])
-        for word in line.child_words:
-            self.emit_word(word)
+        self._span("line", line, US.join(["", line.text or ""]))
+        # the line's words (:1074-1081), column by column
+        words = line.child_words
+        self.tails.extend([US.join(["", w.text or "", w.text_type or ""])
+                           for w in words])
+        self.kinds.extend(["word"] * len(words))
+        self.geoms.extend([w.geometry for w in words])
+        self.refs.extend([""] * len(words))
 
     def emit_table(self, table: Table) -> None:  # :1112-1193
-        self.out.append([
-            "table",
-            US.join([self._pts(table), str(table.rows), str(table.columns)]),
-            "",
-        ])
+        self._span("table", table,
+                   US.join(["", str(table.rows), str(table.columns)]))
         for cell in table.cells:
-            self.out.append([
-                "cell",
-                US.join([
-                    self._pts(cell),
-                    str(cell.row_index),
-                    str(cell.column_index),
-                    str(cell.row_span),
-                    str(cell.column_span),
-                    "true" if cell.column_header else "false",
-                ]),
+            self._span("cell", cell, US.join([
                 "",
-            ])
+                str(cell.row_index),
+                str(cell.column_index),
+                str(cell.row_span),
+                str(cell.column_span),
+                "true" if cell.column_header else "false",
+            ]))
             for line in cell.child_lines:  # :1160-1175 full line + all words
                 self.emit_line(line)
 
@@ -444,19 +457,12 @@ class _Emitter:
             # ImageRegionType has no `type` attribute — the reference's
             # type_=page_layout_type (:1020) is silently dropped by the
             # serializer (golden XMLs carry no @type on ImageRegion).
-            self.out.append([
-                "media",
-                US.join([self._pts(layout), "",
-                         "textract-layout-type: figure;"]),
-                self.media_ref,
-            ])
+            self._span("media", layout,
+                       US.join(["", "", "textract-layout-type: figure;"]),
+                       self.media_ref)
             for line in layout.child_lines:
                 # dummy text region per line (:1027-1037): no type/custom
-                self.out.append([
-                    "region",
-                    US.join([self._pts(line), "", ""]),
-                    "",
-                ])
+                self._span("region", line, US.join(["", "", ""]))
                 self.emit_line(line)
             # :1050-1052
             assert len(layout.child_regions) == 0, \
@@ -468,11 +474,8 @@ class _Emitter:
         custom = ""
         if lt != "LAYOUT_DUMMY":  # :1085-1088
             custom = f"textract-layout-type: {lt.split('LAYOUT_')[1].lower()};"
-        self.out.append([
-            "region",
-            US.join([self._pts(layout), layout.page_layout_type, custom]),
-            "",
-        ])
+        self._span("region", layout,
+                   US.join(["", layout.page_layout_type, custom]))
         for line in layout.child_lines:
             self.emit_line(line)
         for child in layout.child_regions:
@@ -585,17 +588,14 @@ def build_model(aws_json: Dict) -> _Model:
     for line in lines.values():
         if line in up.table or line in up.layout:
             continue
-        dummy_block = dict(line_blocks[line.id])  # :902
-        dummy_block["Id"] = line.id + "_parent"
-        dummy_block["BlockType"] = "LAYOUT_DUMMY"
-        dummy = Layout(dummy_block, {}, {}, {}, up)
-        dummy.child_lines = [line]
+        dummy = _dummy_layout(line)
         up.layout[line] = dummy
         block_order[dummy.id] = block_order[line.id]  # :908
         layouts[dummy.id] = dummy
 
-    # stage 6: order (:911-941)
-    text_regions = derive_reading_order(words.values(), up)
+    # stage 6: order (:911-941). The word-derived order is read only in
+    # word-order mode and to splice a table that matches no layout.
+    text_regions = None
     if any(layouts):
         layout_regions = sorted(layouts.values(), key=lambda o: block_order[o.id])
         for table in tables.values():  # :920-938 table splice
@@ -607,6 +607,8 @@ def build_model(aws_json: Dict) -> _Model:
                     break
             if layout_pos > -1:
                 continue
+            if text_regions is None:
+                text_regions = derive_reading_order(words.values(), up)
             text_pos = text_regions.index(table)  # ValueError on wordless table (§2.8.3)
             if text_pos > 0:
                 layout_pos = layout_regions.index(text_regions[text_pos - 1]) + 1
@@ -617,7 +619,7 @@ def build_model(aws_json: Dict) -> _Model:
             )
         reading_order = layout_regions
     else:
-        reading_order = text_regions
+        reading_order = text_regions = derive_reading_order(words.values(), up)
         # crash parity (:1148): in word-order mode a table with cells but no
         # words is serialized (:1198) without a reading-order group ->
         # `None.add_RegionRef` AttributeError in the reference.
@@ -632,18 +634,15 @@ def build_model(aws_json: Dict) -> _Model:
     return _Model(layouts, tables, reading_order)
 
 
-def convert_doc(aws_json: Dict, img_width: int, img_height: int,
-                media_ref: str = "") -> List[Span]:
-    """Convert one parsed Textract response to its ordered span sequence.
-
-    Raises on every input the reference converter would crash on
-    (SURVEY.md §2.8) — wrap with :func:`convert_doc_safe` in pipelines.
-    """
+def emit_doc(aws_json: Dict, media_ref: str = "") -> _Emitter:
+    """Stages 2-8 of one parsed Textract response: its spans as columns,
+    points not yet formatted. Raises on every input the reference
+    converter would crash on (SURVEY.md §2.8)."""
     model = build_model(aws_json)
     # stages 7+8 fused: emit spans per top-level object, in reading order.
     # (The reference writes region XML in construction order and reorders via
     # ReadingOrder; flatten_page_xml re-sorts to reading order — FIXTURES.md §3.)
-    emitter = _Emitter(img_width, img_height, media_ref)
+    emitter = _Emitter(media_ref)
     for obj in model.reading_order:
         if isinstance(obj, Table):
             # word-order mode crash parity: a serialized table outside the
@@ -654,8 +653,26 @@ def convert_doc(aws_json: Dict, img_width: int, img_height: int,
             emitter.emit_layout(obj)
         # Key/Value top-level entries are reading-order-only in the reference
         # (never serialized, §2.8.2) -> dangling regionRef -> no spans.
+    return emitter
 
-    return [(k, t, m, i) for i, (k, t, m) in enumerate(emitter.out)]
+
+def convert_doc(aws_json: Dict, img_width: int, img_height: int,
+                media_ref: str = "") -> List[Span]:
+    """Convert one parsed Textract response to its ordered span sequence.
+
+    Raises on every input the reference converter would crash on
+    (SURVEY.md §2.8) — wrap with :func:`convert_doc_safe` in pipelines.
+    """
+    e = emit_doc(aws_json, media_ref)
+    pts = points_from_geometry
+    return [(k, pts(g, img_width, img_height) + t, m, i)
+            for i, (k, g, t, m) in enumerate(
+                zip(e.kinds, e.geoms, e.tails, e.refs))]
+
+
+def quarantine_reason(exc: Exception) -> str:
+    """A quarantined document's ``error``: the exception class and text."""
+    return f"{type(exc).__name__}: {exc}"
 
 
 def convert_doc_safe(aws_json, img_width, img_height, media_ref=""):
@@ -667,4 +684,4 @@ def convert_doc_safe(aws_json, img_width, img_height, media_ref=""):
     try:
         return "ok", convert_doc(aws_json, img_width, img_height, media_ref), ""
     except Exception as exc:  # noqa: BLE001 — reference crash paths are data-dependent
-        return "quarantined", [], f"{type(exc).__name__}: {exc}"
+        return "quarantined", [], quarantine_reason(exc)

@@ -6,6 +6,8 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import AnalysisException
 
 from t2p_spark import synth
 from t2p_spark.checkpoint import run_extract_job
@@ -99,3 +101,47 @@ def test_exact_resume_generated_docs(spark, tmp_path):
     assert sum(n_docs for n_docs, _, _, _ in want.values()) == 40
     n_ok = sum(n_ok for _, n_ok, _, _ in want.values())
     assert 0 < n_ok <= 36, "both ok and quarantined buckets are resumed"
+
+
+def test_extract_job_lists_buckets_on_the_driver(spark, tmp_path):
+    """A job over an input and an output of more than 32 bucket dirs (the
+    default parallel-listing threshold) starts no parallel-listing job,
+    and leaves the session's threshold as it found it, also when a read
+    raises."""
+    from t2p_spark.pipeline import bucket_of
+
+    n_buckets = 40
+    rows = []
+    for i in range(120):
+        aws, w, h, media = synth.generate_doc(f"gen-{i:03d}", i)
+        rows.append(doc_row(f"gen-{i:03d}", json.dumps(aws), w, h, media))
+    inp = str(tmp_path / "docs")
+    (spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+     .withColumn("bucket", bucket_of(n_buckets))
+     .write.partitionBy("bucket").parquet(inp))
+    assert len(glob.glob(os.path.join(inp, "bucket=*"))) > 32
+
+    listing = spark._jvm.org.apache.spark.metrics.source \
+        .HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT()
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    # the control: a plain read of the input lists it in a Spark job
+    before = listing.getCount()
+    spark.read.parquet(inp)
+    assert listing.getCount() > before
+
+    spark.conf.set(key, "33")
+    out = str(tmp_path / "out")
+    before = listing.getCount()
+    metrics = run_extract_job(spark, inp, out, str(tmp_path / "m"),
+                              run_id="r", n_buckets=n_buckets)
+    assert listing.getCount() == before
+    assert len(glob.glob(os.path.join(out, "bucket=*"))) > 32
+    assert sum(r["n_docs"] for r in metrics.collect()) == 120
+    assert spark.conf.get(key) == "33"
+
+    spark.conf.unset(key)
+    with pytest.raises(AnalysisException):
+        run_extract_job(spark, str(tmp_path / "missing"), out,
+                        str(tmp_path / "m2"), run_id="r2",
+                        n_buckets=n_buckets)
+    assert spark.conf.get(key, None) is None

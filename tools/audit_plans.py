@@ -7,6 +7,10 @@ For every audited query: join strategies (broadcast vs shuffle, build
 side, null-awareness), pushed filters at the parquet scans, whole-stage
 codegen coverage, exchange count (shuffles), and any scale red flags
 (CartesianProduct, null-aware anti join, row-at-a-time Python).
+
+A query that needs the reference inputs (``fixtures.ReferenceMissing``)
+is skipped when they are absent, as in tools/check_oracle.py: the tool
+prints ``SKIP <name>: <reason>``, and the table row says it was skipped.
 """
 
 from __future__ import annotations
@@ -108,6 +112,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from t2p_spark.fixtures import ReferenceMissing
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -164,7 +169,13 @@ def main() -> int:
                       .withColumn("label", F.col("doc_id")))
             df = cc_round(labels, edges)
         else:
-            df = queries[name](spark, args.sf)
+            try:
+                df = queries[name](spark, args.sf)
+            except ReferenceMissing as exc:
+                print(f"SKIP {name}: {exc}", flush=True)
+                lines.append(f"| {name} | (skipped: reference inputs "
+                             "missing) | | | | | |")
+                continue
         qe = df._jdf.queryExecution()  # noqa: SLF001
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
             .fromString("formatted")  # noqa: SLF001
