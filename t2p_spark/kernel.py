@@ -23,9 +23,10 @@ those of ``convert.points_from_geometry``. The span struct is built from
 these Arrow arrays, and the fingerprint hashes the document's slice of
 one joined Arrow buffer, the byte stream ``_fingerprint`` hashes. Points
 are formatted right after each document's emit, so a batch holds span
-strings only, never every span's geometry. On a 6000-line skew doc this
-takes 30% less process time than a 4-tuple per span
-(``convert.convert_doc``, still the tests' and goldens' adapter).
+strings only, never every span's geometry. On a 6000-line skew doc,
+with gc off, this took 27-34% less process time than a 4-tuple per span
+(medians of 11, on one thread of a 4-core VM). ``convert.convert_doc``
+still builds the 4-tuples for the tests, the goldens and ``render_xml``.
 ``tests/test_branch_corpus.py::test_kernel_equals_adapter`` checks the
 two paths against each other, row for row.
 No row-at-a-time Python UDFs anywhere (input_hint constraint); the payload
@@ -360,7 +361,7 @@ def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
             columns.append(cols)
         else:
             fp = _fingerprint(doc_id, ())
-        emitter = None
+        emitter = None  # free its geometries before the next doc parses
         list_offsets.append(list_offsets[-1] + n_spans)
         status_col.append("quarantined" if error else "ok")
         error_col.append(error)
