@@ -44,17 +44,29 @@ def _exists(spark: SparkSession, path: str) -> bool:
 
 
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# The most directories listed on the driver: the largest bucket count for
+# which driver listing was timed, and only on a local filesystem. Above
+# it, Spark's own threshold decides.
+_DRIVER_LISTING_MAX_DIRS = 64
 
 
 @contextmanager
 def _listed_on_driver(spark: SparkSession, n_dirs: int) -> Iterator[None]:
-    """Reads inside list up to ``n_dirs`` partition directories on the
-    driver instead of in a parallel-listing Spark job: the session's
-    listing threshold is raised to at least ``n_dirs``, and its value is
-    restored on exit, also when the read raises."""
+    """Reads inside list up to ``n_dirs`` partition directories, at most
+    ``_DRIVER_LISTING_MAX_DIRS``, on the driver instead of in a
+    parallel-listing Spark job. The listing threshold is raised to that
+    count and restored on exit, also when the read raises.
+
+    Spark reads the threshold from the session's conf and has no per-read
+    option for it, so this is the one setting of the extract job made on
+    the session: while it is raised, every other query on the session
+    lists on the driver too. Do not overlap a ``run_extract_job`` with
+    another reader on the same session; overlapping restores could also
+    leave the raised value behind."""
     previous = spark.conf.get(_LISTING_THRESHOLD, None)
     current = int(spark.conf.get(_LISTING_THRESHOLD))
-    spark.conf.set(_LISTING_THRESHOLD, str(max(current, n_dirs)))
+    raised = max(current, min(n_dirs, _DRIVER_LISTING_MAX_DIRS))
+    spark.conf.set(_LISTING_THRESHOLD, str(raised))
     try:
         yield
     finally:
@@ -79,10 +91,13 @@ def run_extract_job(
     Returns the metrics DataFrame of the buckets processed in this run.
 
     The input and the written output hold at most ``n_buckets`` leaf
-    directories each, so both are listed on the driver
-    (``_listed_on_driver``): a parallel-listing job of one task per
-    directory, each deserializing the Hadoop configuration, costs more
-    than the listing. The Iceberg sink is read from table metadata and
+    directories each. Up to 64 of them are listed on the driver
+    (``_listed_on_driver``) instead of in a parallel-listing job of one
+    task per directory, each task deserializing the Hadoop configuration.
+    That was timed only on a local filesystem, with 44 bucket dirs on a
+    4-core VM, where the two listing jobs cost about 0.85 s of executor
+    CPU per pass. On remote storage, or above 64 buckets, Spark's own
+    threshold decides. The Iceberg sink is read from table metadata and
     lists nothing.
     """
     with _listed_on_driver(spark, n_buckets):

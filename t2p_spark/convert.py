@@ -408,8 +408,8 @@ def derive_reading_order(word_list, up: _Links) -> List[object]:
 class _Emitter:
     """The spans of one document, as four columns: each span's kind, its
     geometry, the text that follows its points, and its media ref. The
-    points are formatted afterwards, per span by :func:`convert_doc` or in
-    bulk by the Arrow kernel (``t2p_spark.kernel``). Each tail is joined
+    points are formatted afterwards, per span by :meth:`spans` or in bulk
+    by the Arrow kernel (``t2p_spark.kernel``). Each tail is joined
     as ``US.join(["", ...])`` so that a non-str field raises the same
     ``sequence item N`` TypeError as a join that starts with the points."""
 
@@ -425,6 +425,14 @@ class _Emitter:
         self.geoms.append(obj.geometry)
         self.tails.append(tail)
         self.refs.append(ref)
+
+    def spans(self, w: int, h: int) -> List[Span]:
+        """The spans as ``(kind, text, media_ref, offset)`` tuples, each
+        span's points formatted by :func:`points_from_geometry`."""
+        pts = points_from_geometry
+        return [(k, pts(g, w, h) + t, m, i)
+                for i, (k, g, t, m) in enumerate(
+                    zip(self.kinds, self.geoms, self.tails, self.refs))]
 
     def emit_line(self, line: Line) -> None:  # :1061-1072
         self._span("line", line, US.join(["", line.text or ""]))
@@ -663,11 +671,7 @@ def convert_doc(aws_json: Dict, img_width: int, img_height: int,
     Raises on every input the reference converter would crash on
     (SURVEY.md §2.8) — wrap with :func:`convert_doc_safe` in pipelines.
     """
-    e = emit_doc(aws_json, media_ref)
-    pts = points_from_geometry
-    return [(k, pts(g, img_width, img_height) + t, m, i)
-            for i, (k, g, t, m) in enumerate(
-                zip(e.kinds, e.geoms, e.tails, e.refs))]
+    return emit_doc(aws_json, media_ref).spans(img_width, img_height)
 
 
 def quarantine_reason(exc: Exception) -> str:

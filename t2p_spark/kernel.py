@@ -16,17 +16,23 @@ built columnar (see ``_convert_batch``). Inside a batch each document runs
 the converter's own model and emitter (``convert.emit_doc``), the code
 pytest validates against the reference goldens, which leaves its spans as
 columns: kind, geometry, the text after the points, media ref. The kernel
-then formats the document's points in bulk. Boxes take numpy float64
-``ceil(x * w)``, int64, an Arrow string cast and an element-wise join.
-Polygons take a list array and ``binary_join``. The float operations are
-those of ``convert.points_from_geometry``. The span struct is built from
-these Arrow arrays, and the fingerprint hashes the document's slice of
-one joined Arrow buffer, the byte stream ``_fingerprint`` hashes. Points
-are formatted right after each document's emit, so a batch holds span
-strings only, never every span's geometry. On a 6000-line skew doc,
-with gc off, this took 27-34% less process time than a 4-tuple per span
-(medians of 11, on one thread of a 4-core VM). ``convert.convert_doc``
-still builds the 4-tuples for the tests, the goldens and ``render_xml``.
+then formats the points of a document of ``_BULK_MIN_SPANS`` or more spans
+in bulk. Boxes take numpy float64 ``ceil(x * w)``, int64, an Arrow string
+cast and an element-wise join. Polygons take a list array and
+``binary_join``. The float operations are those of
+``convert.points_from_geometry``. The span struct is built from these
+Arrow arrays, and the fingerprint hashes the document's slice of one
+joined Arrow buffer, the byte stream ``_fingerprint`` hashes. Points are
+formatted right after each document's emit, so a batch never holds a big
+document's geometries. On a 6000-line skew doc, with gc off, this took
+19-34% less process time than a 4-tuple per span, with box and with
+polygon geometry (medians of 11, on one thread of a 4-core VM). Smaller
+documents, and the rare one that mixes boxes and polygons, are formatted
+per span (``convert._Emitter.spans``): below about 200-300 spans the bulk
+path's dozen Arrow and numpy calls cost more than they save, and on 120
+generated docs it was 21% slower than per-span formatting.
+``convert.convert_doc`` builds the same 4-tuples for the tests, the
+goldens and ``render_xml``.
 ``tests/test_branch_corpus.py::test_kernel_equals_adapter`` checks the
 two paths against each other, row for row.
 No row-at-a-time Python UDFs anywhere (input_hint constraint); the payload
@@ -88,7 +94,7 @@ import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from t2p_spark.convert import emit_doc, quarantine_reason
+from t2p_spark.convert import emit_doc, points_from_geometry, quarantine_reason
 from t2p_spark.schema import EXTRACTED_SCHEMA
 
 try:  # orjson (Rust) parses ~2x faster than stdlib json, identical dicts;
@@ -285,28 +291,17 @@ def _polygon_points(polygons: list, w: int, h: int) -> pa.Array:
 
 def _texts(geoms: list, tails: pa.Array, w: int, h: int) -> pa.Array:
     """Each span's text: the points string of its tagged geometry, then
-    its tail."""
+    its tail. A document that mixes boxes and polygons is formatted per
+    span by ``points_from_geometry``."""
     tags, data = zip(*geoms)
     if "P" not in tags:  # boxes only: one join
         return _box_points(data, w, h, tails)
     if "B" not in tags:
         points = _polygon_points(data, w, h)
     else:
-        points = _mixed_points(tags, data, w, h)
+        points = pa.array([points_from_geometry(g, w, h) for g in geoms],
+                          pa.string())
     return pc.binary_join_element_wise(points, tails, "")
-
-
-def _mixed_points(tags: tuple, data: tuple, w: int, h: int) -> pa.Array:
-    """The points strings of boxes and polygons, in their order."""
-    is_polygon = np.array(tags) == "P"
-    order = np.argsort(is_polygon, kind="stable")  # boxes, then polygons
-    n_boxes = len(tags) - int(is_polygon.sum())
-    grouped = pa.concat_arrays([
-        _box_points([data[i] for i in order[:n_boxes]], w, h),
-        _polygon_points([data[i] for i in order[n_boxes:]], w, h)])
-    position = np.empty_like(order)
-    position[order] = np.arange(len(order))
-    return grouped.take(pa.array(position))
 
 
 def _span_columns(doc_id: str, emitter, w: int, h: int) -> tuple:
@@ -336,12 +331,30 @@ def _emit(aws, media_ref: str):
         return None, quarantine_reason(exc)
 
 
+# Docs with fewer spans take the per-span path: below this count the fixed
+# cost of the bulk path's Arrow and numpy calls outweighs what it saves.
+_BULK_MIN_SPANS = 256
+
+
+def _flush_small(small: list, columns: list) -> None:
+    """Appends the pending per-span tuples of small docs to ``columns`` as
+    one chunk of Arrow arrays, and empties ``small``."""
+    if small:
+        columns.append(tuple(
+            pa.array(col, f.type)
+            for col, f in zip(zip(*small), _SPANS_ARROW.value_type)))
+        small.clear()
+
+
 def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
-    # columnar span construction: per-doc Arrow columns + list offsets — no
-    # per-span Python tuples. Each doc's points are formatted, and its
-    # fingerprint hashed, right after its emit, so a batch holds only span
-    # strings, never every span's geometry.
+    # columnar span construction: chunks of Arrow columns + list offsets.
+    # A doc of at least _BULK_MIN_SPANS spans has its points formatted, and
+    # its fingerprint hashed, in bulk right after its emit, so the batch
+    # never holds a big doc's geometries. Smaller docs are formatted per
+    # span (``_Emitter.spans``) and gathered into one chunk, as tuples,
+    # until the next big doc or the end of the batch.
     columns: list = []
+    small: list = []
     list_offsets = [0]
     status_col, error_col, nb_col, ns_col, fp_col = [], [], [], [], []
 
@@ -357,8 +370,14 @@ def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
             n_blocks, emitter, error = 0, None, reason
         if emitter is not None and emitter.kinds:
             n_spans = len(emitter.kinds)
-            cols, fp = _span_columns(doc_id, emitter, width, height)
-            columns.append(cols)
+            if n_spans < _BULK_MIN_SPANS:
+                spans = emitter.spans(width, height)
+                fp = _fingerprint(doc_id, spans)
+                small.extend(spans)
+            else:
+                _flush_small(small, columns)
+                cols, fp = _span_columns(doc_id, emitter, width, height)
+                columns.append(cols)
         else:
             fp = _fingerprint(doc_id, ())
         emitter = None  # free its geometries before the next doc parses
@@ -368,6 +387,7 @@ def _convert_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         nb_col.append(n_blocks)
         ns_col.append(n_spans)
         fp_col.append(fp)
+    _flush_small(small, columns)
 
     span_type = _SPANS_ARROW.value_type
     span_struct = pa.StructArray.from_arrays(

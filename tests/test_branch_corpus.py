@@ -10,6 +10,7 @@ the 120-doc synth corpus — regenerate it with
 import gc
 import importlib.util
 import inspect
+import itertools
 import json
 import os
 import sys
@@ -102,11 +103,13 @@ def _kernel_batch(rows):
         names=["doc_id", "width", "height", "media_ref", "json_text"])
 
 
-def test_kernel_equals_adapter(golden_tool, synth_rows):
+def test_kernel_equals_adapter(golden_tool, synth_rows, monkeypatch):
     """The Arrow kernel and ``convert_doc_safe`` agree row for row over
     the convert corpus, a 2000-line skew doc and three decode quarantines,
     as one batch and as batches of 7: status, full error text, spans and
-    n_blocks, and span_fp is ``_fingerprint`` of the adapter's spans."""
+    n_blocks, and span_fp is ``_fingerprint`` of the adapter's spans.
+    Run again with every doc on the bulk path, which otherwise takes only
+    docs of ``_BULK_MIN_SPANS`` or more spans."""
     from t2p_spark import kernel
     from t2p_spark.convert import convert_doc_safe
     from t2p_spark.synth import generate_skew_doc
@@ -130,7 +133,9 @@ def test_kernel_equals_adapter(golden_tool, synth_rows):
         rows.append(row)
         want.append(("quarantined", reason, [], 0))
 
-    for size in (len(rows), 7):
+    for bulk_min, size in itertools.product((kernel._BULK_MIN_SPANS, 0),
+                                            (len(rows), 7)):
+        monkeypatch.setattr(kernel, "_BULK_MIN_SPANS", bulk_min)
         got = []
         for i in range(0, len(rows), size):
             got += kernel._convert_batch(

@@ -10,7 +10,7 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from t2p_spark import synth
-from t2p_spark.checkpoint import run_extract_job
+from t2p_spark.checkpoint import _listed_on_driver, run_extract_job
 from t2p_spark.fixtures import doc_row, fixture_doc_rows
 from t2p_spark.schema import DOCS_SCHEMA
 from tests.conftest import needs_reference
@@ -137,6 +137,11 @@ def test_extract_job_lists_buckets_on_the_driver(spark, tmp_path):
     assert listing.getCount() == before
     assert len(glob.glob(os.path.join(out, "bucket=*"))) > 32
     assert sum(r["n_docs"] for r in metrics.collect()) == 120
+    assert spark.conf.get(key) == "33"
+
+    # above the largest timed bucket count, the threshold rises no further
+    with _listed_on_driver(spark, 1000):
+        assert spark.conf.get(key) == "64"
     assert spark.conf.get(key) == "33"
 
     spark.conf.unset(key)
